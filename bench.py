@@ -40,6 +40,9 @@ CANARY_BASE_SF01 = {
     "pricing_summary": 0.359,
     "triangle_count": 3.035,
 }
+# Core count the base times were recorded at; also the $SPARK_GRAFT_CPUS
+# default, so an unset variable reads as "at the base's scale".
+CANARY_BASE_CPUS = 32
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -112,6 +115,7 @@ def main(argv: list[str]) -> int:
         vals = [c[n] / CANARY_BASE_SF01[n] for n in c if n in CANARY_BASE_SF01]
         return _median(vals) if vals else None
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", CANARY_BASE_CPUS))
     canaries_apply = abs(_sf_from_dir(sf_dir) - 0.1) < 1e-9
     canary_pre = run_canaries("pre") if canaries_apply else {}
     # Degraded-box guard (r13 verdict item 2): BENCH_r13 started on a box
@@ -121,7 +125,7 @@ def main(argv: list[str]) -> int:
     # bench, a GC storm) often clears; a genuinely slow box stays slow and
     # the artifact records both readings so the reader can adjudicate.
     # Arm the retry only at the canary base's own core count: the base
-    # times were recorded at 32 cores, so at a lower $SPARK_GRAFT_CPUS a
+    # times were recorded at CANARY_BASE_CPUS, so at a lower $SPARK_GRAFT_CPUS a
     # factor > 1.5 is parallelism, not degradation, and sleeping would
     # just slow the driver's scaling run (the factor itself is still
     # recorded for the reader at any core count).
@@ -130,7 +134,7 @@ def main(argv: list[str]) -> int:
     if (
         pre_f0 is not None
         and pre_f0 > 1.5
-        and int(os.environ.get("SPARK_GRAFT_CPUS", "32")) >= 32
+        and cpus >= CANARY_BASE_CPUS
     ):
         _log(
             f"WARNING: degraded box — canary_factor_pre {pre_f0:.3f} > 1.5;"
@@ -205,7 +209,7 @@ def main(argv: list[str]) -> int:
         "queries": timings,
         "sf": _sf_from_dir(sf_dir),
         "n_queries": len(timings),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus,
     }
     if canary_pre and canary_post:
         # Honest estimator (r12 verdict): min(pre, post) understates a

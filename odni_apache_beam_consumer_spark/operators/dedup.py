@@ -37,6 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.catalog import spread
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens, word_shingles
 
@@ -153,13 +154,13 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
+    caches: Caches,
     shingle_words: int = 3,
     num_hashes: int = 12,
     rows_per_band: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """End-to-end MinHash/LSH near-duplicate candidate pairs.
 
@@ -168,17 +169,13 @@ def minhash_lsh_pairs(
     join sides read the cache — without it the executed plan duplicates
     the entire upstream subtree per side.
 
-    ``cache_registry``: Dataset-level persists register in Spark's
-    CacheManager with strong references and never drain via GC; a caller
-    that fully materializes the result (eager checkpoint / write) should
-    pass a list here and unpersist everything appended to it afterwards."""
+    ``caches`` owns that persist: the caller releases it once the result
+    is consumed (``caches.result(...)`` or a ``with`` block)."""
     sh = shingle_table(df, shingle_words, id_col, text_col)
     mh = minhash_signatures(sh, num_hashes, id_col)
-    bands = lsh_band_signatures(mh, rows_per_band, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    bands = caches.persist(
+        lsh_band_signatures(mh, rows_per_band, id_col), StorageLevel.MEMORY_AND_DISK
     )
-    if cache_registry is not None:
-        cache_registry.append(bands)
     return lsh_candidate_pairs(bands, id_col, max_bucket=max_bucket)
 
 
@@ -248,16 +245,16 @@ def simhash_signatures(
 
 def simhash_pairs(
     df: DataFrame,
+    caches: Caches,
     max_hamming: int = 8,
     n_blocks: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block candidates (pigeonhole on
     ``n_blocks`` 16-bit blocks) then exact Hamming distance filter.
-    ``cache_registry``: see ``minhash_lsh_pairs``.
+    ``caches``: see ``minhash_lsh_pairs``.
 
     The signature table (one short row per doc) is persisted: both
     self-join sides derive their blocks from the single cached
@@ -272,9 +269,9 @@ def simhash_pairs(
     (signature multiplicity weighted in), so the guard's semantics are
     unchanged.
     """
-    sig = simhash_signatures(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(sig)
+    sig = caches.persist(
+        simhash_signatures(df, id_col, text_col), StorageLevel.MEMORY_AND_DISK
+    )
     usig = sig.groupBy("simhash").agg(F.count(F.lit(1)).alias("ndocs"))
     block_len = 64 // n_blocks
     blocks = usig.select(
@@ -340,16 +337,15 @@ def simhash_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
+    caches: Caches,
     shingle_words: int = 5,
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_doc_freq: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over word n-grams, for pairs sharing >= 1
-    (non-boilerplate) shingle.  ``cache_registry``: see
-    ``minhash_lsh_pairs``.
+    (non-boilerplate) shingle.  ``caches``: see ``minhash_lsh_pairs``.
 
     Inverted-index join: |A∩B| comes from grouping the shingle table with
     itself, so cost is sum over shingles of (docs-per-shingle)^2.
@@ -360,11 +356,9 @@ def ngram_jaccard_pairs(
     The shingle table is persisted: it feeds the sizes aggregate and both
     self-join sides, and would otherwise be recomputed three times.
     """
-    sh = shingle_table(df, shingle_words, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh = caches.persist(
+        shingle_table(df, shingle_words, id_col, text_col), StorageLevel.MEMORY_AND_DISK
     )
-    if cache_registry is not None:
-        cache_registry.append(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
     joinable = sh
     if max_doc_freq is not None:
@@ -620,11 +614,11 @@ def cross_corpus_lsh_pairs(
 
 def jaccard_prefix_filter_pairs(
     df: DataFrame,
+    caches: Caches,
     shingle_words: int = 5,
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact Jaccard >= threshold pairs via PREFIX FILTERING (the
     SSJoin/All-Pairs/PPJoin family — Chaudhuri et al. ICDE'06, Bayardo
@@ -650,7 +644,7 @@ def jaccard_prefix_filter_pairs(
     for t >= 0.5 unless a doc is mostly boilerplate), inverting the
     inverted-index join's worst case.  The shingle table is persisted —
     four consumers (df ranks, prefix build, both verify sides); verify
-    joins touch only candidate pairs.  ``cache_registry``: see
+    joins touch only candidate pairs.  ``caches``: see
     minhash_lsh_pairs.
 
     r14 (profiled at sf0.1 — warm stage split: pref 1.8 s, cand 3.5 s of
@@ -672,11 +666,9 @@ def jaccard_prefix_filter_pairs(
       collision pair — the output is bit-identical either way, which
       the brute-force oracle proves on every driver run.
     """
-    sh = shingle_table(df, shingle_words, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh = caches.persist(
+        shingle_table(df, shingle_words, id_col, text_col), StorageLevel.MEMORY_AND_DISK
     )
-    if cache_registry is not None:
-        cache_registry.append(sh)
     # All threshold arithmetic is INTEGER (parts-per-million): a float
     # F.ceil(t * nsh) can round the product up for thresholds that are
     # not dyadic (0.8 * 5 == 4.0000000000000002, ceil -> 5), shortening
@@ -688,7 +680,7 @@ def jaccard_prefix_filter_pairs(
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     w = Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("shingle"))
     wu = Window.partitionBy(id_col)
-    pref = (
+    pref = caches.persist(
         sh.join(dfreq, "shingle")
         .withColumn("_rk", F.row_number().over(w))
         .withColumn("_nsh", F.count(F.lit(1)).over(wu))
@@ -700,11 +692,9 @@ def jaccard_prefix_filter_pairs(
             )
             + 1
         )
-        .select(F.col(id_col), F.xxhash64("shingle").alias("_k"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(F.col(id_col), F.xxhash64("shingle").alias("_k")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    if cache_registry is not None:
-        cache_registry.append(pref)
     # The candidate pair set is PERSISTED: three consumers read it (the
     # doc-id projection for the semi-join reduction below feeds two
     # verify branches, plus the intersection join itself), and without
@@ -712,16 +702,14 @@ def jaccard_prefix_filter_pairs(
     # — df ranks, prefix window, prefix self-join — tripling the
     # corpus-sized shuffle volume (measured: the unpersisted form
     # exhausted 78 GB of shuffle disk at 300x before finishing).
-    cand = (
+    cand = caches.persist(
         pref.select(F.col(id_col).alias("_a"), "_k")
         .join(pref.select(F.col(id_col).alias("_b"), "_k"), "_k")
         .where(F.col("_a") < F.col("_b"))
         .select("_a", "_b")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    if cache_registry is not None:
-        cache_registry.append(cand)
     # Semi-join reduction before verification: only CANDIDATE documents'
     # shingles participate in the intersection join, so the two verify
     # joins shuffle a candidate-bounded slice instead of the full corpus

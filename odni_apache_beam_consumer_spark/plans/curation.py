@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.operators import dedup as D
 from odni_apache_beam_consumer_spark.operators.similarity import dot, with_vec
@@ -579,23 +580,15 @@ def similar_docs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized.  At 100 TB the df cap IS the cost bound: pairs are
     O(sum over kept shingles of df^2), independent of corpus size for
     fixed cap."""
-    out, cached = _similar_docs_topk_lazy(spark, sf_dir)
     # Eagerly checkpoint the top-3 table (<= 3 rows/doc — far smaller
     # than the corpus) and release every cache (the pair set plus the
-    # operator-internal shingle table) before returning: Dataset persists
-    # live in the CacheManager with strong references and never drain via
-    # GC, so direct library callers would otherwise pin them forever
-    # (the ml.py iterative-driver pattern).
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+    # operator-internal shingle table) before returning.
+    with Caches() as caches:
+        return caches.result(_similar_docs_topk_lazy(spark, sf_dir, caches))
 
 
-def _similar_docs_topk_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Build the lazy top-3 plan; returns (plan, persisted frames).
+def _similar_docs_topk_lazy(spark: SparkSession, sf_dir: str, caches: Caches) -> DataFrame:
+    """Build the lazy top-3 plan; its persists register in ``caches``.
 
     Split out so plan-shape tests can assert the WindowGroupLimit pushdown
     and that both symmetrize branches read the cached pairs — the public
@@ -605,15 +598,15 @@ def _similar_docs_topk_lazy(
     # below it is already cached inside ngram_jaccard_pairs, but that
     # does not cover the pair-generation stages).  Pair sets are df-cap-
     # bounded, so the cache is small at any corpus size.
-    cached: list[DataFrame] = []
-    pairs = D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        shingle_words=5,
-        threshold=0.0,
-        max_doc_freq=10,
-        cache_registry=cached,
-    ).persist()
-    cached.append(pairs)
+    pairs = caches.persist(
+        D.ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"),
+            caches,
+            shingle_words=5,
+            threshold=0.0,
+            max_doc_freq=10,
+        )
+    )
     sym = pairs.select(
         F.col("doc_a").alias("query_doc"),
         F.col("doc_b").alias("neighbor"),
@@ -631,7 +624,7 @@ def _similar_docs_topk_lazy(
         .where(F.col("rnk") <= 3)
         .select("query_doc", "neighbor", "jaccard", "rnk")
     )
-    return out, cached
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -825,7 +818,7 @@ def jaccard_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odni_apache_beam_consumer_spark.plans.llm import dedup_corpus
 
     return D.jaccard_prefix_filter_pairs(
-        dedup_corpus(spark, sf_dir), shingle_words=5, threshold=0.5
+        dedup_corpus(spark, sf_dir), Caches(), shingle_words=5, threshold=0.5
     )
 
 
@@ -1261,9 +1254,7 @@ w{t + 1} AS (
 _DRO_STEP_BLOCK = ",\n".join(_doremi_step_ctes(t) for t in range(_DRO_SHARDS))
 
 
-def _doremi_loss_frames(
-    spark: SparkSession, sf_dir: str, cache_registry: list | None = None
-):
+def _doremi_loss_frames(spark: SparkSession, sf_dir: str, caches: Caches):
     """Build the corpus-sized half of the DoReMi query: the per-(domain,
     shard) average unigram milli-NLL table, the domain list, and the
     unseen-token fallback NLL column.  Kept as a separate un-checkpointed
@@ -1274,17 +1265,17 @@ def _doremi_loss_frames(
     The exploded token stream has THREE consumers (the (v, n) scalar
     pass, the vocab count behind the model, and the scoring join), so it
     is persisted — without this each consumer re-runs scan + tokenize +
-    explode (r13 optimization; the minhash/prefix-filter
-    ``cache_registry`` discipline).  Callers that materialize their
-    result pass ``cache_registry`` and unpersist."""
+    explode (r13 optimization).  The persist registers in ``caches``,
+    which the caller releases once it has materialized its result."""
     docs = with_tokens(spread(load_table(spark, sf_dir, "documents")))
-    tok = docs.select(
-        (F.col("doc_id") % _DRO_SHARDS).alias("shard"),
-        "lang",
-        F.explode("tk").alias("term"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(tok)
+    tok = caches.persist(
+        docs.select(
+            (F.col("doc_id") % _DRO_SHARDS).alias("shard"),
+            "lang",
+            F.explode("tk").alias("term"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
     row = tok.agg(
         (F.countDistinct("term") + 1).cast("long").alias("v"),
@@ -1430,14 +1421,12 @@ def doremi_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: /root/reference/main.py has no curation surface;
     north-star row per SURVEY.md §2.2 (LLM-pipeline ops).
     """
-    caches: list = []
-    loss, domains, fb = _doremi_loss_frames(spark, sf_dir, caches)
-    # (domains x shards)- and domains-sized; checkpoint so the MW steps
-    # below never re-trigger the corpus scan.
-    loss = loss.localCheckpoint(eager=True)
-    domains = domains.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
+    with Caches() as caches:
+        loss, domains, fb = _doremi_loss_frames(spark, sf_dir, caches)
+        # (domains x shards)- and domains-sized; checkpoint so the MW steps
+        # below never re-trigger the corpus scan.
+        loss = loss.localCheckpoint(eager=True)
+        domains = caches.result(domains)
 
     # The MW trajectory runs on the PIVOTED domains-sized frame with
     # whole-frame window aggregates instead of the former per-step

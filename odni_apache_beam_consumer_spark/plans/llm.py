@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.catalog import load_table
 from odni_apache_beam_consumer_spark.operators import dedup as D
 from odni_apache_beam_consumer_spark.operators import multimodal as M
@@ -131,19 +132,13 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
 """,
 )
-def dedup_minhash(
-    spark: SparkSession, sf_dir: str, cache_registry: list | None = None
-) -> DataFrame:
+def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-duplicate candidate pairs (3-word shingles,
     12 hashes, 4 bands x 3 rows). See operators/dedup.py for the shuffle
     shape; the band self-join key includes the full band signature so
     buckets stay tiny and skew-safe."""
     return D.minhash_lsh_pairs(
-        dedup_corpus(spark, sf_dir),
-        shingle_words=3,
-        num_hashes=12,
-        rows_per_band=3,
-        cache_registry=cache_registry,
+        dedup_corpus(spark, sf_dir), Caches(), shingle_words=3, num_hashes=12, rows_per_band=3
     )
 
 
@@ -184,17 +179,10 @@ WHERE list_sum(list_transform(range(1, 65),
       i -> CASE WHEN sig_a[i:i] = sig_b[i:i] THEN 0 ELSE 1 END)) <= 8
 """,
 )
-def dedup_simhash(
-    spark: SparkSession, sf_dir: str, cache_registry: list | None = None
-) -> DataFrame:
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 64-bit signatures, 4x16-bit block candidate
     generation (pigeonhole), exact Hamming <= 8 filter."""
-    return D.simhash_pairs(
-        dedup_corpus(spark, sf_dir),
-        max_hamming=8,
-        n_blocks=4,
-        cache_registry=cache_registry,
-    )
+    return D.simhash_pairs(dedup_corpus(spark, sf_dir), Caches(), max_hamming=8, n_blocks=4)
 
 
 @query(
@@ -223,7 +211,9 @@ WHERE CAST(c * 1000000 // (sa.nsh + sb.nsh - c) AS BIGINT) / 1000000.0 >= 0.5
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-5-gram Jaccard >= 0.5 via inverted-index self-join."""
-    return D.ngram_jaccard_pairs(dedup_corpus(spark, sf_dir), shingle_words=5, threshold=0.5)
+    return D.ngram_jaccard_pairs(
+        dedup_corpus(spark, sf_dir), Caches(), shingle_words=5, threshold=0.5
+    )
 
 
 @query(
@@ -259,7 +249,7 @@ def dedup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the guard that keeps one hot header shingle from generating O(m^2)
     pairs at 100 TB."""
     return D.ngram_jaccard_pairs(
-        dedup_corpus(spark, sf_dir), shingle_words=5, threshold=0.5, max_doc_freq=2
+        dedup_corpus(spark, sf_dir), Caches(), shingle_words=5, threshold=0.5, max_doc_freq=2
     )
 
 
@@ -391,7 +381,7 @@ def dedup_resolve_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicality properties are additionally asserted in
     tests/test_operators.py."""
     corpus = dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(corpus, shingle_words=3, num_hashes=12, rows_per_band=3)
+    pairs = D.minhash_lsh_pairs(corpus, Caches(), shingle_words=3, num_hashes=12, rows_per_band=3)
     return D.resolve_duplicates(corpus, pairs)
 
 
@@ -452,7 +442,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     never grows beyond the input, localCheckpoint per round truncates
     lineage."""
     corpus = dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(corpus, shingle_words=3, num_hashes=12, rows_per_band=3)
+    pairs = D.minhash_lsh_pairs(corpus, Caches(), shingle_words=3, num_hashes=12, rows_per_band=3)
     return D.connected_components_star(pairs)
 
 
@@ -1976,23 +1966,21 @@ FROM (
 """
 
 
-def _method_comparison_lazy(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Build the lazy comparison plan; returns (plan, persisted inputs).
+def _method_comparison_lazy(spark: SparkSession, sf_dir: str, caches: Caches) -> DataFrame:
+    """Build the lazy comparison plan; its persists register in ``caches``.
 
     Split out so the plan-shape test can assert both consumers of each
     member pair set read the persisted materialization — the public query
     eagerly checkpoints its 3-row result and releases the caches, which
-    hides the InMemoryTableScans from the returned plan."""
-    cached: list[DataFrame] = []
-    mh = dedup_minhash(spark, sf_dir, cache_registry=cached).select(
-        "doc_a", "doc_b"
-    ).persist()
-    sh = dedup_simhash(spark, sf_dir, cache_registry=cached).select(
-        "doc_a", "doc_b"
-    ).persist()
-    cached += [mh, sh]
+    hides the InMemoryTableScans from the returned plan.  The members are
+    dedup_minhash's and dedup_simhash's operator calls, so the operators'
+    own persists land in ``caches`` too."""
+    mh = D.minhash_lsh_pairs(
+        dedup_corpus(spark, sf_dir), caches, shingle_words=3, num_hashes=12, rows_per_band=3
+    )
+    sh = D.simhash_pairs(dedup_corpus(spark, sf_dir), caches, max_hamming=8, n_blocks=4)
+    mh = caches.persist(mh.select("doc_a", "doc_b"))
+    sh = caches.persist(sh.select("doc_a", "doc_b"))
     both = mh.intersect(sh)
 
     def counted(df: DataFrame, name: str) -> DataFrame:
@@ -2005,7 +1993,7 @@ def _method_comparison_lazy(
         .unionByName(counted(sh, "simhash"))
         .unionByName(counted(both, "both"))
     )
-    return out, cached
+    return out
 
 
 @query("dedup_method_comparison", oracle="__DEFERRED2__")
@@ -2014,8 +2002,8 @@ def dedup_method_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the size of their agreement set — the summary a curation team
     reads before choosing thresholds (a method whose count dwarfs the
     agreement set is over-firing; one far below it is under-recalling).
-    Composes the driver-verified member queries verbatim on both sides;
-    output is 3 rows.
+    Composes the driver-verified member operators, with the member
+    queries' parameters, on both sides; output is 3 rows.
 
     Each member pair set feeds TWO consumers (its own count and the
     intersect), so both are persisted — without this the full minhash and
@@ -2025,11 +2013,8 @@ def dedup_method_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct library callers don't accumulate cached RDDs across
     invocations (the ml.py iterative-driver pattern; previously only
     bench.py's clearCache saved this)."""
-    out, cached = _method_comparison_lazy(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+    with Caches() as caches:
+        return caches.result(_method_comparison_lazy(spark, sf_dir, caches))
 
 
 from odni_apache_beam_consumer_spark.plans.registry import ORACLES as _OR2  # noqa: E402
@@ -2154,20 +2139,16 @@ def lsh_band_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both odd by construction: +1000000 preserves parity), so truth
     # pairs survive sampling intact.
     corpus = dedup_corpus(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
-    caches: list = []
-    mh = D.minhash_signatures(D.shingle_table(corpus, 3), 12).persist(
-        StorageLevel.MEMORY_AND_DISK
+    caches = Caches()
+    mh = caches.persist(
+        D.minhash_signatures(D.shingle_table(corpus, 3), 12), StorageLevel.MEMORY_AND_DISK
     )
-    caches.append(mh)
-    truth = (
-        D.jaccard_prefix_filter_pairs(
-            corpus, shingle_words=3, threshold=0.5, cache_registry=caches
-        )
+    truth = caches.persist(
+        D.jaccard_prefix_filter_pairs(corpus, caches, shingle_words=3, threshold=0.5)
         .select("doc_a", "doc_b")
-        .withColumn("_t", F.lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("_t", F.lit(1)),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    caches.append(truth)
     tot = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_total"))
     # ALL configs in ONE pass: tag each config's band rows with r and
     # self-join once on (r, band, sig) — 4 separate config joins cost 4
@@ -2213,11 +2194,8 @@ def lsh_band_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "AS BIGINT) END"
             ).alias("recall_ppm"),
         )
-        .localCheckpoint(eager=True)
     )
-    for c in caches:
-        c.unpersist()
-    return res
+    return caches.result(res)
 
 
 @query(

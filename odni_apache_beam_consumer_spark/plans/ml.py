@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.operators.kmeans_kernel import (
     assign_stats_kernel,
@@ -394,15 +395,16 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-step plan looped under localCheckpoint; the symmetric graph has
     no dangling nodes, so no dangling-mass term.  3 rounds = 3 keyed
     exchanges over the edge list, each lineage-truncated."""
-    e0 = copurchase_edges(spark, sf_dir).persist()
-    e = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    caches = Caches()
+    e0 = caches.persist(copurchase_edges(spark, sf_dir))
+    e = caches.persist(
+        e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
     # Loop-invariant hoist (guide §2.4): the degree-annotated edge list
     # e ⋈ deg never changes between rounds — persist it once instead of
     # re-running the degree aggregation + join inside every round.
-    edeg = e.join(deg, "u").persist()
+    edeg = caches.persist(e.join(deg, "u"))
     nv = deg.count()
     ranks = deg.select(
         F.col("u").alias("node"),
@@ -433,8 +435,7 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_in_edges",
         ).localCheckpoint(eager=True)
         ranks = out.select("node", F.col("rank_nano").alias("rank_n"))
-    for cached in (e0, e, edeg):
-        cached.unpersist()
+    caches.release()
     return out
 
 
@@ -470,17 +471,17 @@ def pagerank(
     lost mass is re-spread uniformly each round, keeping sum(rank) = 1 —
     the standard power-iteration fix, computed as a 1-row aggregate."""
     spark = edges.sparkSession
-    e = edges.select("u", "v").persist()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")).persist()
+    caches = Caches()
+    e = caches.persist(edges.select("u", "v"))
+    deg = caches.persist(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")))
     # Loop-invariant hoist (guide §2.4, the pagerank_rounds r13 change
     # propagated to the library driver): e ⋈ deg never changes between
     # rounds — persist it once instead of re-joining every round.
-    edeg = e.join(deg, "u").persist()
-    nodes = (
+    edeg = caches.persist(e.join(deg, "u"))
+    nodes = caches.persist(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .persist()
     )
     nv = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / nv).alias("rank")).localCheckpoint()
@@ -522,8 +523,7 @@ def pagerank(
                 break
         else:
             ranks = new_ranks
-    for cached in (e, deg, edeg, nodes):
-        cached.unpersist()
+    caches.release()
     return ranks
 
 
@@ -547,7 +547,8 @@ def kmeans(
     (64·k groups — constant-sized exchange at any corpus size).
     ``localCheckpoint`` truncates the per-round lineage; convergence is
     the max centroid L2 movement, one k-row aggregate per round."""
-    v = with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec").persist()
+    caches = Caches()
+    v = caches.persist(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
     cents = (
         v.where(F.col("vid") % centroid_every == 0)
         .select(F.col("vid").alias("cid"), F.col("vec").alias("cvec"))
@@ -602,7 +603,7 @@ def kmeans(
         else:
             out = new_cents
             cents = new_cents.select("cid", "cvec")
-    v.unpersist()
+    caches.release()
     return out
 
 
@@ -662,9 +663,9 @@ def kmeans_lloyd_rounds(
     # thousands of row groups and spread() is a no-op.  The repartition
     # cannot shift results: assignment is per-row and the centroid
     # rebuild sums exact FLOOR integers (order-independent).
-    v = (
+    caches = Caches()
+    v = caches.persist(
         spread(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
-        .persist()
     )
     # r14 (guide §4.2): the per-round argmin + integer-stat pass runs as
     # ONE numpy mapInArrow kernel instead of the interpreted Catalyst
@@ -722,12 +723,9 @@ def kmeans_lloyd_rounds(
                 ]
                 for _, r in rows
             ]
-    # r14 (guide §5): the final round's stats are k rows — materialize
-    # them eagerly BEFORE releasing the vector cache; the old lazy form
-    # re-ran the assignment kernel + aggregation in the returned plan
-    # after the unpersist (one full extra pass of the dominant stage).
-    stats = stats.localCheckpoint(eager=True)
-    v.unpersist()
+    # r14 (guide §5): the final round's stats are k rows — checkpoint
+    # them so the returned plan never re-runs the assignment kernel.
+    stats = caches.result(stats)
     return stats.select(
         "cid",
         "n_members",
@@ -836,10 +834,11 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
     consumes it twice) — when the caller passes an expensive subtree
     (the co-purchase self-join), skipping that persist re-runs it for
     both union branches."""
-    edges = edges.persist()
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    caches = Caches()
+    edges = caches.persist(edges)
+    sym = caches.persist(
+        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     labels = sym.select("u").distinct().select(
         F.col("u").alias("vertex"), F.col("u").alias("label")
     )
@@ -861,8 +860,7 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
             # RDDs until someone runs a global clearCache.
             .localCheckpoint(eager=(i == n_rounds - 1))
         )
-    edges.unpersist()
-    sym.unpersist()
+    caches.release()
     return labels
 
 
@@ -927,10 +925,10 @@ def kcore(edges: DataFrame, k: int = 3, n_rounds: int | None = None) -> DataFram
     depth (typically small); at 100 TB each round's edge filter is the
     dominant cost and shrinks monotonically."""
     spark = edges.sparkSession
-    sym0 = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    sym = sym0
+    caches = Caches()
+    sym = caches.persist(
+        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     rounds = 0
     while True:
         deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
@@ -939,17 +937,11 @@ def kcore(edges: DataFrame, k: int = 3, n_rounds: int | None = None) -> DataFram
         rounds += 1
         done_rounds = n_rounds is not None and rounds >= n_rounds
         if done_rounds or (n_rounds is None and peeled.count() == 0):
-            # Materialize the result eagerly so the persisted symmetric
-            # edge list can be released before returning — direct library
-            # callers (not just bench.py with its clearCache) must not
-            # accumulate cached RDDs across repeated calls.
-            out = (
-                deg.where(F.col("d") >= k)
-                .select(F.col("u").alias("vertex"), F.col("d").alias("degree"))
-                .localCheckpoint(eager=True)
+            return caches.result(
+                deg.where(F.col("d") >= k).select(
+                    F.col("u").alias("vertex"), F.col("d").alias("degree")
+                )
             )
-            sym0.unpersist()
-            return out
         sym = (
             sym.join(survivors, "u")
             .join(survivors.select(F.col("u").alias("v")), "v")
@@ -1375,7 +1367,8 @@ def logreg_gd_rounds(
     DataFrame — separated from the fixture loader so tests can replay it
     on synthetic corpora against the plain-Python reference
     (tests/test_ml_loops.py::py_logreg_gd)."""
-    rows = rows.persist()
+    caches = Caches()
+    rows = caches.persist(rows)
     k = dim + 1
     w = [0.0] * k
     for _ in range(n_rounds - 1):
@@ -1388,15 +1381,14 @@ def logreg_gd_rounds(
             w[j] - _LR_STEP * (float(rec[f"g{j}"]) / (float(n) * float(_LR_SCALE)))
             for j in range(k)
         ]
-    # r14 (guide §5): the final-round gradient is 1 row — materialize it
-    # eagerly BEFORE releasing the feature cache; the old lazy form
-    # re-ran the whole feature pipeline in the returned plan after the
-    # unpersist (the kcore/label_propagation final-round discipline).
-    g_final = rows.agg(
-        *_logreg_grad_cols(w, dim=dim),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    ).localCheckpoint(eager=True)
-    rows.unpersist()
+    # r14 (guide §5): the final-round gradient is 1 row — checkpoint it
+    # so the returned plan never re-runs the feature pipeline.
+    g_final = caches.result(
+        rows.agg(
+            *_logreg_grad_cols(w, dim=dim),
+            F.count(F.lit(1)).cast("long").alias("n"),
+        )
+    )
     per_pos = g_final.select(
         F.inline(
             F.array(

@@ -1180,11 +1180,11 @@ def unigram_train_rounds(
     # their already-materialized filtered table as ``w8`` — previously
     # each built its own copy from the unpersisted word count, so the
     # corpus scan + word-count exchange executed twice per query.  The
-    # filter is idempotent, so passing a pre-filtered table is identical.
-    if w8 is None:
-        w8 = words.where(F.length("w").between(2, max_wlen)).localCheckpoint(
-            eager=True
-        )
+    # filter is idempotent and re-applied to a passed ``w8`` (it fuses
+    # into the downstream scans, no extra job), so a caller's table that
+    # was filtered differently, or not at all, cannot change the model.
+    keep = F.length("w").between(2, max_wlen)
+    w8 = words.where(keep).localCheckpoint(eager=True) if w8 is None else w8.where(keep)
     occ = (
         w8
         .select(

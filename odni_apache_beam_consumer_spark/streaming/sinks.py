@@ -24,6 +24,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from odni_apache_beam_consumer_spark.caches import Caches
+
 
 def _trigger(writer, available_now: bool):
     return writer.trigger(availableNow=True) if available_now else writer
@@ -129,11 +131,9 @@ def fan_out_sink(*sinks: Callable[[DataFrame, int], None]) -> Callable[[DataFram
     without a cross-store transaction."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
+        with Caches() as caches:
+            caches.persist(batch)
             for s in sinks:
                 s(batch, batch_id)
-        finally:
-            batch.unpersist()
 
     return fn

@@ -1,0 +1,117 @@
+"""The cache owner (odni_apache_beam_consumer_spark/caches.py): results are
+checkpointed before their inputs are freed, every registered frame is
+freed, and no module outside caches.py frees caches by hand."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+import pytest
+
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
+from odni_apache_beam_consumer_spark.caches import Caches
+from odni_apache_beam_consumer_spark.operators import dedup as D
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "odni_apache_beam_consumer_spark",
+)
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_result_checkpoints_then_releases_everything(spark):
+    base = _persisted_ids(spark)
+    caches = Caches()
+    a = caches.persist(spark.range(100).withColumn("k", F.col("id") % 7))
+    b = caches.persist(a.groupBy("k").count(), StorageLevel.MEMORY_AND_DISK)
+    lazy = b.where("k > 0")
+    lazy.count()
+    cached = _persisted_ids(spark) - base
+    assert len(cached) == 2
+    assert "InMemoryRelation" in lazy._jdf.queryExecution().optimizedPlan().toString()
+
+    out = caches.result(lazy)
+
+    assert "InMemoryRelation" not in out._jdf.queryExecution().analyzed().toString()
+    assert "InMemoryRelation" not in out._jdf.queryExecution().optimizedPlan().toString()
+    left = _persisted_ids(spark) - base
+    # Only the checkpoint's own block survives; both caches are gone.
+    assert len(left) == 1 and not (left & cached), (cached, left)
+    assert sorted(r["k"] for r in out.collect()) == list(range(1, 7))
+
+
+def test_release_frees_every_registered_frame(spark):
+    base = _persisted_ids(spark)
+    caches = Caches()
+    for i in range(3):
+        caches.persist(spark.range(10 + i)).count()
+    assert len(_persisted_ids(spark) - base) == 3
+    caches.release()
+    assert _persisted_ids(spark) - base == set()
+    caches.release()  # idempotent: nothing left to free
+
+
+def test_with_block_releases_on_exception(spark):
+    base = _persisted_ids(spark)
+    with pytest.raises(RuntimeError, match="boom"):
+        with Caches() as caches:
+            caches.persist(spark.range(10)).count()
+            assert len(_persisted_ids(spark) - base) == 1
+            raise RuntimeError("boom")
+    assert _persisted_ids(spark) - base == set()
+
+
+def test_prefix_filter_pairs_leave_no_cache_behind(spark):
+    """jaccard_prefix_filter_pairs persists its shingle, prefix and
+    candidate tables; consumed inside the owner's block, all three are
+    freed on exit."""
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "quick brown fox jumps over the lazy dog"),
+            (3, "an entirely different sentence about nothing much"),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    base = _persisted_ids(spark)
+    with Caches() as caches:
+        pairs = D.jaccard_prefix_filter_pairs(corpus, caches, shingle_words=2)
+        got = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+        assert len(_persisted_ids(spark) - base) == 3
+    assert got == [(1, 2)]
+    assert _persisted_ids(spark) - base == set()
+
+
+def _hand_rolled_releases(path: str) -> list[str]:
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "unpersist"
+        ):
+            found.append(f"{path}:{node.lineno}: .unpersist(")
+        elif isinstance(node, ast.arg) and node.arg == "cache_registry":
+            found.append(f"{path}:{node.lineno}: cache_registry parameter")
+    return found
+
+
+def test_only_the_cache_owner_releases_caches():
+    """No ``.unpersist(`` call and no ``cache_registry`` parameter outside
+    caches.py: persisted frames register with a ``Caches`` owner, which
+    is the one place that frees them."""
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            if name.endswith(".py") and path != os.path.join(PKG, "caches.py"):
+                offenders += _hand_rolled_releases(path)
+    assert not offenders, offenders

@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.operators import dedup as D
 from odni_apache_beam_consumer_spark.operators import multimodal as M
 from odni_apache_beam_consumer_spark.operators import similarity as S
@@ -29,12 +30,15 @@ def _boilerplate_corpus(spark, n_docs: int = 30):
 
 def test_jaccard_doc_freq_cap_bounds_pairs(spark):
     corpus = _boilerplate_corpus(spark)
-    # Uncapped: the hot header shingles pair every doc with every other.
-    uncapped = D.ngram_jaccard_pairs(corpus, shingle_words=5, threshold=0.0)
-    # Capped at df<=2: boilerplate shingles (df=30) drop out of candidate
-    # generation; unique-tail shingles pair nothing.
-    capped = D.ngram_jaccard_pairs(corpus, shingle_words=5, threshold=0.0, max_doc_freq=2)
-    n_un, n_cap = uncapped.count(), capped.count()
+    with Caches() as caches:
+        # Uncapped: the hot header shingles pair every doc with every other.
+        uncapped = D.ngram_jaccard_pairs(corpus, caches, shingle_words=5, threshold=0.0)
+        # Capped at df<=2: boilerplate shingles (df=30) drop out of candidate
+        # generation; unique-tail shingles pair nothing.
+        capped = D.ngram_jaccard_pairs(
+            corpus, caches, shingle_words=5, threshold=0.0, max_doc_freq=2
+        )
+        n_un, n_cap = uncapped.count(), capped.count()
     assert n_un == 30 * 29 // 2  # full quadratic blow-up without the cap
     assert n_cap == 0
 
@@ -43,16 +47,18 @@ def test_lsh_max_bucket_guard(spark):
     # 20 identical docs -> one LSH bucket of 20 -> 190 pairs unguarded.
     rows = [(i, "exactly the same text in every single document here") for i in range(20)]
     corpus = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    unguarded = D.minhash_lsh_pairs(corpus)
-    guarded = D.minhash_lsh_pairs(corpus, max_bucket=5)
-    assert unguarded.count() == 20 * 19 // 2
-    assert guarded.count() == 0
+    with Caches() as caches:
+        unguarded = D.minhash_lsh_pairs(corpus, caches)
+        guarded = D.minhash_lsh_pairs(corpus, caches, max_bucket=5)
+        assert unguarded.count() == 20 * 19 // 2
+        assert guarded.count() == 0
 
 
 def test_simhash_max_bucket_guard(spark):
     rows = [(i, "exactly the same text in every single document here") for i in range(20)]
     corpus = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    assert D.simhash_pairs(corpus, max_bucket=5).count() == 0
+    with Caches() as caches:
+        assert D.simhash_pairs(corpus, caches, max_bucket=5).count() == 0
 
 
 def test_ann_recall_vs_exact(spark, sf_dir):

@@ -14,6 +14,7 @@ import re
 
 import pytest
 
+from odni_apache_beam_consumer_spark.caches import Caches
 from odni_apache_beam_consumer_spark.plans.registry import all_queries
 
 
@@ -544,12 +545,9 @@ def test_similar_docs_topk_uses_window_group_limit(spark, sf_dir):
         _similar_docs_topk_lazy,
     )
 
-    out, cached = _similar_docs_topk_lazy(spark, sf_dir)
-    try:
+    with Caches() as caches:
+        out = _similar_docs_topk_lazy(spark, sf_dir, caches)
         assert "WindowGroupLimit" in _lazy_plan(spark, out)
-    finally:
-        for df in cached:
-            df.unpersist()
 
 
 def test_quantile_binning_broadcasts_boundaries(spark, sf_dir):
@@ -586,13 +584,10 @@ def test_method_comparison_reads_cached_member_pair_sets(spark, sf_dir):
     eagerly checkpoints its 3-row result (cache stewardship)."""
     from odni_apache_beam_consumer_spark.plans.llm import _method_comparison_lazy
 
-    out, cached = _method_comparison_lazy(spark, sf_dir)
-    try:
+    with Caches() as caches:
+        out = _method_comparison_lazy(spark, sf_dir, caches)
         plan = _lazy_plan(spark, out)
         assert plan.count("InMemoryTableScan") >= 4, plan
-    finally:
-        for df in cached:
-            df.unpersist()
 
 
 def test_similar_docs_topk_reads_cached_pairs_on_both_union_branches(
@@ -605,13 +600,10 @@ def test_similar_docs_topk_reads_cached_pairs_on_both_union_branches(
         _similar_docs_topk_lazy,
     )
 
-    out, cached = _similar_docs_topk_lazy(spark, sf_dir)
-    try:
+    with Caches() as caches:
+        out = _similar_docs_topk_lazy(spark, sf_dir, caches)
         plan = _lazy_plan(spark, out)
         assert plan.count("InMemoryTableScan") >= 2, plan
-    finally:
-        for df in cached:
-            df.unpersist()
 
 
 @pytest.mark.slow
@@ -620,8 +612,8 @@ def test_method_comparison_and_similar_docs_release_their_caches(
 ):
     """The public query wrappers checkpoint their result and release
     EVERY Dataset-level persist (the member pair sets plus the
-    operator-internal band/sig/shingle tables, collected via
-    ``cache_registry``) before returning: Dataset persists live in the
+    operator-internal band/sig/shingle tables, all registered in one
+    ``Caches`` owner) before returning: Dataset persists live in the
     CacheManager with strong references and never drain via GC, so
     pre-fix each invocation pinned 5 more cached tables forever.
     Post-fix the only residue is the most recent localCheckpoint block,
@@ -782,8 +774,9 @@ def test_doremi_loss_pass_broadcast_hash_join_single_exchange(spark, sf_dir):
         _doremi_loss_frames,
     )
 
-    loss, _, _ = _doremi_loss_frames(spark, sf_dir)
-    plan = _lazy_plan(spark, loss)
+    with Caches() as caches:
+        loss, _, _ = _doremi_loss_frames(spark, sf_dir, caches)
+        plan = _lazy_plan(spark, loss)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan

@@ -85,6 +85,7 @@ def test_prefix_filter_lossless_at_nondyadic_thresholds(spark, sf_dir):
     (0.8*5 -> 4.0000000000000002 -> ceil 5), shortening the prefix below
     the lossless bound.  The fix computes the bound in integer ppm; this
     pins it against the unpruned brute force for both thresholds."""
+    from odni_apache_beam_consumer_spark.caches import Caches
     from odni_apache_beam_consumer_spark.operators.dedup import (
         jaccard_prefix_filter_pairs,
         shingle_table,
@@ -130,12 +131,13 @@ def test_prefix_filter_lossless_at_nondyadic_thresholds(spark, sf_dir):
                     .collect()
                 )
             }
-            got = {
-                (r.doc_a, r.doc_b)
-                for r in jaccard_prefix_filter_pairs(
-                    corpus, threshold=t
-                ).collect()
-            }
+            with Caches() as caches:
+                got = {
+                    (r.doc_a, r.doc_b)
+                    for r in jaccard_prefix_filter_pairs(
+                        corpus, caches, threshold=t
+                    ).collect()
+                }
             assert got == brute, (t, len(got), len(brute))
     finally:
         sh.unpersist()

@@ -97,6 +97,21 @@ def test_unigram_train_matches_python_reference(spark, vocab):
     assert got == want
 
 
+def test_unigram_train_refilters_caller_w8(spark):
+    """A caller-supplied ``w8`` that skipped the length filter (a 1-char
+    and a 10-char word here, both outside 2..max_wlen) must train the
+    same model as the default path, which filters ``words`` itself."""
+    vocab = {"a": 500, "ability": 50, "table": 40, "abcdefghij": 300, "ab": 90}
+    words = spark.createDataFrame(
+        [(w, f) for w, f in vocab.items()], "w STRING, freq BIGINT"
+    )
+
+    def model(**kw):
+        return sorted(tuple(r) for r in unigram_train_rounds(words, **kw).collect())
+
+    assert model(w8=words) == model()
+
+
 def test_unigram_em_reduces_corpus_cost(spark):
     """EM sanity on real fixture words: total corpus cost under the
     final model must not exceed the cost under the seed model (hard-EM

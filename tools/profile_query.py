@@ -1,5 +1,8 @@
 """Per-query timing split: construction (eager driver-side work — iterative
-loops, streaming replays) vs noop-sink execution of the returned plan.
+loops, streaming replays) vs noop-sink execution of the returned plan, plus
+the Spark jobs each rep launched (read from the status tracker through a
+per-rep job group; streaming micro-batches run outside the group and are
+not counted).
 
 Guide §1 (measure first): bench.py reports one number per query; this tool
 splits it so optimization effort lands on the phase that actually costs.
@@ -27,6 +30,7 @@ def main() -> int:
     from odni_apache_beam_consumer_spark.session import get_spark
 
     spark = get_spark(app_name="profile_query")
+    sc = spark.sparkContext
     queries = all_queries()
 
     # Warmup (same as bench.py): absorb session/codegen one-time costs.
@@ -34,18 +38,20 @@ def main() -> int:
     wdf.write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
 
-    for name in names:
+    for i, name in enumerate(names):
         for rep in range(2):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
+            group = f"profile:{i}:{name}:{rep}"
+            sc.setJobGroup(group, f"profile:{name}")
             t0 = time.monotonic()
             df = queries[name](spark, sf_dir)
             t1 = time.monotonic()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.monotonic()
             spark.catalog.clearCache()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             print(
                 f"{name} rep{rep}: total={t2 - t0:.3f}s "
-                f"construct={t1 - t0:.3f}s noop={t2 - t1:.3f}s",
+                f"construct={t1 - t0:.3f}s noop={t2 - t1:.3f}s jobs={jobs}",
                 flush=True,
             )
     return 0

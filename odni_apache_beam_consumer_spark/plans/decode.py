@@ -21,7 +21,6 @@ truncation bug shifts every decoded value and fails the driver check.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.plans.registry import query
+from odni_apache_beam_consumer_spark.session import shuffle_partitions
 
 
 @query(
@@ -166,6 +166,65 @@ def confluent_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_ORDERS_PAYLOAD = "o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT"
+
+
+def _cdc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The orders rows the CDC change set encodes: the payload columns
+    plus ``base_ts``, each order's create timestamp.  spread: the orders
+    fixture scans as ONE split, which would run the JSON encode+parse
+    single-task (the dominant cost here); see catalog.spread."""
+    return spread(load_table(spark, sf_dir, "orders")).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        (F.lit(1000) + F.col("o_orderkey") * 10).alias("base_ts"),
+    )
+
+
+def _orders_change_set(
+    o: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(creates, malformed, updates, deletes): Kafka-shaped ``value``
+    frames of Debezium envelopes over the :func:`_cdc_orders` frame
+    ``o`` — a create for every order at base_ts, three malformed
+    envelopes, an update for keys %10==0 at base_ts+5 and a delete for
+    keys %7==0 at base_ts+7."""
+    from odni_apache_beam_consumer_spark.streaming.cdc import debezium_envelope
+
+    img = F.struct("o_orderkey", "o_orderstatus", "price_cents")
+    creates = o.select(
+        debezium_envelope("c", F.col("base_ts"), img, _ORDERS_PAYLOAD)
+    )
+    # Trailing garbage JSON, an unknown op, and a delete missing its
+    # before image — parse_debezium must quarantine all three
+    # (_corrupt), not drop or apply them.
+    malformed = o.sparkSession.createDataFrame(
+        [
+            ("{not json at all",),
+            ('{"op":"x","ts_ms":1,"after":{"o_orderkey":1}}',),
+            ('{"op":"d","ts_ms":2}',),
+        ],
+        "v STRING",
+    ).select(F.col("v").cast("binary").alias("value"))
+    updates = o.where(F.col("o_orderkey") % 10 == 0).select(
+        debezium_envelope(
+            "u",
+            F.col("base_ts") + 5,
+            F.struct(
+                "o_orderkey",
+                F.lit("U").alias("o_orderstatus"),
+                (F.col("price_cents") + 100000).alias("price_cents"),
+            ),
+            _ORDERS_PAYLOAD,
+        )
+    )
+    deletes = o.where(F.col("o_orderkey") % 7 == 0).select(
+        debezium_envelope("d", F.col("base_ts") + 7, img, _ORDERS_PAYLOAD)
+    )
+    return creates, malformed, updates, deletes
+
+
 @query(
     "cdc_debezium_apply",
     oracle="""
@@ -207,89 +266,20 @@ def cdc_debezium_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the CDC contract) without any watermark."""
     from odni_apache_beam_consumer_spark.streaming import cdc as C
 
-    payload_schema = "o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT"
-    # spread: the orders fixture scans as ONE split, which would run the
-    # JSON encode+parse single-task (the dominant cost here); see catalog.spread.
-    o = spread(load_table(spark, sf_dir, "orders")).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-        (F.lit(1000) + F.col("o_orderkey") * 10).alias("base_ts"),
-    )
-    null_img = f"CAST(NULL AS STRUCT<{payload_schema}>)"
-    img = F.struct("o_orderkey", "o_orderstatus", "price_cents")
-    creates = o.select(
-        F.to_json(
-            F.struct(
-                F.lit("c").alias("op"),
-                F.col("base_ts").alias("ts_ms"),
-                F.expr(null_img).alias("before"),
-                img.alias("after"),
-            )
-        )
-        .cast("binary")
-        .alias("value")
-    )
-    # Three malformed envelopes ride along with the creates: trailing
-    # garbage JSON, an unknown op, and a delete missing its before image
-    # — parse_debezium must quarantine all three (_corrupt), not drop or
-    # apply them.
-    bad = spark.createDataFrame(
-        [
-            ("{not json at all",),
-            ('{"op":"x","ts_ms":1,"after":{"o_orderkey":1}}',),
-            ('{"op":"d","ts_ms":2}',),
-        ],
-        "v STRING",
-    ).select(F.col("v").cast("binary").alias("value"))
-    updates = (
-        o.where(F.col("o_orderkey") % 10 == 0)
-        .select(
-            F.to_json(
-                F.struct(
-                    F.lit("u").alias("op"),
-                    (F.col("base_ts") + 5).alias("ts_ms"),
-                    F.expr(null_img).alias("before"),
-                    F.struct(
-                        "o_orderkey",
-                        F.lit("U").alias("o_orderstatus"),
-                        (F.col("price_cents") + 100000).alias("price_cents"),
-                    ).alias("after"),
-                )
-            )
-            .cast("binary")
-            .alias("value")
-        )
-    )
-    deletes = (
-        o.where(F.col("o_orderkey") % 7 == 0)
-        .select(
-            F.to_json(
-                F.struct(
-                    F.lit("d").alias("op"),
-                    (F.col("base_ts") + 7).alias("ts_ms"),
-                    img.alias("before"),
-                    F.expr(null_img).alias("after"),
-                )
-            )
-            .cast("binary")
-            .alias("value")
-        )
-    )
-    store = tempfile.mkdtemp(prefix="cdc_dual_")
+    creates, bad, updates, deletes = _orders_change_set(_cdc_orders(spark, sf_dir))
     # 5 snapshot merges over a ~|orders|-row store: right-size the merge
     # shuffle like the streaming duals do (32 near-empty partitions per
     # window+write cycle cost more than the merge itself at this scale;
     # a production deployment sizes this to its key cardinality).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8), tempfile.TemporaryDirectory(
+        prefix="cdc_dual_", ignore_cleanup_errors=True
+    ) as store:
         merger = C.lww_upsert_merger(store, ["o_orderkey"])
         # Materialize each parsed batch ONCE (a real foreachBatch hands
         # the merger an already-materialized micro-batch); without this
         # every merge and replay re-runs the ~1s encode+parse pipeline.
         batches = [
-            C.parse_debezium(b, payload_schema).localCheckpoint(eager=True)
+            C.parse_debezium(b, _ORDERS_PAYLOAD).localCheckpoint(eager=True)
             for b in (creates.unionByName(bad), updates, deletes)
         ]
         merger(batches[0], 0)
@@ -306,9 +296,6 @@ def cdc_debezium_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(
             "o_orderkey", "o_orderstatus", "price_cents", "ts_ms"
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(
@@ -349,7 +336,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE INTO after ALTER TABLE ADD COLUMN)."""
     from odni_apache_beam_consumer_spark.streaming import cdc as C
 
-    v1 = "o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT"
+    v1 = _ORDERS_PAYLOAD
     v2 = v1 + ", priority STRING"
     o = spread(load_table(spark, sf_dir, "orders")).select(
         "o_orderkey",
@@ -359,43 +346,29 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1000) + F.col("o_orderkey") * 10).alias("base_ts"),
     )
     creates_v1 = o.select(
-        F.to_json(
+        C.debezium_envelope(
+            "c",
+            F.col("base_ts"),
+            F.struct("o_orderkey", "o_orderstatus", "price_cents"),
+            v1,
+        )
+    )
+    updates_v2 = o.where(F.col("o_orderkey") % 10 == 0).select(
+        C.debezium_envelope(
+            "u",
+            F.col("base_ts") + 5,
             F.struct(
-                F.lit("c").alias("op"),
-                F.col("base_ts").alias("ts_ms"),
-                F.expr(f"CAST(NULL AS STRUCT<{v1}>)").alias("before"),
-                F.struct("o_orderkey", "o_orderstatus", "price_cents").alias(
-                    "after"
-                ),
-            )
-        )
-        .cast("binary")
-        .alias("value")
-    )
-    updates_v2 = (
-        o.where(F.col("o_orderkey") % 10 == 0)
-        .select(
-            F.to_json(
-                F.struct(
-                    F.lit("u").alias("op"),
-                    (F.col("base_ts") + 5).alias("ts_ms"),
-                    F.expr(f"CAST(NULL AS STRUCT<{v2}>)").alias("before"),
-                    F.struct(
-                        "o_orderkey",
-                        F.lit("U").alias("o_orderstatus"),
-                        (F.col("price_cents") + 100000).alias("price_cents"),
-                        F.col("o_orderpriority").alias("priority"),
-                    ).alias("after"),
-                )
-            )
-            .cast("binary")
-            .alias("value")
+                "o_orderkey",
+                F.lit("U").alias("o_orderstatus"),
+                (F.col("price_cents") + 100000).alias("price_cents"),
+                F.col("o_orderpriority").alias("priority"),
+            ),
+            v2,
         )
     )
-    store = tempfile.mkdtemp(prefix="cdc_evo_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8), tempfile.TemporaryDirectory(
+        prefix="cdc_evo_", ignore_cleanup_errors=True
+    ) as store:
         merger = C.lww_upsert_merger(store, ["o_orderkey"])
         # one materialization per parsed batch (micro-batch semantics)
         b_v1 = C.parse_debezium(creates_v1, v1).localCheckpoint(eager=True)
@@ -408,9 +381,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(
             "o_orderkey", "o_orderstatus", "price_cents", "priority", "ts_ms"
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(store, ignore_errors=True)
+
 
 def _avro_varint_hex(v_expr: str) -> str:
     """SQL expression: the Avro binary (zigzag + varint) encoding of a
@@ -853,66 +824,16 @@ def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned DELETE WHERE)."""
     from odni_apache_beam_consumer_spark.streaming import cdc as C
 
-    payload = "o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT"
-    null_img = f"CAST(NULL AS STRUCT<{payload}>)"
-    o = spread(load_table(spark, sf_dir, "orders")).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-        (F.lit(1000) + F.col("o_orderkey") * 10).alias("base_ts"),
-    )
-    creates = o.select(
-        F.to_json(
-            F.struct(
-                F.lit("c").alias("op"),
-                F.col("base_ts").alias("ts_ms"),
-                F.expr(null_img).alias("before"),
-                F.struct("o_orderkey", "o_orderstatus", "price_cents").alias(
-                    "after"
-                ),
-            )
-        )
-        .cast("binary")
-        .alias("value")
-    )
-    updates = o.where(F.col("o_orderkey") % 10 == 0).select(
-        F.to_json(
-            F.struct(
-                F.lit("u").alias("op"),
-                (F.col("base_ts") + 5).alias("ts_ms"),
-                F.expr(null_img).alias("before"),
-                F.struct(
-                    "o_orderkey",
-                    F.lit("U").alias("o_orderstatus"),
-                    (F.col("price_cents") + 100000).alias("price_cents"),
-                ).alias("after"),
-            )
-        )
-        .cast("binary")
-        .alias("value")
-    )
-    deletes = o.where(F.col("o_orderkey") % 7 == 0).select(
-        F.to_json(
-            F.struct(
-                F.lit("d").alias("op"),
-                (F.col("base_ts") + 7).alias("ts_ms"),
-                F.struct("o_orderkey", "o_orderstatus", "price_cents").alias(
-                    "before"
-                ),
-                F.expr(null_img).alias("after"),
-            )
-        )
-        .cast("binary")
-        .alias("value")
-    )
-    store = tempfile.mkdtemp(prefix="cdc_gc_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    o = _cdc_orders(spark, sf_dir)
+    creates, _, updates, deletes = _orders_change_set(o)
+    with shuffle_partitions(spark, 8), tempfile.TemporaryDirectory(
+        prefix="cdc_gc_", ignore_cleanup_errors=True
+    ) as store:
         merger = C.lww_upsert_merger(store, ["o_orderkey"])
-        b_c = C.parse_debezium(creates, payload).localCheckpoint(eager=True)
-        b_u = C.parse_debezium(updates, payload).localCheckpoint(eager=True)
-        b_d = C.parse_debezium(deletes, payload).localCheckpoint(eager=True)
+        b_c, b_u, b_d = (
+            C.parse_debezium(b, _ORDERS_PAYLOAD).localCheckpoint(eager=True)
+            for b in (creates, updates, deletes)
+        )
         merger(b_c, 0)
         merger(b_u, 1)
         merger(b_d, 2)
@@ -927,9 +848,6 @@ def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(
             "o_orderkey", "o_orderstatus", "price_cents", "ts_ms"
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(

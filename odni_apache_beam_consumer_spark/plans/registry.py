@@ -59,12 +59,56 @@ _PKG_PREFIX = "odni_apache_beam_consumer_spark"
 _CONST_TYPES = (int, float, str, bytes, bool, tuple, list, dict, set, frozenset)
 
 
+def _local_imports(source: str) -> list[tuple[str, object]]:
+    """(bound name, object) for every package-local ``import`` and
+    ``from ... import`` in a function's source, nested functions
+    included.  A function-local import binds no global, so neither
+    ``__globals__`` nor the closure cells can see what it pulls in."""
+    import ast
+    import importlib
+    import textwrap
+
+    if _PKG_PREFIX not in source:
+        return []
+    try:
+        tree = ast.parse(textwrap.dedent(source))
+    except SyntaxError:  # a lambda's source line need not parse alone
+        return []
+    refs = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            refs += [
+                (a.asname or a.name, importlib.import_module(a.name))
+                for a in node.names
+                if a.name.startswith(_PKG_PREFIX)
+            ]
+        elif (
+            isinstance(node, ast.ImportFrom)
+            and node.level == 0
+            and node.module.startswith(_PKG_PREFIX)
+            # the registry's own tables are not helper code, and their
+            # repr holds function addresses that differ per process
+            and node.module != __name__
+        ):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                obj = (
+                    getattr(mod, a.name)
+                    if hasattr(mod, a.name)
+                    else importlib.import_module(f"{node.module}.{a.name}")
+                )
+                refs.append((a.asname or a.name, obj))
+    return refs
+
+
 def _closure_parts(fn, seen: set, parts: dict) -> None:
     """Collect source text for ``fn`` and every package-local object it
-    references, transitively: helper functions get their own source (and
-    recurse), referenced package modules get their full module source,
-    referenced module-level constants get their repr.  Keys are
-    deterministic (module, qualname) pairs so the digest is stable."""
+    references, transitively — through its globals, its closure cells
+    and its function-local imports: helper functions get their own
+    source (and recurse), referenced package modules get their full
+    module source, referenced module-level constants get their repr.
+    Keys are deterministic (module, qualname) pairs so the digest is
+    stable."""
     import inspect
     import types
 
@@ -82,9 +126,10 @@ def _closure_parts(fn, seen: set, parts: dict) -> None:
         return
     seen.add(key)
     try:
-        parts[key] = inspect.getsource(fn)
+        source = inspect.getsource(fn)
     except (OSError, TypeError):
-        parts[key] = f"<nosource {mod}.{fn.__qualname__}>"
+        source = None
+    parts[key] = source or f"<nosource {mod}.{fn.__qualname__}>"
 
     def _code_names(code):
         names = set(code.co_names) | set(code.co_freevars)
@@ -104,6 +149,8 @@ def _closure_parts(fn, seen: set, parts: dict) -> None:
                 refs.append((n, cell.cell_contents))
             except ValueError:
                 pass
+    if source:
+        refs += _local_imports(source)
     for n, obj in refs:
         if isinstance(obj, types.FunctionType) or hasattr(obj, "__wrapped__") or (
             hasattr(obj, "func") and isinstance(getattr(obj, "func"), types.FunctionType)

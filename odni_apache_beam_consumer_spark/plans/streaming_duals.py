@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.plans.registry import query
+from odni_apache_beam_consumer_spark.session import shuffle_partitions
 from odni_apache_beam_consumer_spark.streaming import materialized as MV
 from odni_apache_beam_consumer_spark.streaming import sinks as SK
 
@@ -289,9 +290,7 @@ def session_window_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores per batch cost more in open/commit than the aggregation)."""
     from odni_apache_beam_consumer_spark.sources import replay as R
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8):
         chunks = R.replay_fixture(
             spark, sf_dir, n_chunks=4, flush_sentinel=True
         )
@@ -319,21 +318,13 @@ def session_window_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_scaled",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("session_dual_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = SK.to_memory(agg, "session_dual_mem")
         assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
             spark.table("session_dual_mem")
             .where(F.col("user_id") >= 0)  # drop the flush sentinel's row
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _ann_ingest_oracle() -> str:
@@ -406,13 +397,13 @@ def ann_stream_ingest_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-history size."""
     from odni_apache_beam_consumer_spark.operators import similarity as S
     from odni_apache_beam_consumer_spark.plans.llm import _ANN_PLANES
+    from odni_apache_beam_consumer_spark.sources import replay as R
 
     planes = _ANN_PLANES
     root = tempfile.mkdtemp(prefix="ann_ingest_dual_")
     chunks_dir = os.path.join(root, "chunks")
     index_dir = os.path.join(root, "index")
     marker_dir = os.path.join(root, "markers")
-    os.makedirs(chunks_dir)
     os.makedirs(marker_dir)
     try:
         emb = load_table(spark, sf_dir, "embeddings").select(
@@ -420,11 +411,7 @@ def ann_stream_ingest_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # 4 deterministic id-sliced chunk files written in ONE partitioned
         # job (4 separate coalesce(1) jobs were pure launch overhead),
-        # mtimes staggered so the file source replays them in order (same
-        # recipe as replay.py).
-        import time as _time
-
-        now = _time.time()
+        # published in slice order by R.publish_chunks.
         tmp = os.path.join(root, "__tmp")
         (
             emb.withColumn("c", F.pmod(F.col("vec_id"), F.lit(4)).cast("int"))
@@ -433,12 +420,10 @@ def ann_stream_ingest_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("c")
             .parquet(tmp)
         )
-        for i in range(4):
-            kdir = os.path.join(tmp, f"c={i}")
-            src = next(f for f in os.listdir(kdir) if f.endswith(".parquet"))
-            dst = os.path.join(chunks_dir, f"chunk_{i:05d}.parquet")
-            shutil.move(os.path.join(kdir, src), dst)
-            os.utime(dst, (now + i, now + i))
+        R.publish_chunks(
+            [p for i in range(4) for p in R.part_files(os.path.join(tmp, f"c={i}"))],
+            chunks_dir,
+        )
         shutil.rmtree(tmp, ignore_errors=True)
 
         def ingest(batch: DataFrame, batch_id: int) -> None:
@@ -565,13 +550,7 @@ def stream_static_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_epoch"
         ),
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("ssdim_dual_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = SK.to_memory(enriched, "ssdim_dual_mem")
     assert q.awaitTermination(300), "replay drain timed out (300 s)"
     return (
         spark.table("ssdim_dual_mem")
@@ -641,9 +620,7 @@ def streaming_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_within_watermark,
     )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8):
         chunks = R.redelivery_fixture(
             spark, sf_dir, n_chunks=3, redeliver_mod=5
         )
@@ -656,13 +633,7 @@ def streaming_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.floor(F.col("value") * 10000).cast("long").alias("value_scaled"),
         )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_dual_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = SK.to_memory(deduped, "dedup_dual_mem")
         assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
             spark.table("dedup_dual_mem")
@@ -674,8 +645,6 @@ def streaming_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -735,9 +704,7 @@ def stream_stream_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_join,
     )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8):
         chunks = R.replay_fixture(
             spark, sf_dir, n_chunks=4, flush_sentinel=True
         )
@@ -755,17 +722,9 @@ def stream_stream_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("c_value_scaled"),
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ssjoin_dual_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = SK.to_memory(out, "ssjoin_dual_mem")
         assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return spark.table("ssjoin_dual_mem").localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -819,9 +778,7 @@ def stream_stream_outer_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame
         stream_stream_left_outer_join,
     )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    with shuffle_partitions(spark, 4):
         # Cached fixture, shared with the full-outer dual (identical
         # layout).  n_sentinels=2: outer-join eviction needs a DATA batch
         # AFTER the watermark advance (see write_replay_chunks).  At two
@@ -860,21 +817,13 @@ def stream_stream_outer_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame
             .cast("long")
             .alias("c_value_scaled"),
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ssouter_dual_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = SK.to_memory(out, "ssouter_dual_mem")
         assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
             spark.table("ssouter_dual_mem")
             .where(F.col("p_event_id") >= 0)  # drop sentinel null-rows
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -933,9 +882,7 @@ def stream_stream_full_outer_join_dual(spark: SparkSession, sf_dir: str) -> Data
         stream_stream_full_outer_join,
     )
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    with shuffle_partitions(spark, 4):
         # Cached fixture shared with the left-outer dual; two files per
         # trigger — same eviction argument as that dual's fixture note.
         chunks = R.replay_fixture(
@@ -962,13 +909,7 @@ def stream_stream_full_outer_join_dual(spark: SparkSession, sf_dir: str) -> Data
             .cast("long")
             .alias("c_value_scaled"),
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ssfouter_dual_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = SK.to_memory(out, "ssfouter_dual_mem")
         assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
             spark.table("ssfouter_dual_mem")
@@ -978,8 +919,6 @@ def stream_stream_full_outer_join_dual(spark: SparkSession, sf_dir: str) -> Data
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -1024,76 +963,25 @@ def cdc_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTO shape); re-deliveries take the merger's replay fast path (one
     merge pass, zero delta winners, NO snapshot rewrite).  State is the
     table itself — no watermark, unbounded horizon, the CDC contract."""
-    import time as _time
-
+    from odni_apache_beam_consumer_spark.plans.decode import (
+        _ORDERS_PAYLOAD,
+        _cdc_orders,
+        _orders_change_set,
+    )
+    from odni_apache_beam_consumer_spark.sources import replay as R
     from odni_apache_beam_consumer_spark.streaming import cdc as C
 
-    payload_schema = (
-        "o_orderkey BIGINT, o_orderstatus STRING, price_cents BIGINT"
-    )
-    root = tempfile.mkdtemp(prefix="cdc_stream_dual_")
-    chunks_dir = os.path.join(root, "chunks")
-    store = os.path.join(root, "store")
-    os.makedirs(chunks_dir)
-    os.makedirs(store)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # spread: the orders fixture scans as ONE split (see catalog.spread);
-        # the JSON encode below is the dominant map cost.  localCheckpoint:
-        # five chunk branches reuse this base projection — without it each
-        # branch re-scans and re-projects orders in the one chunk-write job.
-        o = (
-            spread(load_table(spark, sf_dir, "orders"))
-            .select(
-                "o_orderkey",
-                "o_orderstatus",
-                F.floor(F.col("o_totalprice") * 100).cast("long").alias(
-                    "price_cents"
-                ),
-                (F.lit(1000) + F.col("o_orderkey") * 10).alias("base_ts"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        null_img = f"CAST(NULL AS STRUCT<{payload_schema}>)"
-        img = F.struct("o_orderkey", "o_orderstatus", "price_cents")
-
-        def env(op, ts, before, after):
-            return F.to_json(
-                F.struct(
-                    F.lit(op).alias("op"),
-                    ts.alias("ts_ms"),
-                    before.alias("before"),
-                    after.alias("after"),
-                )
-            ).cast("binary").alias("value")
-
-        creates = o.select(env("c", F.col("base_ts"), F.expr(null_img), img))
-        # Malformed envelopes ride with the creates: parse must
-        # quarantine, not drop or apply (same trio as cdc_debezium_apply).
-        bad = spark.createDataFrame(
-            [
-                ("{not json at all",),
-                ('{"op":"x","ts_ms":1,"after":{"o_orderkey":1}}',),
-                ('{"op":"d","ts_ms":2}',),
-            ],
-            "v STRING",
-        ).select(F.col("v").cast("binary").alias("value"))
-        updates = o.where(F.col("o_orderkey") % 10 == 0).select(
-            env(
-                "u",
-                F.col("base_ts") + 5,
-                F.expr(null_img),
-                F.struct(
-                    "o_orderkey",
-                    F.lit("U").alias("o_orderstatus"),
-                    (F.col("price_cents") + 100000).alias("price_cents"),
-                ),
-            )
-        )
-        deletes = o.where(F.col("o_orderkey") % 7 == 0).select(
-            env("d", F.col("base_ts") + 7, img, F.expr(null_img))
-        )
+    with shuffle_partitions(spark, 8), tempfile.TemporaryDirectory(
+        prefix="cdc_stream_dual_", ignore_cleanup_errors=True
+    ) as root:
+        chunks_dir = os.path.join(root, "chunks")
+        store = os.path.join(root, "store")
+        os.makedirs(store)
+        # localCheckpoint: five chunk branches reuse this base projection —
+        # without it each branch re-scans and re-projects orders in the
+        # one chunk-write job.
+        o = _cdc_orders(spark, sf_dir).localCheckpoint(eager=True)
+        creates, bad, updates, deletes = _orders_change_set(o)
         # 5 mtime-ordered chunk files: the live stream (0:creates+bad,
         # 1:updates, 2:deletes) followed by the at-least-once
         # re-deliveries OUT OF ORDER (3:updates again, 4:creates+bad
@@ -1115,20 +1003,9 @@ def cdc_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("k")
             .parquet(tmp)
         )
-        now = _time.time()
-        for k in range(3):
-            kdir = os.path.join(tmp, f"k={k}")
-            src = next(f for f in os.listdir(kdir) if f.endswith(".parquet"))
-            dst = os.path.join(chunks_dir, f"chunk_{k:05d}.parquet")
-            shutil.move(os.path.join(kdir, src), dst)
-            os.utime(dst, (now + k, now + k))
+        live = [R.part_files(os.path.join(tmp, f"k={k}"))[0] for k in range(3)]
+        R.publish_chunks(live + [live[1], live[0]], chunks_dir)
         shutil.rmtree(tmp, ignore_errors=True)
-        for k, src_k in ((3, 1), (4, 0)):  # re-deliveries: same bytes again
-            dst = os.path.join(chunks_dir, f"chunk_{k:05d}.parquet")
-            shutil.copy(
-                os.path.join(chunks_dir, f"chunk_{src_k:05d}.parquet"), dst
-            )
-            os.utime(dst, (now + k, now + k))
 
         merger = C.lww_upsert_merger(store, ["o_orderkey"])
 
@@ -1137,7 +1014,7 @@ def cdc_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             # micro-batch; localCheckpoint keeps the merge (+ its replay
             # fast path) from re-running the parse lineage.
             merger(
-                C.parse_debezium(batch, payload_schema).localCheckpoint(
+                C.parse_debezium(batch, _ORDERS_PAYLOAD).localCheckpoint(
                     eager=True
                 ),
                 batch_id,
@@ -1157,6 +1034,3 @@ def cdc_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select(
             "o_orderkey", "o_orderstatus", "price_cents", "ts_ms"
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(root, ignore_errors=True)

@@ -23,6 +23,9 @@ from __future__ import annotations
 
 import os
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "odni-spark-engine"
@@ -30,6 +33,20 @@ DEFAULT_APP_NAME = "odni-spark-engine"
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the block and
+    restore the previous value on exit, also when the block raises.
+    Streaming state stores are one per shuffle partition, so this is also
+    the state-partition count of any streaming query started inside."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def get_spark(

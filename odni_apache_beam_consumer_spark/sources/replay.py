@@ -28,6 +28,35 @@ from odni_apache_beam_consumer_spark.catalog import load_table
 EVENTS_SCHEMA = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
 
 
+def part_files(parquet_dir: str) -> list[str]:
+    """Paths of the parquet part files Spark wrote under ``parquet_dir``,
+    sorted by name."""
+    return [
+        os.path.join(parquet_dir, f)
+        for f in sorted(os.listdir(parquet_dir))
+        if f.endswith(".parquet")
+    ]
+
+
+def publish_chunks(parts: list[str], out_dir: str) -> str:
+    """Publish part files as a replay directory: ``parts[i]`` becomes
+    ``out_dir/chunk_%05d.parquet`` number i with an mtime i seconds after
+    the first, so the file-stream source (which orders by mtime) replays
+    them in list order.  A path listed more than once is published once
+    per listing — an at-least-once re-delivery of the same bytes — and
+    moved at its last listing, copied before that."""
+    os.makedirs(out_dir, exist_ok=True)
+    now = time.time()
+    for i, src in enumerate(parts):
+        dst = os.path.join(out_dir, f"chunk_{i:05d}.parquet")
+        if src in parts[i + 1:]:
+            shutil.copy(src, dst)
+        else:
+            shutil.move(src, dst)
+        os.utime(dst, (now + i, now + i))
+    return out_dir
+
+
 def write_replay_chunks(
     spark: SparkSession,
     sf_dir: str,
@@ -49,10 +78,10 @@ def write_replay_chunks(
 
     Fully distributed: ``repartitionByRange`` assigns ascending ts ranges
     to partitions 0..n-1 (range boundaries from a sampled sketch) and
-    executors write the files in parallel.  The driver then only renames
-    the n part files into ``chunk_%05d`` order and staggers their mtimes
-    so the file-stream source replays them oldest-first — an O(n_chunks)
-    metadata pass, never the data."""
+    executors write the files in parallel.  The driver then only
+    publishes the n part files oldest-first through
+    :func:`publish_chunks` — an O(n_chunks) metadata pass, never the
+    data."""
     e = load_table(spark, sf_dir, "events")
     tmp_dir = out_dir.rstrip("/") + ".__tmp__"
     (
@@ -61,16 +90,7 @@ def write_replay_chunks(
         .write.mode("overwrite")
         .parquet(tmp_dir)
     )
-    os.makedirs(out_dir, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp_dir) if f.startswith("part-") and f.endswith(".parquet")
-    )
-    now = time.time()
-    for i, fname in enumerate(parts):
-        dst = os.path.join(out_dir, f"chunk_{i:05d}.parquet")
-        shutil.move(os.path.join(tmp_dir, fname), dst)
-        os.utime(dst, (now + i, now + i))
-    shutil.rmtree(tmp_dir, ignore_errors=True)
+    parts = part_files(tmp_dir)
     if flush_sentinel:
         # Watermarked append-mode queries only emit a window once the
         # watermark passes its end — after the last real batch, the final
@@ -109,15 +129,12 @@ def write_replay_chunks(
             F.col("value"),
             F.col("props"),
         )
-        sent.write.mode("overwrite").partitionBy("k").parquet(tmp_dir)
+        sent_dir = os.path.join(tmp_dir, "sentinels")
+        sent.write.mode("overwrite").partitionBy("k").parquet(sent_dir)
         for k in range(n_sentinels):
-            i = len(parts) + k
-            kdir = os.path.join(tmp_dir, f"k={k}")
-            part = [f for f in os.listdir(kdir) if f.endswith(".parquet")][0]
-            dst = os.path.join(out_dir, f"chunk_{i:05d}.parquet")
-            shutil.move(os.path.join(kdir, part), dst)
-            os.utime(dst, (now + i, now + i))
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+            parts += part_files(os.path.join(sent_dir, f"k={k}"))
+    publish_chunks(parts, out_dir)
+    shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_dir
 
 
@@ -144,7 +161,8 @@ def write_redelivery_chunks(
     probe literals in streaming_duals.py), and chunk id is monotone in
     ts, so replay order respects event time and no real row is ever
     late.  The write is one distributed job partitioned by (chunk,
-    dup); the driver only renames part files into replay order."""
+    dup); the driver only publishes the part files in replay order
+    (:func:`publish_chunks`)."""
     e = load_table(spark, sf_dir, "events")
     fracs = [i / n_chunks for i in range(1, n_chunks)]
     cuts = e.select(
@@ -198,21 +216,13 @@ def write_redelivery_chunks(
             f"(need >=2 and >=1) — ts distribution too skewed for "
             f"n_chunks={n_chunks} / redeliver_mod={redeliver_mod}"
         )
-    os.makedirs(out_dir, exist_ok=True)
-    now = time.time()
-    seq = 0
+    parts = []
     for k in range(n_chunks):
         for dup in (0, 1):
             kdir = os.path.join(tmp_dir, f"chunk={k}", f"dup={dup}")
-            if not os.path.isdir(kdir):
-                continue
-            for part in sorted(
-                f for f in os.listdir(kdir) if f.endswith(".parquet")
-            ):
-                dst = os.path.join(out_dir, f"chunk_{seq:05d}.parquet")
-                shutil.move(os.path.join(kdir, part), dst)
-                os.utime(dst, (now + seq, now + seq))
-                seq += 1
+            if os.path.isdir(kdir):
+                parts += part_files(kdir)
+    publish_chunks(parts, out_dir)
     shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_dir
 

@@ -19,8 +19,11 @@ This module supplies the two halves its consumers would need:
   same state — idempotence falls out of the merge semantics rather than
   a commit marker, which is what makes CDC apply safe under replays,
   out-of-order topic partitions, and crash-restarts alike.  The
-  snapshot/pointer commit protocol is shared with
-  streaming/materialized.py (pointer flip = commit).
+  snapshot/pointer commit protocol is streaming/materialized.py's
+  (commit_snapshot; pointer flip = commit).
+
+:func:`debezium_envelope` is the encoder inverse to the parser, which
+the CDC replay queries and tests use to build their change streams.
 
 Scale shape: each batch merge is one keyed window over
 |snapshot| + |delta| rows — at 100 TB the snapshot is a key-partitioned
@@ -30,19 +33,18 @@ key with a ts guard; semantics identical.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.streaming.materialized import (
+    already_committed,
+    commit_snapshot,
     latest_version,
+    mark_committed,
     read_view,
 )
-
-_POINTER = "_LATEST"
 
 
 def debezium_schema(payload_schema: str) -> str:
@@ -51,6 +53,29 @@ def debezium_schema(payload_schema: str) -> str:
     return (
         "op STRING, ts_ms BIGINT, "
         f"before STRUCT<{payload_schema}>, after STRUCT<{payload_schema}>"
+    )
+
+
+def debezium_envelope(
+    op: str, ts_ms: Column, image: Column, payload_schema: str
+) -> Column:
+    """Encode one Debezium JSON envelope per row as the Kafka-shaped
+    binary ``value`` column — the inverse of :func:`parse_debezium`:
+    ``image`` fills ``before`` for op = 'd' and ``after`` otherwise, and
+    the other image is a typed NULL of ``payload_schema``."""
+    null = F.expr(f"CAST(NULL AS STRUCT<{payload_schema}>)")
+    before, after = (image, null) if op == "d" else (null, image)
+    return (
+        F.to_json(
+            F.struct(
+                F.lit(op).alias("op"),
+                ts_ms.alias("ts_ms"),
+                before.alias("before"),
+                after.alias("after"),
+            )
+        )
+        .cast("binary")
+        .alias("value")
     )
 
 
@@ -139,13 +164,7 @@ def lww_upsert_merger(
     order_cols = [ts_col, "is_delete"] + ([seq_col] if seq_col else [])
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(store, f"_committed_{batch_id}")
-        if os.path.exists(marker):
-            return
-        committed = latest_version(store)
-        if committed is not None and committed >= batch_id:
-            with open(marker, "w"):
-                pass
+        if already_committed(store, batch_id):
             return
         spark = batch.sparkSession
         delta = batch.where(~F.col("_corrupt")).drop("_corrupt", "op")
@@ -181,17 +200,9 @@ def lww_upsert_merger(
             and not widens
             and merged.where(F.col("_src") == 1).isEmpty()
         ):
-            with open(marker, "w"):
-                pass
+            mark_committed(store, batch_id)
             return
-        out_path = os.path.join(store, f"snapshot_{batch_id}")
-        merged.drop("_src").write.mode("overwrite").parquet(out_path)
-        tmp = os.path.join(store, f"._latest_{batch_id}")
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, os.path.join(store, _POINTER))
-        with open(marker, "w"):
-            pass
+        commit_snapshot(merged.drop("_src"), store, batch_id)
 
     return fn
 
@@ -220,9 +231,9 @@ def expire_tombstones(
     Crash-safe by the same ordering argument as the merger and
     txtable.expire_versions: the pruned snapshot is fully written under
     the NEXT version number first, then the pointer flips atomically
-    (os.replace) — a crash before the flip leaves the old state
-    current and the orphan directory is vacuum debris, never a
-    half-applied GC.  In-horizon tombstones survive verbatim, so
+    (materialized.commit_snapshot) — a crash before the flip leaves the
+    old state current and the orphan directory is vacuum debris, never
+    a half-applied GC.  In-horizon tombstones survive verbatim, so
     replays newer than the horizon still lose the LWW window exactly
     as before.  Returns the new committed version.
 
@@ -238,11 +249,5 @@ def expire_tombstones(
         ~(F.col("is_delete") & (F.col(ts_col) < F.lit(cutoff)))
     ).localCheckpoint(eager=True)
     v = committed + 1
-    kept.write.mode("overwrite").parquet(os.path.join(store, f"snapshot_{v}"))
-    tmp = os.path.join(store, f"._latest_{v}")
-    with open(tmp, "w") as fh:
-        fh.write(str(v))
-    os.replace(tmp, os.path.join(store, _POINTER))
-    with open(os.path.join(store, f"_committed_{v}"), "w"):
-        pass
+    commit_snapshot(kept, store, v)
     return v

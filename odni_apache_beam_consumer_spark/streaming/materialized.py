@@ -54,6 +54,41 @@ def read_view(spark, store: str) -> DataFrame | None:
     return spark.read.parquet(path) if path else None
 
 
+def mark_committed(store: str, version: int) -> None:
+    """Write the ``_committed_<version>`` fast-path marker."""
+    with open(os.path.join(store, f"_committed_{version}"), "w"):
+        pass
+
+
+def already_committed(store: str, batch_id: int) -> bool:
+    """True when ``batch_id``'s merge is already visible, so a re-delivery
+    must not merge again.  The marker is the fast path; without it,
+    ``pointer >= batch_id`` proves the batch committed (batch ids are
+    monotone) and the marker is repaired — this closes the crash window
+    between pointer flip and marker, where re-merging would read
+    snapshot_<batch_id> itself as ``prev`` and double-count the delta."""
+    if os.path.exists(os.path.join(store, f"_committed_{batch_id}")):
+        return True
+    committed = latest_version(store)
+    if committed is not None and committed >= batch_id:
+        mark_committed(store, batch_id)
+        return True
+    return False
+
+
+def commit_snapshot(df: DataFrame, store: str, version: int) -> None:
+    """Commit ``df`` as the store's snapshot ``version``.  Order: snapshot
+    durable -> pointer flip (THE commit; atomic rename) -> marker (fast
+    path only), so a crash at any point leaves either the old state
+    current or the new one fully written."""
+    df.write.mode("overwrite").parquet(os.path.join(store, f"snapshot_{version}"))
+    tmp = os.path.join(store, f"._latest_{version}")
+    with open(tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(tmp, os.path.join(store, _POINTER))
+    mark_committed(store, version)
+
+
 # Algebraic measure kinds: (delta aggregate over raw rows, merge
 # aggregate over partial states).  Each is associative + commutative, so
 # snapshot ⊎ delta is independent of batch boundaries.  AVG is derived:
@@ -83,14 +118,11 @@ def algebraic_merger(
     decomposable into these states is maintainable — e.g. avg as
     sum/count at read time.
 
-    Exactly-once protocol: the POINTER FLIP is the commit.  Batch ids are
-    monotonically increasing, so ``pointer >= batch_id`` proves this
-    batch's merge is already visible — on re-delivery we only write the
-    fast-path marker and return, which closes the crash window between
-    flip and marker (re-merging there would read snapshot_<batch_id>
-    itself as ``prev`` and double-count the delta, and the overwrite
-    would target the very path being read).  The marker is purely an
-    optimization to skip the pointer read+parse on the common path.
+    Exactly-once protocol: the POINTER FLIP is the commit
+    (:func:`commit_snapshot`), and a re-delivered batch whose merge is
+    already visible only repairs its marker (:func:`already_committed`)
+    — re-merging would read snapshot_<batch_id> itself as ``prev``,
+    double-count the delta, and overwrite the very path being read.
 
     Scale shape: the delta aggregation is one map-side-combined hash agg
     over the micro-batch; the merge is one hash agg over
@@ -105,16 +137,7 @@ def algebraic_merger(
             )
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(store, f"_committed_{batch_id}")
-        if os.path.exists(marker):
-            return
-        committed = latest_version(store)
-        if committed is not None and committed >= batch_id:
-            # Crash happened after the flip but before the marker: the
-            # pointer already records this batch (or a later one) as
-            # visible.  Just repair the marker — do NOT re-merge.
-            with open(marker, "w"):
-                pass
+        if already_committed(store, batch_id):
             return
         spark = batch.sparkSession
         delta = batch.groupBy(*keys).agg(
@@ -138,16 +161,7 @@ def algebraic_merger(
                 ]
             )
         )
-        out_path = os.path.join(store, f"snapshot_{batch_id}")
-        merged.write.mode("overwrite").parquet(out_path)
-        # Order: snapshot durable -> pointer flip (THE commit; atomic
-        # rename) -> marker (fast path only).
-        tmp = os.path.join(store, f"._latest_{batch_id}")
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, os.path.join(store, _POINTER))
-        with open(marker, "w"):
-            pass
+        commit_snapshot(merged, store, batch_id)
 
     return fn
 

@@ -6,12 +6,15 @@ from __future__ import annotations
 
 import pytest
 
+import os
 import shutil
 import tempfile
 
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.sources import replay as R
 from odni_apache_beam_consumer_spark.streaming import cdc as C
+from odni_apache_beam_consumer_spark.streaming import materialized as M
 
 SCHEMA = "k BIGINT, v STRING"
 
@@ -36,6 +39,24 @@ def test_parse_debezium_routes_images_and_quarantine(spark):
         ("d", 1, True),  # delete's key recovered from BEFORE image
     }
     assert sum(r._corrupt for r in out) == 3
+
+    # The encoder is the parser's inverse: the c/u/d envelopes it builds
+    # parse back to the image they encoded.
+    row = spark.createDataFrame([(1, "a")], SCHEMA)
+    img = F.struct("k", "v")
+    parsed = [
+        r
+        for ts, op in enumerate("cud")
+        for r in C.parse_debezium(
+            row.select(C.debezium_envelope(op, F.lit(ts).cast("long"), img, SCHEMA)),
+            SCHEMA,
+        ).collect()
+    ]
+    assert [(r.op, r.ts_ms, r.is_delete, r._corrupt, r.k, r.v) for r in parsed] == [
+        ("c", 0, False, False, 1, "a"),
+        ("u", 1, False, False, 1, "a"),
+        ("d", 2, True, False, 1, "a"),
+    ]
 
 
 def test_lww_tombstone_blocks_resurrection(spark):
@@ -90,6 +111,44 @@ def test_lww_marker_replay_is_noop(spark):
         shutil.rmtree(store, ignore_errors=True)
 
 
+def test_lww_pointer_repair_after_lost_marker(spark):
+    """Crash window between pointer flip and marker write: the committed
+    batch's marker is lost and the batch is re-delivered under the same
+    id.  The pointer is the commit record, so the merger repairs the
+    marker and does NOT re-merge — the committed version and the table
+    are unchanged.  LWW would absorb a re-merge of identical rows, so
+    the second re-delivery carries a newer change under the same id."""
+    store = tempfile.mkdtemp(prefix="cdc_test_")
+    try:
+        m = C.lww_upsert_merger(store, ["k"])
+        b0 = C.parse_debezium(
+            _envs(spark, [('{"op":"c","ts_ms":1,"after":{"k":5,"v":"x"}}',)]),
+            SCHEMA,
+        )
+        m(b0, 0)
+        committed = M.latest_version(store)
+        assert committed == 0
+        marker = os.path.join(store, f"_committed_{committed}")
+        os.remove(marker)
+        m(b0, committed)
+        assert os.path.exists(marker), "marker must be repaired"
+        # Same id, newer change: only a re-merge could make it visible.
+        os.remove(marker)
+        m(
+            C.parse_debezium(
+                _envs(spark, [('{"op":"u","ts_ms":9,"after":{"k":5,"v":"y"}}',)]),
+                SCHEMA,
+            ),
+            committed,
+        )
+        assert os.path.exists(marker), "marker must be repaired"
+        assert M.latest_version(store) == committed
+        assert M.list_versions(store) == [committed]
+        assert [(r.k, r.v) for r in C.read_current(spark, store).collect()] == [(5, "x")]
+    finally:
+        shutil.rmtree(store, ignore_errors=True)
+
+
 @pytest.mark.slow
 def test_cdc_readstream_end_to_end(spark, tmp_path):
     """Debezium envelopes through a REAL readStream file replay +
@@ -101,10 +160,8 @@ def test_cdc_readstream_end_to_end(spark, tmp_path):
     result."""
     import json
     import os
-    import time
 
     chunks_dir = tmp_path / "chunks"
-    chunks_dir.mkdir()
     store = str(tmp_path / "store")
     os.makedirs(store)
     envs0 = [
@@ -115,17 +172,15 @@ def test_cdc_readstream_end_to_end(spark, tmp_path):
         {"op": "u", "ts_ms": 100, "after": {"k": 2, "v": "v2b"}},
         {"op": "d", "ts_ms": 101, "before": {"k": 4, "v": "v4"}},
     ]
-    now = time.time()
+    parts = []
     for i, envs in enumerate([envs0, envs1]):
         df = spark.createDataFrame(
             [(json.dumps(e),) for e in envs], "value STRING"
         ).select(F.col("value").cast("binary").alias("value"))
         tmp = str(tmp_path / f"__tmp_{i}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = str(chunks_dir / f"chunk_{i:05d}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (now + i, now + i))
+        parts += R.part_files(tmp)
+    R.publish_chunks(parts, str(chunks_dir))
 
     merger = C.lww_upsert_merger(store, ["k"])
 

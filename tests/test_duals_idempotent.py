@@ -17,6 +17,8 @@ DUALS = [
     "snapshot_diff_audit",
     "transactional_table_ops",
     "partitioned_gdpr_delete",
+    "cdc_stream_dual",
+    "ann_stream_ingest_dual",
 ]
 
 

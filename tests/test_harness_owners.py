@@ -1,0 +1,76 @@
+"""Each stream-replay harness decision has one owner module (no Spark):
+
+* the replay-file layout (staggered mtimes) — sources/replay.py;
+* the shuffle/state-partition scope — session.py;
+* the memory-sink drain of the plans — streaming/sinks.to_memory;
+* the snapshot pointer commit under streaming/ — streaming/materialized.py.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "odni_apache_beam_consumer_spark",
+)
+
+
+def _is_call(node: ast.AST, obj: str, attr: str) -> bool:
+    """``node`` is a call of ``<obj>.<attr>(...)``, where ``obj`` names
+    the receiver's last attribute or variable."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    recv = node.func.value
+    name = recv.attr if isinstance(recv, ast.Attribute) else getattr(recv, "id", None)
+    return node.func.attr == attr and name == obj
+
+
+def _first_arg(node: ast.Call) -> object:
+    return node.args[0].value if node.args and isinstance(node.args[0], ast.Constant) else None
+
+
+def _offenders(pkg: str) -> list[str]:
+    found = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                where = f"{rel}:{getattr(node, 'lineno', 0)}"
+                if _is_call(node, "os", "utime") and rel != "sources/replay.py":
+                    found.append(f"{where}: os.utime(")
+                elif (
+                    _is_call(node, "conf", "set")
+                    and _first_arg(node) == "spark.sql.shuffle.partitions"
+                    and rel != "session.py"
+                ):
+                    found.append(f"{where}: shuffle-partition conf.set")
+                elif (
+                    _is_call(node, "writeStream", "format")
+                    and _first_arg(node) == "memory"
+                    and rel.startswith("plans/")
+                ):
+                    found.append(f'{where}: writeStream.format("memory")')
+                elif rel.startswith("streaming/") and rel != "streaming/materialized.py":
+                    if _is_call(node, "os", "replace"):
+                        found.append(f"{where}: pointer os.replace")
+                    elif isinstance(node, ast.Assign) and any(
+                        getattr(t, "id", None) == "_POINTER" for t in node.targets
+                    ):
+                        found.append(f"{where}: _POINTER definition")
+    return found
+
+
+def test_replay_harness_decisions_have_one_owner():
+    """No staggered-mtime write outside sources/replay.py, no
+    shuffle-partition ``conf.set`` outside session.py, no hand-written
+    memory-sink drain under plans/, and no pointer file or pointer flip
+    under streaming/ outside materialized.py."""
+    offenders = _offenders(PKG)
+    assert not offenders, offenders

@@ -163,9 +163,9 @@ def test_digest_covers_helper_closure():
     rewrote ~100 lines of operators/similarity.py executed by two
     registered queries without shifting either digest.  The digest now
     folds in the transitive helper-source closure, so (a) helper
-    functions from operators/* appear in the closure, and (b) an
-    in-memory edit to a referenced module-level constant moves the
-    digest."""
+    functions from operators/* appear in the closure, as do package
+    modules a query function imports locally, and (b) an in-memory edit
+    to a referenced module-level constant moves the digest."""
     from odni_apache_beam_consumer_spark.plans import llm
     from odni_apache_beam_consumer_spark.plans.registry import (
         QUERIES,
@@ -185,6 +185,17 @@ def test_digest_covers_helper_closure():
         "operators/similarity.py helpers missing from ann_pq_adc_topk's "
         f"digest closure: {sorted(helper_mods)}"
     )
+    # Package modules imported INSIDE a query function bind no global,
+    # so the closure must follow the function-local imports too.
+    for name, module in (
+        ("session_window_stream_dual", "sources.replay"),
+        ("cdc_stream_dual", "streaming.cdc"),
+    ):
+        parts = {}
+        _closure_parts(QUERIES[name], set(), parts)
+        assert ("mod", f"odni_apache_beam_consumer_spark.{module}", "") in parts, (
+            f"{module} missing from {name}'s digest closure: {sorted(parts)}"
+        )
 
     # (b) behavioral: perturb a referenced helper constant in-memory and
     # the digest must move (restored afterwards).

@@ -243,19 +243,13 @@ def test_late_data_dropped(spark, tmp_path):
         [(2, "2024-02-01 00:30:00", 1, "view", 1.0, "{}")],  # 38 days late
         [(-1, "2100-01-01 00:00:00", -1, "__flush__", 0.0, "{}")],
     ]
-    late_dir = str(tmp_path / "late_chunks")
-    os.makedirs(late_dir)
-    import time as _time
-
-    now = _time.time()
+    parts = []
     for i, rows in enumerate(chunks):
         df = spark.createDataFrame(rows, schema).withColumn("ts", F.to_timestamp("ts"))
         tmp = str(tmp_path / f"w{i}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(late_dir, f"chunk_{i:05d}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (now + i, now + i))
+        parts += R.part_files(tmp)
+    late_dir = R.publish_chunks(parts, str(tmp_path / "late_chunks"))
 
     stream = R.read_stream(spark, late_dir)
     q = sinks.to_memory(

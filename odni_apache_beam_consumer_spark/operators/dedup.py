@@ -37,7 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from odni_apache_beam_consumer_spark.caches import Caches
+from odni_apache_beam_consumer_spark.caches import Caches, iterate
 from odni_apache_beam_consumer_spark.catalog import spread
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens, word_shingles
 
@@ -417,13 +417,11 @@ def connected_components(
     """(doc_id, component) labels from undirected near-dup pairs —
     min-label propagation to fixpoint.
 
-    The iterative step is pure DataFrame ops (join + min-agg); each round
-    ``localCheckpoint``s to cut the lineage, the standard Spark pattern
-    for loops (otherwise plan depth grows per round and planning cost
-    explodes).  Rounds needed = graph diameter, which for near-dup
-    clusters is tiny (near-dup relations are almost transitive); the
-    convergence check is one cheap count per round.  Not SQL-expressible
-    in one statement — verified by property tests instead of an oracle."""
+    The iterative step is pure DataFrame ops (join + min-agg) run by
+    ``caches.iterate``, which checkpoints each round to cut the lineage.
+    Rounds needed = graph diameter, which for near-dup clusters is tiny
+    (near-dup relations are almost transitive).  Not SQL-expressible in
+    one statement — verified by property tests instead of an oracle."""
     edges = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).where(F.col("src") != F.col("dst"))
@@ -438,28 +436,27 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint()
     )
-    for _ in range(max_iterations):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         neigh = (
             sym.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")
             .agg(F.min("comp").alias("ncomp"))
         )
-        # One join carries both the new label AND the changed flag — the
-        # convergence count then runs on the checkpointed result instead of
-        # re-joining old vs new labels (saves a shuffle per round).
-        joined = (
-            labels.join(neigh.withColumnRenamed("src", "id"), "id", "left")
-            .select(
-                "id",
-                F.col("comp").alias("old_comp"),
-                F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
+        # One join carries both the new label AND the old one, so the
+        # convergence probe reads the round's own frame.
+        return labels.join(neigh.withColumnRenamed("src", "id"), "id", "left").select(
+            "id",
+            F.col("comp").alias("old_comp"),
+            F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
         )
-        changed = joined.where(F.col("comp") != F.col("old_comp")).count()
-        labels = joined.select("id", "comp")
-        if changed == 0:
-            break
+
+    labels = iterate(
+        labels,
+        propagate,
+        max_iterations,
+        until=F.count(F.when(F.col("comp") != F.col("old_comp"), 1)) == 0,
+    )
     return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
 
 
@@ -480,10 +477,9 @@ def connected_components_star(
 
     Per round, both operations are one hash aggregation (per-node min)
     plus one re-keyed projection of the edge list — keyed shuffles only,
-    no global state; ``localCheckpoint`` per round truncates lineage
-    exactly like every other iterative driver here.  At fixpoint the edge
-    set is a star forest: every non-root node holds exactly one edge to
-    its component minimum.
+    no global state; ``caches.iterate`` checkpoints each round.  At
+    fixpoint the edge set is a star forest: every non-root node holds
+    exactly one edge to its component minimum.
 
     Same output contract as :func:`connected_components` (labels for
     every node appearing in ``pairs``), so the two are interchangeable —
@@ -534,13 +530,22 @@ def connected_components_star(
             .distinct()
         )
 
-    prev = None
-    for _ in range(max_iterations):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        n = edges.count()
-        if prev is not None and n == prev[1] and edges.exceptAll(prev[0]).count() == 0:
-            break
-        prev = (edges, n)
+    def contract(e: DataFrame) -> DataFrame:
+        # Full outer join with the round's input edges: a row missing
+        # from either side means the edge set still changes.
+        old = e.where("cur").select("u", "v")
+        return (
+            small_star(large_star(old))
+            .withColumn("cur", F.lit(True))
+            .join(old.withColumn("prev", F.lit(True)), ["u", "v"], "full")
+        )
+
+    edges = iterate(
+        edges.withColumn("cur", F.lit(True)),
+        contract,
+        max_iterations,
+        until=F.count(F.when(F.col("cur").isNull() | F.col("prev").isNull(), 1)) == 0,
+    ).where("cur")
 
     # Star forest -> labels: non-roots point at their component min;
     # roots (and isolated post-contraction nodes) label themselves.

@@ -381,8 +381,9 @@ def dedup_resolve_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicality properties are additionally asserted in
     tests/test_operators.py."""
     corpus = dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(corpus, Caches(), shingle_words=3, num_hashes=12, rows_per_band=3)
-    return D.resolve_duplicates(corpus, pairs)
+    with Caches() as caches:
+        pairs = D.minhash_lsh_pairs(corpus, caches, shingle_words=3, num_hashes=12, rows_per_band=3)
+        return D.resolve_duplicates(corpus, pairs)
 
 
 @query(
@@ -439,11 +440,12 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per round two hash aggregations (per-node minimum) and
     two re-keyed edge projections — keyed shuffles on vertex id, edge set
-    never grows beyond the input, localCheckpoint per round truncates
-    lineage."""
+    never grows beyond the input, each round checkpointed by
+    ``caches.iterate``, so the pair caches are released on return."""
     corpus = dedup_corpus(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(corpus, Caches(), shingle_words=3, num_hashes=12, rows_per_band=3)
-    return D.connected_components_star(pairs)
+    with Caches() as caches:
+        pairs = D.minhash_lsh_pairs(corpus, caches, shingle_words=3, num_hashes=12, rows_per_band=3)
+        return D.connected_components_star(pairs)
 
 
 @query(

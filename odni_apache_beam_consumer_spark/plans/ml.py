@@ -7,8 +7,8 @@ these are north-star additions per SURVEY.md §2.2.
 
 These demonstrate the two execution shapes the relational packs don't:
 an *iterative numeric* step (assignment + centroid update — the loop body
-of every EM-style algorithm; run it k times under ``localCheckpoint`` the
-same way operators/dedup.py::connected_components loops), and a
+of every EM-style algorithm; ``caches.iterate`` runs it k times, as it
+runs every lineage-cutting loop in the package), and a
 *multi-way graph self-join* (triangle enumeration).
 
 Float discipline for the oracles: distances use the algebraic form
@@ -20,11 +20,13 @@ engines; averages are rounded after aggregation.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from odni_apache_beam_consumer_spark.caches import Caches
+from odni_apache_beam_consumer_spark.caches import Caches, iterate
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.operators.kmeans_kernel import (
     assign_stats_kernel,
@@ -392,7 +394,7 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round, one equi-join of the k-column rank table
     into the persisted degree-annotated edges + ONE dst-keyed hash
     aggregation (map-side partial sums absorb hub skew), exactly the
-    one-step plan looped under localCheckpoint; the symmetric graph has
+    one-step plan looped by ``caches.iterate``; the symmetric graph has
     no dangling nodes, so no dangling-mass term.  3 rounds = 3 keyed
     exchanges over the edge list, each lineage-truncated."""
     caches = Caches()
@@ -406,17 +408,13 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the degree aggregation + join inside every round.
     edeg = caches.persist(e.join(deg, "u"))
     nv = deg.count()
-    ranks = deg.select(
-        F.col("u").alias("node"),
-        F.lit(1000000000 // nv).cast("long").alias("rank_n"),
-    ).localCheckpoint(eager=True)
-    out = None
-    for _ in range(_PR_ROUNDS):
+
+    def flow(ranks: DataFrame) -> DataFrame:
         inflow = (
-            edeg.join(ranks.withColumnRenamed("node", "u"), "u")
+            edeg.join(ranks.select(F.col("node").alias("u"), "rank_nano"), "u")
             .select(
                 F.col("v").alias("node"),
-                F.expr("rank_n DIV outdeg").alias("c"),
+                F.expr("rank_nano DIV outdeg").alias("c"),
             )
             .groupBy("node")
             .agg(
@@ -424,7 +422,7 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("long").alias("n_in_edges"),
             )
         )
-        out = inflow.select(
+        return inflow.select(
             "node",
             (
                 F.lit(150000000 // nv)
@@ -433,16 +431,21 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rank_nano"),
             "n_in_edges",
-        ).localCheckpoint(eager=True)
-        ranks = out.select("node", F.col("rank_nano").alias("rank_n"))
+        )
+
+    ranks = deg.select(
+        F.col("u").alias("node"),
+        F.lit(1000000000 // nv).cast("long").alias("rank_nano"),
+    )
+    out = iterate(ranks, flow, _PR_ROUNDS)
     caches.release()
     return out
 
 
 # ---------------------------------------------------------------------------
-# Full iterative drivers: loop the driver-verified one-step bodies under
-# localCheckpoint (the lineage-truncation pattern proven in
-# operators/dedup.py::connected_components).  The float drivers below are
+# Full iterative drivers: ``caches.iterate`` loops the driver-verified
+# one-step bodies, checkpointing each round and reading any convergence
+# probe from the round's own checkpoint.  The float drivers below are
 # not registered as oracle queries — DuckDB has no natural dual for a
 # data-dependent iteration count; correctness comes from the one-step
 # oracles plus the convergence property tests in tests/test_ml_loops.py.
@@ -460,17 +463,15 @@ def pagerank(
     """Full PageRank over a directed edge list (u, v), uniform start.
 
     Per round: one equi-join of ranks into the (persisted) out-degree-
-    annotated edges + one dst-keyed hash aggregation — identical plan to
-    the driver-verified ``pagerank_one_step``.  ``localCheckpoint`` per
-    round truncates lineage (without it, round k's plan nests k copies of
-    the join and planning time explodes); convergence is ONE extra
-    constant-size aggregate per round computing the L1 delta, skipped
-    when ``tol`` is None.  Returns (node, pagerank).
+    annotated edges + one node-keyed hash aggregation — the driver-
+    verified ``pagerank_one_step`` body, looped by ``caches.iterate``.
+    The aggregation also takes each node's previous rank, so convergence
+    (L1 delta below ``tol``; no probe when ``tol`` is None) is read from
+    the round's own checkpoint.  Returns (node, pagerank).
 
     Dangling nodes (out-degree 0) are handled by renormalizing: their
     lost mass is re-spread uniformly each round, keeping sum(rank) = 1 —
     the standard power-iteration fix, computed as a 1-row aggregate."""
-    spark = edges.sparkSession
     caches = Caches()
     e = caches.persist(edges.select("u", "v"))
     deg = caches.persist(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")))
@@ -484,15 +485,8 @@ def pagerank(
         .distinct()
     )
     nv = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / nv).alias("rank")).localCheckpoint()
-    for _ in range(n_iters):
-        flowing = (
-            edeg
-            .join(ranks.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
+
+    def power_step(ranks: DataFrame) -> DataFrame:
         # Dangling mass: rank held by nodes with no out-edges this round.
         dangling = (
             ranks.join(deg.withColumnRenamed("u", "node"), "node", "left_anti")
@@ -500,31 +494,37 @@ def pagerank(
             .first()["m"]
         )
         base = (1.0 - damping) / nv + damping * dangling / nv
-        new_ranks = (
-            nodes.join(flowing, "node", "left_outer")
+        no_rank = F.lit(None).cast("double")
+        flowing = (
+            edeg.join(ranks.select(F.col("node").alias("u"), "rank"), "u")
             .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
+                F.col("v").alias("node"),
+                (F.col("rank") / F.col("outdeg")).alias("c"),
+                no_rank.alias("old_rank"),
             )
-            .localCheckpoint()
+            # Every node has a rank row, so the one aggregation yields
+            # each node's inflow next to its previous rank.
+            .unionByName(ranks.select("node", no_rank.alias("c"), F.col("rank").alias("old_rank")))
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"), F.max("old_rank").alias("old_rank"))
         )
-        if tol is not None:
-            delta = (
-                new_ranks.withColumnRenamed("rank", "r2")
-                .join(ranks, "node")
-                .agg(F.sum(F.abs(F.col("r2") - F.col("rank"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
+        return flowing.select(
+            "node",
+            (
+                F.lit(base)
+                + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
+            ).alias("rank"),
+            "old_rank",
+        )
+
+    ranks = iterate(
+        nodes.select("node", F.lit(1.0 / nv).alias("rank")),
+        power_step,
+        n_iters,
+        until=None if tol is None else F.sum(F.abs(F.col("rank") - F.col("old_rank"))) < tol,
+    )
     caches.release()
-    return ranks
+    return ranks.select("node", "rank")
 
 
 def kmeans(
@@ -545,17 +545,13 @@ def kmeans(
     body the driver verifies in ``kmeans_one_step``), then ONE hash
     aggregation rebuilding each centroid as 64 per-dimension averages
     (64·k groups — constant-sized exchange at any corpus size).
-    ``localCheckpoint`` truncates the per-round lineage; convergence is
-    the max centroid L2 movement, one k-row aggregate per round."""
+    ``caches.iterate`` loops the rounds; each carries the previous
+    centroid, so convergence (max L2 movement below ``tol``) is read
+    from the round's own checkpoint."""
     caches = Caches()
     v = caches.persist(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
-    cents = (
-        v.where(F.col("vid") % centroid_every == 0)
-        .select(F.col("vid").alias("cid"), F.col("vec").alias("cvec"))
-        .localCheckpoint()
-    )
-    out = None
-    for _ in range(n_iters):
+
+    def lloyd_step(cents: DataFrame) -> DataFrame:
         c = cents.select("cid", "cvec", dot("cvec", "cvec").alias("cdd"))
         score = F.col("cdd") - 2 * dot("vec", "cvec")
         w = W.partitionBy("vid").orderBy(score.asc(), F.col("cid").asc())
@@ -563,48 +559,36 @@ def kmeans(
             v.crossJoin(F.broadcast(c))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
-            .select("vid", "cid", "vec")
+            .select("vid", "cid", "vec", "cvec")
         )
-        new_cents = (
-            assigned.groupBy("cid")
-            .agg(
-                F.array(
-                    *[
-                        F.round(F.avg(F.element_at(F.col("vec"), i + 1)), 6)
-                        for i in range(dim)
-                    ]
-                ).alias("cvec"),
-                F.count(F.lit(1)).alias("n_members"),
-            )
-            .localCheckpoint()
+        return assigned.groupBy("cid").agg(
+            F.array(
+                *[
+                    F.round(F.avg(F.element_at(F.col("vec"), i + 1)), 6)
+                    for i in range(dim)
+                ]
+            ).alias("cvec"),
+            F.count(F.lit(1)).alias("n_members"),
+            # every member row carries its centroid's old vector
+            F.max("cvec").alias("old_cvec"),
         )
-        if tol is not None:
-            move = (
-                new_cents.select("cid", F.col("cvec").alias("nv"))
-                .join(cents, "cid")
-                .select(
-                    F.sqrt(
-                        F.aggregate(
-                            F.zip_with(
-                                F.col("nv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ).alias("m")
-                )
-                .agg(F.max("m").alias("mm"))
-                .first()["mm"]
-            )
-            out = new_cents
-            cents = new_cents.select("cid", "cvec")
-            if move is not None and move < tol:
-                break
-        else:
-            out = new_cents
-            cents = new_cents.select("cid", "cvec")
+
+    move = F.sqrt(
+        F.aggregate(
+            F.zip_with(F.col("cvec"), F.col("old_cvec"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+    cents = iterate(
+        v.where(F.col("vid") % centroid_every == 0)
+        .select(F.col("vid").alias("cid"), F.col("vec").alias("cvec")),
+        lloyd_step,
+        n_iters,
+        until=None if tol is None else F.max(move) < tol,
+    )
     caches.release()
-    return out
+    return cents.select("cid", "cvec", "n_members")
 
 
 _KM_ROUNDS = 3
@@ -825,8 +809,7 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
     Per round: one equi-join of labels into the (persisted) symmetric
     edge list + one (vertex, label) hash count + one per-vertex
     WindowGroupLimit argmax — all keyed shuffles, no global state.
-    ``localCheckpoint`` per round truncates lineage exactly like
-    operators/dedup.py::connected_components.  Synchronous update +
+    ``caches.iterate`` checkpoints each round.  Synchronous update +
     deterministic tie-break means the result is a pure function of the
     graph, so the 2-round registered query has a full SQL oracle.
 
@@ -842,7 +825,8 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
     labels = sym.select("u").distinct().select(
         F.col("u").alias("vertex"), F.col("u").alias("label")
     )
-    for i in range(n_rounds):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         neigh = sym.join(
             labels.withColumnRenamed("vertex", "u"), "u"
         ).select(F.col("v").alias("vertex"), "label")
@@ -850,16 +834,13 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
             F.count(F.lit(1)).alias("n")
         )
         w = W.partitionBy("vertex").orderBy(F.desc("n"), F.asc("label"))
-        labels = (
+        return (
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("vertex", "label")
-            # last round is EAGER: materializing the result here lets the
-            # persisted inputs be released before returning — repeated
-            # library calls in one session must not accumulate cached
-            # RDDs until someone runs a global clearCache.
-            .localCheckpoint(eager=(i == n_rounds - 1))
         )
+
+    labels = iterate(labels, adopt, n_rounds)
     caches.release()
     return labels
 
@@ -918,36 +899,42 @@ def kcore(edges: DataFrame, k: int = 3, n_rounds: int | None = None) -> DataFram
     (the oracle-checkable form).  Returns (vertex, degree) in the final
     surviving subgraph.
 
-    Per round: one degree count (hash agg on vertex) + one semi join of
-    the edge list against surviving vertices on EACH endpoint — all
-    keyed shuffles; ``localCheckpoint`` per round truncates lineage like
-    every other iterative driver here.  Rounds are bounded by the peel
-    depth (typically small); at 100 TB each round's edge filter is the
-    dominant cost and shrinks monotonically."""
-    spark = edges.sparkSession
+    Per round: one degree count (hash agg on vertex) + one join of the
+    edge list against the degrees on EACH endpoint — all keyed shuffles;
+    ``caches.iterate`` checkpoints each round.  Rounds are bounded by the
+    peel depth (typically small); at 100 TB each round's edge filter is
+    the dominant cost and shrinks monotonically."""
     caches = Caches()
     sym = caches.persist(
         edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
-    rounds = 0
-    while True:
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        survivors = deg.where(F.col("d") >= k).select("u")
-        peeled = deg.where(F.col("d") < k).limit(1)
-        rounds += 1
-        done_rounds = n_rounds is not None and rounds >= n_rounds
-        if done_rounds or (n_rounds is None and peeled.count() == 0):
-            return caches.result(
-                deg.where(F.col("d") >= k).select(
-                    F.col("u").alias("vertex"), F.col("d").alias("degree")
-                )
-            )
-        sym = (
-            sym.join(survivors, "u")
-            .join(survivors.select(F.col("u").alias("v")), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
+
+    def degrees(s: DataFrame) -> DataFrame:
+        return s.where("keep").groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+
+    def peel(s: DataFrame) -> DataFrame:
+        # Keep every edge of the round's input, flagged by whether both
+        # endpoints survive, so the probe sees what this round peeled.
+        deg = degrees(s)
+        return (
+            s.where("keep")
+            .join(deg.select("u", F.col("d").alias("du")), "u")
+            .join(deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v")
+            .select("u", "v", ((F.col("du") >= k) & (F.col("dv") >= k)).alias("keep"))
         )
+
+    # A full peel ends within |V| rounds; the probe stops it at the first
+    # round that peels nothing.
+    sym = iterate(
+        sym.withColumn("keep", F.lit(True)),
+        peel,
+        sys.maxsize if n_rounds is None else n_rounds - 1,
+        until=None if n_rounds is not None else F.count(F.when(~F.col("keep"), 1)) == 0,
+    )
+    caches.release()
+    return degrees(sym).where(F.col("d") >= k).select(
+        F.col("u").alias("vertex"), F.col("d").alias("degree")
+    )
 
 
 @query(
@@ -1194,24 +1181,13 @@ def reachability_frontier_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier-dedup recursion (distinct (pk, hop) pairs; MIN collapses
     revisits at later hops).
 
-    Per-round localCheckpoint truncates the growing lineage (the
-    iterative-loop discipline every *_rounds query shares); the seed
-    collect and the per-round emptiness probe are metadata-sized (1 row
-    / 1 long).  Scale shape per round: one (u)-keyed equi-join of a
-    <=|V|-row frontier against the edge list + one |V|-bounded
-    anti-join — at 100 TB the frontier/visited sides broadcast and the
-    edge list never re-shuffles.
-
-    r14 (guide §2.4/§5): the visited set is kept as a LIST of per-hop
-    checkpointed frontiers and unioned lazily — the previous form
-    re-checkpointed ``visited.union(nxt)`` eagerly every round,
-    re-materializing the ENTIRE growing visited set once per hop
-    (O(depth * |V|) extra materialized rows and one extra eager job per
-    round) for zero information: every member frontier is already an
-    eager checkpoint, so the union of <= depth cached leaves is free to
-    recompute at each anti-join.  Result rows are identical — the union
-    is the same set either way.  Warm same-JVM A/B at sf0.1: 8.6 ->
-    ~6.3 s."""
+    ``caches.iterate`` checkpoints each round's visited set (pk, hop,
+    new), flagging the hop's frontier as ``new``; the loop stops at the
+    first round that adds no vertex, read from that round's checkpoint.
+    The seed collect is metadata-sized (1 row).  Scale shape per round:
+    one (u)-keyed equi-join of a <=|V|-row frontier against the edge list
+    + one |V|-bounded anti-join — at 100 TB the frontier/visited sides
+    broadcast and the edge list never re-shuffles."""
     e0 = copurchase_edges(spark, sf_dir)
     e = (
         e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1224,31 +1200,26 @@ def reachability_frontier_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .collect()[0][0]
     )  # 1-row probe literal (documented metadata-sized collect class)
-    frontier = spark.createDataFrame(
-        [(int(seed), 0)], "pk long, hop int"
-    ).localCheckpoint(eager=True)
-    frontiers = [frontier]
 
-    def visited_union() -> DataFrame:
-        out = frontiers[0]
-        for f in frontiers[1:]:
-            out = out.unionByName(f)
-        return out
-
-    for hop in range(1, 7):
+    def expand(visited: DataFrame) -> DataFrame:
+        frontier = visited.where("new")
         nxt = (
             frontier.join(e, frontier["pk"] == e["u"])
-            .select(F.col("v").alias("pk"))
+            .select(F.col("v").alias("pk"), (F.col("hop") + 1).alias("hop"))
             .distinct()
-            .join(visited_union().select("pk"), "pk", "left_anti")
-            .select("pk", F.lit(hop).cast("int").alias("hop"))
-            .localCheckpoint(eager=True)
+            .join(visited.select("pk"), "pk", "left_anti")
         )
-        if not nxt.take(1):  # frontier drained — BFS complete
-            break
-        frontiers.append(nxt)
-        frontier = nxt
-    return visited_union().select(
+        return visited.select("pk", "hop", F.lit(False).alias("new")).unionByName(
+            nxt.withColumn("new", F.lit(True))
+        )
+
+    visited = iterate(
+        spark.createDataFrame([(int(seed), 0, True)], "pk long, hop int, new boolean"),
+        expand,
+        6,
+        until=F.count(F.when(F.col("new"), 1)) == 0,
+    )
+    return visited.select(
         F.col("pk").cast("long").alias("part_key"),
         F.col("hop").cast("long").alias("min_hop"),
     )

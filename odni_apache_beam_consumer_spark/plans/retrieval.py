@@ -26,9 +26,12 @@ compares, never log().
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from odni_apache_beam_consumer_spark.caches import iterate
 from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens
 from odni_apache_beam_consumer_spark.plans.registry import query
@@ -633,9 +636,9 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-independent after the one corpus-wide word count), so 10 or
     10,000 merges never rescan the corpus.  Per round: one pair hash
     agg, a 1-row argmax broadcast-crossed back (whitelisted NLJ), two
-    window passes keyed by word, and an eager localCheckpoint to cut
-    lineage (the pagerank/kcore idiom).  Candidate islands need no
-    shuffle beyond the word keying already in place."""
+    window passes keyed by word, and a ``caches.iterate`` checkpoint to
+    cut lineage.  Candidate islands need no shuffle beyond the word
+    keying already in place."""
     words = (
         with_tokens(spread(load_table(spark, sf_dir, "documents")))
         .select(F.explode("tk").alias("w"))
@@ -655,9 +658,9 @@ def bpe_train_rounds(
     path.  See bpe_train for semantics and scale shape.
 
     ``merges_out`` (a list) collects the learned (a, b) pair per round —
-    one 1-row ``first()`` per round on the already-materialized argmax,
-    metadata-sized — so :func:`bpe_apply_merges` can replay the merge
-    table in priority order (the inference half).
+    one 1-row ``first()`` per round on the round's checkpoint, which
+    carries its merged pair — so :func:`bpe_apply_merges` can replay the
+    merge table in priority order (the inference half).
 
     r14 (guide §2.4): the segmentation lives as ONE array column per
     word instead of an exploded (w, pos, sym) table.  Pair counting
@@ -666,8 +669,8 @@ def bpe_train_rounds(
     map-side left-to-right array fold (:func:`_greedy_merge_fold` —
     provably the same semantics, see its docstring), removing every
     per-round word-keyed window and (w, pos) join: per round the plan
-    is exactly ONE pair-count exchange plus ONE 1-row vocab-size
-    aggregate, where the exploded form paid a lead() window, two
+    is exactly ONE pair-count exchange plus ONE vocab-size aggregate,
+    where the exploded form paid a lead() window, two
     row_number() windows, a left-anti and a left join, and a renumber
     window — all shuffling the |vocab| x word-length symbol table.
     All arithmetic is integer/string — no float enters, so the
@@ -678,8 +681,11 @@ def bpe_train_rounds(
         words.select("w", "freq", F.split("w", "").alias("syms"))
         .localCheckpoint(eager=True)
     )
-    metrics = []
-    for r in range(1, n_rounds + 1):
+    seen = []  # each round's input: the previous round's checkpoint
+
+    def merge(prev: DataFrame) -> DataFrame:
+        seen.append(prev)
+        s = prev.select("w", "freq", "syms")
         pairs = (
             s.select(
                 "freq",
@@ -693,52 +699,42 @@ def bpe_train_rounds(
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("freq").cast("long").alias("cnt"))
         )
-        top = (
-            pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        if merges_out is not None:
-            t = top.first()
-            merges_out.append((t["a"], t["b"]))
-        # NOTE (r14, measured): dropping this per-round checkpoint and
+        top = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1)
+        # NOTE (r14, measured): dropping the per-round checkpoint and
         # letting later rounds re-run the fold chain map-side was tried
         # and REVERTED — warm A/B bpe_train 3.7 -> 6.6 s, bpe_apply
         # 3.7 -> 5.9 s.  The fold's O(len^2) array allocation is cheap
         # once but not r times per round; materializing each round wins
         # (the inverse of the DSIR persist result — guide §5 cuts both
-        # ways, measure each case).
-        s = (
-            s.crossJoin(F.broadcast(top))
-            .select(
-                "w",
-                "freq",
-                _greedy_merge_fold(
-                    F.col("syms"), F.col("a"), F.col("b")
-                ).alias("syms"),
-            )
-            .localCheckpoint(eager=True)
+        # ways, measure each case).  Each round's frame also carries its
+        # merged pair (a, b, cnt), so the metrics read the checkpoint.
+        return s.crossJoin(F.broadcast(top)).select(
+            "w",
+            "freq",
+            _greedy_merge_fold(F.col("syms"), F.col("a"), F.col("b")).alias("syms"),
+            "a",
+            "b",
+            "cnt",
         )
-        metrics.append(
-            top.crossJoin(
-                F.broadcast(
-                    s.agg(
-                        F.sum(F.size("syms"))
-                        .cast("long")
-                        .alias("vocab_symbols")
-                    )
-                )
-            ).select(
+
+    last = iterate(s, merge, n_rounds)
+    rounds = seen[1:] + [last]
+    if merges_out is not None:
+        merges_out.extend(tuple(f.select("a", "b").first()) for f in rounds)
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            f.groupBy("a", "b", "cnt")
+            .agg(F.sum(F.size("syms")).cast("long").alias("vocab_symbols"))
+            .select(
                 F.lit(r).cast("long").alias("round"),
                 F.concat("a", "b").alias("merged"),
                 F.col("cnt").alias("pair_count"),
                 "vocab_symbols",
             )
-        )
-    out = metrics[0]
-    for m in metrics[1:]:
-        out = out.unionByName(m)
-    return out
+            for r, f in enumerate(rounds, 1)
+        ],
+    )
 
 
 def _greedy_merge_fold(syms, a, b):
@@ -1170,8 +1166,8 @@ def unigram_train_rounds(
     one map-only DP pass over vocab rows inside whole-stage codegen,
     one explode + hash agg for piece uses (map-side partials; bounded
     by |pieces|), one vocab-sized left join.  No lattice shuffles: the
-    per-word DP never leaves its row.  localCheckpoint per round cuts
-    the iterative lineage (the pagerank/kcore/bpe idiom)."""
+    per-word DP never leaves its row.  ``caches.iterate`` checkpoints
+    each round."""
     # One corpus-derived materialization: every later pass (seed count +
     # one DP pass per round) is vocab-sized and reads this checkpoint,
     # never the corpus again (the bpe_train discipline).
@@ -1223,7 +1219,7 @@ def unigram_train_rounds(
             .alias("cost_milli"),
         )
 
-    for _ in range(n_rounds):
+    def em_round(vocab: DataFrame) -> DataFrame:
         cost = recost(vocab)
         pm = cost.agg(
             F.map_from_entries(
@@ -1240,7 +1236,7 @@ def unigram_train_rounds(
             .groupBy("piece")
             .agg(F.sum("freq").cast("long").alias("use_cnt"))
         )
-        vocab = (
+        return (
             vocab.select("piece")
             .join(uses, "piece", "left")
             .select(
@@ -1249,9 +1245,9 @@ def unigram_train_rounds(
                 .cast("long")
                 .alias("cnt"),
             )
-            .localCheckpoint(eager=True)
         )
 
+    vocab = iterate(vocab, em_round, n_rounds)
     final_cost = recost(vocab)
     multi_kept = (
         vocab.where(F.length("piece") > 1)

@@ -1,6 +1,7 @@
 """The cache owner (odni_apache_beam_consumer_spark/caches.py): results are
 checkpointed before their inputs are freed, every registered frame is
-freed, and no module outside caches.py frees caches by hand."""
+freed, no module outside caches.py frees caches by hand, and ``iterate``
+returns a checkpoint-rooted frame whose stop probe costs no job."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from odni_apache_beam_consumer_spark.caches import Caches
+from odni_apache_beam_consumer_spark.caches import Caches, iterate
 from odni_apache_beam_consumer_spark.operators import dedup as D
 
 PKG = os.path.join(
@@ -86,6 +87,68 @@ def test_prefix_filter_pairs_leave_no_cache_behind(spark):
         assert len(_persisted_ids(spark) - base) == 3
     assert got == [(1, 2)]
     assert _persisted_ids(spark) - base == set()
+
+
+def _leaf(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_iterate_returns_checkpoint_rooted_frame(spark):
+    """Both ways a loop ends — the probe stops it early, or its rounds run
+    out — return a frame whose analyzed plan is one checkpoint leaf."""
+    start = spark.range(5).withColumn("n", F.lit(0))
+
+    def bump(df):
+        return df.select("id", (F.col("n") + 1).alias("n"))
+
+    early = iterate(start, bump, 10, until=F.max("n") >= 2)
+    assert _leaf(early) == "LogicalRDD"
+    assert early.agg(F.max("n")).first()[0] == 2
+    ran_out = iterate(start, bump, 3)
+    assert _leaf(ran_out) == "LogicalRDD"
+    assert sorted(r.n for r in ran_out.collect()) == [3] * 5
+    assert _leaf(iterate(start, bump, 0)) == "LogicalRDD"
+
+
+def test_iterate_stops_at_first_true_probe(spark):
+    calls = []
+
+    def bump(df):
+        calls.append(1)
+        return df.select((F.col("n") + 1).alias("n"))
+
+    out = iterate(spark.range(4).select(F.col("id").alias("n")), bump, 20, until=F.min("n") >= 5)
+    # Round r holds n = id + r, so min(n) = r and round 5 is the first true one.
+    assert len(calls) == 5
+    assert sorted(r.n for r in out.collect()) == [5, 6, 7, 8]
+    # An empty frame reads count = 0, so a count probe stops it at once.
+    calls.clear()
+    empty = spark.range(0).select(F.col("id").alias("n"))
+    iterate(empty, bump, 20, until=F.count(F.lit(1)) == 0)
+    assert len(calls) == 1
+
+
+def test_probed_round_costs_no_extra_job(spark):
+    """The stop probe rides on the round's eager checkpoint: a probed round
+    launches no more jobs than an unprobed eager checkpoint of the same
+    frame."""
+    sc = spark.sparkContext
+    base = spark.range(200).withColumn("k", F.col("id") % 7)
+
+    def step(df):
+        return df.groupBy("k").agg(F.count(F.lit(1)).alias("c")).select("k", F.col("c").alias("id"))
+
+    def jobs(group, run) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("iterate:plain", lambda: step(base).localCheckpoint(eager=True))
+    probed = jobs("iterate:probed", lambda: iterate(base, step, 1, until=F.sum("id") == 200))
+    assert 0 < probed <= plain, (probed, plain)
 
 
 def _hand_rolled_releases(path: str) -> list[str]:

@@ -3,7 +3,8 @@
 * the replay-file layout (staggered mtimes) — sources/replay.py;
 * the shuffle/state-partition scope — session.py;
 * the memory-sink drain of the plans — streaming/sinks.to_memory;
-* the snapshot pointer commit under streaming/ — streaming/materialized.py.
+* the snapshot pointer commit under streaming/ — streaming/materialized.py;
+* the checkpoint of an iterative loop's round — caches.iterate.
 """
 
 from __future__ import annotations
@@ -73,4 +74,36 @@ def test_replay_harness_decisions_have_one_owner():
     memory-sink drain under plans/, and no pointer file or pointer flip
     under streaming/ outside materialized.py."""
     offenders = _offenders(PKG)
+    assert not offenders, offenders
+
+
+def _loop_checkpoints(pkg: str) -> list[str]:
+    found = set()
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if not name.endswith(".py") or rel == "caches.py":
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for loop in ast.walk(tree):
+                if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                    continue
+                for stmt in loop.body + loop.orelse:
+                    for node in ast.walk(stmt):
+                        if (
+                            isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr == "localCheckpoint"
+                        ):
+                            found.add(f"{rel}:{node.lineno}: localCheckpoint( in a loop")
+    return sorted(found)
+
+
+def test_loop_checkpoints_have_one_owner():
+    """No ``localCheckpoint(`` call lexically inside a ``for``/``while``
+    body outside caches.py: lineage-cutting driver loops run through
+    ``caches.iterate``."""
+    offenders = _loop_checkpoints(PKG)
     assert not offenders, offenders

@@ -291,12 +291,13 @@ def test_kcore_empty_when_graph_too_sparse(spark):
 
 
 def test_iterative_drivers_release_their_caches(spark):
-    """kcore()/label_propagation() persist the symmetric edge list
-    internally; direct library callers (no bench.py clearCache around
-    them) must not accumulate cached RDDs across repeated calls."""
+    """kcore()/label_propagation()/pagerank()/kmeans() persist their
+    inputs internally; direct library callers (no bench.py clearCache
+    around them) must not accumulate cached RDDs across repeated calls."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "u BIGINT, v BIGINT"
     )
+    corpus = _vec_corpus(spark, [(0, [0.0, 0.1]), (1, [0.1, 0.0]), (50, [5.0, 5.0])], 2)
     import gc
     import time
 
@@ -307,12 +308,15 @@ def test_iterative_drivers_release_their_caches(spark):
     for _ in range(3):
         ml.kcore(edges, k=2, n_rounds=2).count()
         ml.label_propagation(edges, n_rounds=2).count()
-    # The explicitly persisted inputs (kcore: 1, lpa: 2 per call) are
-    # unpersisted synchronously.  What remains are the returned
-    # DataFrames' localCheckpoint blocks, reclaimed by the ContextCleaner
-    # once unreferenced — drive GC and poll for the async cleanup
-    # (empirically ~7 s; pre-fix, the leaked persist() inputs are pinned
-    # by live references and NEVER drain, so the deadline distinguishes).
+        ml.pagerank(edges, n_iters=3).count()
+        ml.kmeans(corpus, n_iters=2, centroid_every=50, dim=2).count()
+    # The explicitly persisted inputs (kcore: 1, lpa: 2, pagerank: 4,
+    # kmeans: 1 per call) are unpersisted synchronously.  What remains
+    # are the returned DataFrames' localCheckpoint blocks, reclaimed by
+    # the ContextCleaner once unreferenced — drive GC and poll for the
+    # async cleanup (empirically ~7 s; pre-fix, the leaked persist()
+    # inputs are pinned by live references and NEVER drain, so the
+    # deadline distinguishes).
     deadline = time.time() + 60
     while n_persisted() > base and time.time() < deadline:
         gc.collect()

@@ -2141,63 +2141,63 @@ def lsh_band_tradeoff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both odd by construction: +1000000 preserves parity), so truth
     # pairs survive sampling intact.
     corpus = dedup_corpus(spark, sf_dir).where(F.col("doc_id") % 2 == 0)
-    caches = Caches()
-    mh = caches.persist(
-        D.minhash_signatures(D.shingle_table(corpus, 3), 12), StorageLevel.MEMORY_AND_DISK
-    )
-    truth = caches.persist(
-        D.jaccard_prefix_filter_pairs(corpus, caches, shingle_words=3, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .withColumn("_t", F.lit(1)),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    tot = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_total"))
-    # ALL configs in ONE pass: tag each config's band rows with r and
-    # self-join once on (r, band, sig) — 4 separate config joins cost 4
-    # shuffles of the same signature table for no information gain.
-    bands = None
-    for r in _LSH_AUDIT_CONFIGS:
-        b = D.lsh_band_signatures(mh, r).withColumn(
-            "r", F.lit(r).cast("long")
+    with Caches() as caches:
+        mh = caches.persist(
+            D.minhash_signatures(D.shingle_table(corpus, 3), 12), StorageLevel.MEMORY_AND_DISK
         )
-        bands = b if bands is None else bands.unionByName(b)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "r", "band", "sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "r", "band", "sig")
-    cand = (
-        a.join(b, ["r", "band", "sig"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("r", "doc_a", "doc_b")
-        .distinct()
-    )
-    res = (
-        cand.join(truth, ["doc_a", "doc_b"], "left")
-        .groupBy("r")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidates"),
-            F.sum(F.coalesce(F.col("_t"), F.lit(0)))
-            .cast("long")
-            .alias("n_true_found"),
+        truth = caches.persist(
+            D.jaccard_prefix_filter_pairs(corpus, caches, shingle_words=3, threshold=0.5)
+            .select("doc_a", "doc_b")
+            .withColumn("_t", F.lit(1)),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("r").alias("rows_per_band"),
-            F.expr("CAST(12 DIV r AS BIGINT)").alias("n_bands"),
-            "n_candidates",
-            "n_true_found",
-            "n_true_total",
-            F.expr(
-                "CASE WHEN n_candidates = 0 THEN CAST(0 AS BIGINT) "
-                "ELSE CAST(n_true_found * 1000000 DIV n_candidates "
-                "AS BIGINT) END"
-            ).alias("precision_ppm"),
-            F.expr(
-                "CASE WHEN n_true_total = 0 THEN CAST(0 AS BIGINT) "
-                "ELSE CAST(n_true_found * 1000000 DIV n_true_total "
-                "AS BIGINT) END"
-            ).alias("recall_ppm"),
+        tot = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_total"))
+        # ALL configs in ONE pass: tag each config's band rows with r and
+        # self-join once on (r, band, sig) — 4 separate config joins cost 4
+        # shuffles of the same signature table for no information gain.
+        bands = None
+        for r in _LSH_AUDIT_CONFIGS:
+            b = D.lsh_band_signatures(mh, r).withColumn(
+                "r", F.lit(r).cast("long")
+            )
+            bands = b if bands is None else bands.unionByName(b)
+        a = bands.select(F.col("doc_id").alias("doc_a"), "r", "band", "sig")
+        b = bands.select(F.col("doc_id").alias("doc_b"), "r", "band", "sig")
+        cand = (
+            a.join(b, ["r", "band", "sig"])
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .select("r", "doc_a", "doc_b")
+            .distinct()
         )
-    )
-    return caches.result(res)
+        res = (
+            cand.join(truth, ["doc_a", "doc_b"], "left")
+            .groupBy("r")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_candidates"),
+                F.sum(F.coalesce(F.col("_t"), F.lit(0)))
+                .cast("long")
+                .alias("n_true_found"),
+            )
+            .crossJoin(F.broadcast(tot))
+            .select(
+                F.col("r").alias("rows_per_band"),
+                F.expr("CAST(12 DIV r AS BIGINT)").alias("n_bands"),
+                "n_candidates",
+                "n_true_found",
+                "n_true_total",
+                F.expr(
+                    "CASE WHEN n_candidates = 0 THEN CAST(0 AS BIGINT) "
+                    "ELSE CAST(n_true_found * 1000000 DIV n_candidates "
+                    "AS BIGINT) END"
+                ).alias("precision_ppm"),
+                F.expr(
+                    "CASE WHEN n_true_total = 0 THEN CAST(0 AS BIGINT) "
+                    "ELSE CAST(n_true_found * 1000000 DIV n_true_total "
+                    "AS BIGINT) END"
+                ).alias("recall_ppm"),
+            )
+        )
+        return caches.result(res)
 
 
 @query(

@@ -20,8 +20,10 @@ engines; averages are rounded after aggregation.
 
 from __future__ import annotations
 
+import math
 import sys
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -397,49 +399,47 @@ def pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-step plan looped by ``caches.iterate``; the symmetric graph has
     no dangling nodes, so no dangling-mass term.  3 rounds = 3 keyed
     exchanges over the edge list, each lineage-truncated."""
-    caches = Caches()
-    e0 = caches.persist(copurchase_edges(spark, sf_dir))
-    e = caches.persist(
-        e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Loop-invariant hoist (guide §2.4): the degree-annotated edge list
-    # e ⋈ deg never changes between rounds — persist it once instead of
-    # re-running the degree aggregation + join inside every round.
-    edeg = caches.persist(e.join(deg, "u"))
-    nv = deg.count()
-
-    def flow(ranks: DataFrame) -> DataFrame:
-        inflow = (
-            edeg.join(ranks.select(F.col("node").alias("u"), "rank_nano"), "u")
-            .select(
-                F.col("v").alias("node"),
-                F.expr("rank_nano DIV outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(
-                F.sum("c").alias("inflow"),
-                F.count(F.lit(1)).cast("long").alias("n_in_edges"),
-            )
+    with Caches() as caches:
+        e0 = caches.persist(copurchase_edges(spark, sf_dir))
+        e = caches.persist(
+            e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         )
-        return inflow.select(
-            "node",
-            (
-                F.lit(150000000 // nv)
-                + F.expr("(85 * inflow) DIV 100")
-            )
-            .cast("long")
-            .alias("rank_nano"),
-            "n_in_edges",
-        )
+        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
+        # Loop-invariant hoist (guide §2.4): the degree-annotated edge list
+        # e ⋈ deg never changes between rounds — persist it once instead of
+        # re-running the degree aggregation + join inside every round.
+        edeg = caches.persist(e.join(deg, "u"))
+        nv = deg.count()
 
-    ranks = deg.select(
-        F.col("u").alias("node"),
-        F.lit(1000000000 // nv).cast("long").alias("rank_nano"),
-    )
-    out = iterate(ranks, flow, _PR_ROUNDS)
-    caches.release()
-    return out
+        def flow(ranks: DataFrame) -> DataFrame:
+            inflow = (
+                edeg.join(ranks.select(F.col("node").alias("u"), "rank_nano"), "u")
+                .select(
+                    F.col("v").alias("node"),
+                    F.expr("rank_nano DIV outdeg").alias("c"),
+                )
+                .groupBy("node")
+                .agg(
+                    F.sum("c").alias("inflow"),
+                    F.count(F.lit(1)).cast("long").alias("n_in_edges"),
+                )
+            )
+            return inflow.select(
+                "node",
+                (
+                    F.lit(150000000 // nv)
+                    + F.expr("(85 * inflow) DIV 100")
+                )
+                .cast("long")
+                .alias("rank_nano"),
+                "n_in_edges",
+            )
+
+        ranks = deg.select(
+            F.col("u").alias("node"),
+            F.lit(1000000000 // nv).cast("long").alias("rank_nano"),
+        )
+        return iterate(ranks, flow, _PR_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -472,59 +472,59 @@ def pagerank(
     Dangling nodes (out-degree 0) are handled by renormalizing: their
     lost mass is re-spread uniformly each round, keeping sum(rank) = 1 —
     the standard power-iteration fix, computed as a 1-row aggregate."""
-    caches = Caches()
-    e = caches.persist(edges.select("u", "v"))
-    deg = caches.persist(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")))
-    # Loop-invariant hoist (guide §2.4, the pagerank_rounds r13 change
-    # propagated to the library driver): e ⋈ deg never changes between
-    # rounds — persist it once instead of re-joining every round.
-    edeg = caches.persist(e.join(deg, "u"))
-    nodes = caches.persist(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    nv = nodes.count()
-
-    def power_step(ranks: DataFrame) -> DataFrame:
-        # Dangling mass: rank held by nodes with no out-edges this round.
-        dangling = (
-            ranks.join(deg.withColumnRenamed("u", "node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            .first()["m"]
+    with Caches() as caches:
+        e = caches.persist(edges.select("u", "v"))
+        deg = caches.persist(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")))
+        # Loop-invariant hoist (guide §2.4, the pagerank_rounds r13 change
+        # propagated to the library driver): e ⋈ deg never changes between
+        # rounds — persist it once instead of re-joining every round.
+        edeg = caches.persist(e.join(deg, "u"))
+        nodes = caches.persist(
+            e.select(F.col("u").alias("node"))
+            .unionByName(e.select(F.col("v").alias("node")))
+            .distinct()
         )
-        base = (1.0 - damping) / nv + damping * dangling / nv
-        no_rank = F.lit(None).cast("double")
-        flowing = (
-            edeg.join(ranks.select(F.col("node").alias("u"), "rank"), "u")
-            .select(
-                F.col("v").alias("node"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-                no_rank.alias("old_rank"),
+        nv = nodes.count()
+
+        def power_step(ranks: DataFrame) -> DataFrame:
+            # Dangling mass: rank held by nodes with no out-edges this round.
+            dangling = (
+                ranks.join(deg.withColumnRenamed("u", "node"), "node", "left_anti")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
+                .first()["m"]
             )
-            # Every node has a rank row, so the one aggregation yields
-            # each node's inflow next to its previous rank.
-            .unionByName(ranks.select("node", no_rank.alias("c"), F.col("rank").alias("old_rank")))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"), F.max("old_rank").alias("old_rank"))
-        )
-        return flowing.select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-            ).alias("rank"),
-            "old_rank",
-        )
+            base = (1.0 - damping) / nv + damping * dangling / nv
+            no_rank = F.lit(None).cast("double")
+            flowing = (
+                edeg.join(ranks.select(F.col("node").alias("u"), "rank"), "u")
+                .select(
+                    F.col("v").alias("node"),
+                    (F.col("rank") / F.col("outdeg")).alias("c"),
+                    no_rank.alias("old_rank"),
+                )
+                # Every node has a rank row, so the one aggregation yields
+                # each node's inflow next to its previous rank.
+                .unionByName(
+                    ranks.select("node", no_rank.alias("c"), F.col("rank").alias("old_rank"))
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"), F.max("old_rank").alias("old_rank"))
+            )
+            return flowing.select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
+                ).alias("rank"),
+                "old_rank",
+            )
 
-    ranks = iterate(
-        nodes.select("node", F.lit(1.0 / nv).alias("rank")),
-        power_step,
-        n_iters,
-        until=None if tol is None else F.sum(F.abs(F.col("rank") - F.col("old_rank"))) < tol,
-    )
-    caches.release()
-    return ranks.select("node", "rank")
+        return iterate(
+            nodes.select("node", F.lit(1.0 / nv).alias("rank")),
+            power_step,
+            n_iters,
+            until=None if tol is None else F.sum(F.abs(F.col("rank") - F.col("old_rank"))) < tol,
+        ).select("node", "rank")
 
 
 def kmeans(
@@ -548,47 +548,45 @@ def kmeans(
     ``caches.iterate`` loops the rounds; each carries the previous
     centroid, so convergence (max L2 movement below ``tol``) is read
     from the round's own checkpoint."""
-    caches = Caches()
-    v = caches.persist(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
+    with Caches() as caches:
+        v = caches.persist(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
 
-    def lloyd_step(cents: DataFrame) -> DataFrame:
-        c = cents.select("cid", "cvec", dot("cvec", "cvec").alias("cdd"))
-        score = F.col("cdd") - 2 * dot("vec", "cvec")
-        w = W.partitionBy("vid").orderBy(score.asc(), F.col("cid").asc())
-        assigned = (
-            v.crossJoin(F.broadcast(c))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vid", "cid", "vec", "cvec")
-        )
-        return assigned.groupBy("cid").agg(
-            F.array(
-                *[
-                    F.round(F.avg(F.element_at(F.col("vec"), i + 1)), 6)
-                    for i in range(dim)
-                ]
-            ).alias("cvec"),
-            F.count(F.lit(1)).alias("n_members"),
-            # every member row carries its centroid's old vector
-            F.max("cvec").alias("old_cvec"),
-        )
+        def lloyd_step(cents: DataFrame) -> DataFrame:
+            c = cents.select("cid", "cvec", dot("cvec", "cvec").alias("cdd"))
+            score = F.col("cdd") - 2 * dot("vec", "cvec")
+            w = W.partitionBy("vid").orderBy(score.asc(), F.col("cid").asc())
+            assigned = (
+                v.crossJoin(F.broadcast(c))
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("vid", "cid", "vec", "cvec")
+            )
+            return assigned.groupBy("cid").agg(
+                F.array(
+                    *[
+                        F.round(F.avg(F.element_at(F.col("vec"), i + 1)), 6)
+                        for i in range(dim)
+                    ]
+                ).alias("cvec"),
+                F.count(F.lit(1)).alias("n_members"),
+                # every member row carries its centroid's old vector
+                F.max("cvec").alias("old_cvec"),
+            )
 
-    move = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("cvec"), F.col("old_cvec"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        move = F.sqrt(
+            F.aggregate(
+                F.zip_with(F.col("cvec"), F.col("old_cvec"), lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
         )
-    )
-    cents = iterate(
-        v.where(F.col("vid") % centroid_every == 0)
-        .select(F.col("vid").alias("cid"), F.col("vec").alias("cvec")),
-        lloyd_step,
-        n_iters,
-        until=None if tol is None else F.max(move) < tol,
-    )
-    caches.release()
-    return cents.select("cid", "cvec", "n_members")
+        return iterate(
+            v.where(F.col("vid") % centroid_every == 0)
+            .select(F.col("vid").alias("cid"), F.col("vec").alias("cvec")),
+            lloyd_step,
+            n_iters,
+            until=None if tol is None else F.max(move) < tol,
+        ).select("cid", "cvec", "n_members")
 
 
 _KM_ROUNDS = 3
@@ -624,9 +622,12 @@ def kmeans_lloyd_rounds(
     window-ranked crossJoin shuffled k copies of every vector per
     round), then ONE hash aggregation with k groups x (dim+1) integer
     columns — the exchange is k-sized at any corpus size, and the
-    per-dim FLOOR/SUM partials combine map-side.  localCheckpoint per
-    round truncates the iterative lineage; the corpus persist is
-    released before return (test_ml_loops cache-hygiene discipline).
+    per-dim FLOOR/SUM partials combine map-side.  No round builds on
+    the one before in the plan — each reads the persisted corpus with
+    the centroids as kernel literals — so there is no lineage to cut;
+    only the final round's k-row stats are checkpointed, and the corpus
+    persist is released before return (test_ml_loops cache-hygiene
+    discipline).
 
     ``seed_ids``: explicit literal centroid seeds — the FIXED-K
     production shape (k chosen by the deployment, not derived from the
@@ -647,81 +648,81 @@ def kmeans_lloyd_rounds(
     # thousands of row groups and spread() is a no-op.  The repartition
     # cannot shift results: assignment is per-row and the centroid
     # rebuild sums exact FLOOR integers (order-independent).
-    caches = Caches()
-    v = caches.persist(
-        spread(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
-    )
-    # r14 (guide §4.2): the per-round argmin + integer-stat pass runs as
-    # ONE numpy mapInArrow kernel instead of the interpreted Catalyst
-    # higher-order fold (r13's documented #1 deferred item).  The kernel
-    # reproduces the fold's IEEE arithmetic exactly — sequential
-    # dimension-order accumulation, (score, cid) argmin tie-break, exact
-    # FLOOR int64 stats — see operators/kmeans_kernel.py; equivalence is
-    # pinned bitwise against the retained HOF reference implementation
-    # (tests/test_r14_optimizations.py) on top of the unchanged Python-
-    # replay and oracle-hash gates.  Centroids cross the driver as k-row
-    # exact-integer stats per round (the parameter-server shape — the
-    # same k-sized materialization localCheckpoint did eagerly before),
-    # so each round's plan is: cached scan -> ArrowEval (emits <= k
-    # partial rows per batch) -> ONE k-group integer aggregation.
-    seed_rows = sorted(
-        (int(r["cid"]), [float(x) for x in r["vec"]])
-        for r in v.where(seed_pred)
-        .select(F.col("vid").alias("cid"), "vec")
-        .collect()
-    )
-    cids = [c for c, _ in seed_rows]
-    cvecs = [cv for _, cv in seed_rows]
-    out_schema = (
-        "cid long, "
-        + ", ".join(f"s{i} long" for i in range(dim))
-        + ", cnt long"
-    )
-    stats = None
-    for rnd in range(n_rounds):
-        kern = assign_stats_kernel(cids, cvecs, dim, _KM_SCALE)
-        stats = (
-            v.select("vec")
-            .mapInArrow(kern, out_schema)
-            .groupBy("cid")
-            .agg(
-                *[
-                    F.sum(f"s{i}").cast("long").alias(f"s{i}")
-                    for i in range(dim)
-                ],
-                F.sum("cnt").cast("long").alias("n_members"),
-            )
+    with Caches() as caches:
+        v = caches.persist(
+            spread(with_vec(corpus, vec_col).select(F.col(id_col).alias("vid"), "vec"))
         )
-        if rnd < n_rounds - 1:
-            # k-row exact-integer collect; the new centroid component
-            # CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6) is one IEEE
-            # divide — identical in Python and Catalyst.
-            rows = sorted(
-                (int(r["cid"]), r) for r in stats.collect()
+        # r14 (guide §4.2): the per-round argmin + integer-stat pass runs as
+        # ONE numpy mapInArrow kernel instead of the interpreted Catalyst
+        # higher-order fold (r13's documented #1 deferred item).  The kernel
+        # reproduces the fold's IEEE arithmetic exactly — sequential
+        # dimension-order accumulation, (score, cid) argmin tie-break, exact
+        # FLOOR int64 stats — see operators/kmeans_kernel.py; equivalence is
+        # pinned bitwise against the retained HOF reference implementation
+        # (tests/test_r14_optimizations.py) on top of the unchanged Python-
+        # replay and oracle-hash gates.  Centroids cross the driver as k-row
+        # exact-integer stats per round (the parameter-server shape — the
+        # same k-sized materialization localCheckpoint did eagerly before),
+        # so each round's plan is: cached scan -> ArrowEval (emits <= k
+        # partial rows per batch) -> ONE k-group integer aggregation.
+        seed_rows = sorted(
+            (int(r["cid"]), [float(x) for x in r["vec"]])
+            for r in v.where(seed_pred)
+            .select(F.col("vid").alias("cid"), "vec")
+            .collect()
+        )
+        cids = [c for c, _ in seed_rows]
+        cvecs = [cv for _, cv in seed_rows]
+        out_schema = (
+            "cid long, "
+            + ", ".join(f"s{i} long" for i in range(dim))
+            + ", cnt long"
+        )
+        stats = None
+        for rnd in range(n_rounds):
+            kern = assign_stats_kernel(cids, cvecs, dim, _KM_SCALE)
+            stats = (
+                v.select("vec")
+                .mapInArrow(kern, out_schema)
+                .groupBy("cid")
+                .agg(
+                    *[
+                        F.sum(f"s{i}").cast("long").alias(f"s{i}")
+                        for i in range(dim)
+                    ],
+                    F.sum("cnt").cast("long").alias("n_members"),
+                )
             )
-            cids = [c for c, _ in rows]
-            cvecs = [
-                [
-                    float(r[f"s{i}"]) / (float(r["n_members"]) * float(_KM_SCALE))
-                    for i in range(dim)
+            if rnd < n_rounds - 1:
+                # k-row exact-integer collect; the new centroid component
+                # CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6) is one IEEE
+                # divide — identical in Python and Catalyst.
+                rows = sorted(
+                    (int(r["cid"]), r) for r in stats.collect()
+                )
+                cids = [c for c, _ in rows]
+                cvecs = [
+                    [
+                        float(r[f"s{i}"]) / (float(r["n_members"]) * float(_KM_SCALE))
+                        for i in range(dim)
+                    ]
+                    for _, r in rows
                 ]
-                for _, r in rows
-            ]
-    # r14 (guide §5): the final round's stats are k rows — checkpoint
-    # them so the returned plan never re-runs the assignment kernel.
-    stats = caches.result(stats)
-    return stats.select(
-        "cid",
-        "n_members",
-        F.posexplode(F.array(*[F.col(f"s{i}") for i in range(dim)])).alias(
-            "pos0", "sum_micro"
-        ),
-    ).select(
-        "cid",
-        (F.col("pos0") + 1).cast("int").alias("pos"),
-        "sum_micro",
-        "n_members",
-    )
+        # r14 (guide §5): the final round's stats are k rows — checkpoint
+        # them so the returned plan never re-runs the assignment kernel.
+        stats = caches.result(stats)
+        return stats.select(
+            "cid",
+            "n_members",
+            F.posexplode(F.array(*[F.col(f"s{i}") for i in range(dim)])).alias(
+                "pos0", "sum_micro"
+            ),
+        ).select(
+            "cid",
+            (F.col("pos0") + 1).cast("int").alias("pos"),
+            "sum_micro",
+            "n_members",
+        )
 
 
 def _kmeans_lloyd_oracle(
@@ -817,32 +818,30 @@ def label_propagation(edges: DataFrame, n_rounds: int = 2) -> DataFrame:
     consumes it twice) — when the caller passes an expensive subtree
     (the co-purchase self-join), skipping that persist re-runs it for
     both union branches."""
-    caches = Caches()
-    edges = caches.persist(edges)
-    sym = caches.persist(
-        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    labels = sym.select("u").distinct().select(
-        F.col("u").alias("vertex"), F.col("u").alias("label")
-    )
-
-    def adopt(labels: DataFrame) -> DataFrame:
-        neigh = sym.join(
-            labels.withColumnRenamed("vertex", "u"), "u"
-        ).select(F.col("v").alias("vertex"), "label")
-        counts = neigh.groupBy("vertex", "label").agg(
-            F.count(F.lit(1)).alias("n")
+    with Caches() as caches:
+        edges = caches.persist(edges)
+        sym = caches.persist(
+            edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         )
-        w = W.partitionBy("vertex").orderBy(F.desc("n"), F.asc("label"))
-        return (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("vertex", "label")
+        labels = sym.select("u").distinct().select(
+            F.col("u").alias("vertex"), F.col("u").alias("label")
         )
 
-    labels = iterate(labels, adopt, n_rounds)
-    caches.release()
-    return labels
+        def adopt(labels: DataFrame) -> DataFrame:
+            neigh = sym.join(
+                labels.withColumnRenamed("vertex", "u"), "u"
+            ).select(F.col("v").alias("vertex"), "label")
+            counts = neigh.groupBy("vertex", "label").agg(
+                F.count(F.lit(1)).alias("n")
+            )
+            w = W.partitionBy("vertex").orderBy(F.desc("n"), F.asc("label"))
+            return (
+                counts.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1)
+                .select("vertex", "label")
+            )
+
+        return iterate(labels, adopt, n_rounds)
 
 
 @query(
@@ -904,37 +903,36 @@ def kcore(edges: DataFrame, k: int = 3, n_rounds: int | None = None) -> DataFram
     ``caches.iterate`` checkpoints each round.  Rounds are bounded by the
     peel depth (typically small); at 100 TB each round's edge filter is
     the dominant cost and shrinks monotonically."""
-    caches = Caches()
-    sym = caches.persist(
-        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-
-    def degrees(s: DataFrame) -> DataFrame:
-        return s.where("keep").groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-
-    def peel(s: DataFrame) -> DataFrame:
-        # Keep every edge of the round's input, flagged by whether both
-        # endpoints survive, so the probe sees what this round peeled.
-        deg = degrees(s)
-        return (
-            s.where("keep")
-            .join(deg.select("u", F.col("d").alias("du")), "u")
-            .join(deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v")
-            .select("u", "v", ((F.col("du") >= k) & (F.col("dv") >= k)).alias("keep"))
+    with Caches() as caches:
+        sym = caches.persist(
+            edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         )
 
-    # A full peel ends within |V| rounds; the probe stops it at the first
-    # round that peels nothing.
-    sym = iterate(
-        sym.withColumn("keep", F.lit(True)),
-        peel,
-        sys.maxsize if n_rounds is None else n_rounds - 1,
-        until=None if n_rounds is not None else F.count(F.when(~F.col("keep"), 1)) == 0,
-    )
-    caches.release()
-    return degrees(sym).where(F.col("d") >= k).select(
-        F.col("u").alias("vertex"), F.col("d").alias("degree")
-    )
+        def degrees(s: DataFrame) -> DataFrame:
+            return s.where("keep").groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+
+        def peel(s: DataFrame) -> DataFrame:
+            # Keep every edge of the round's input, flagged by whether both
+            # endpoints survive, so the probe sees what this round peeled.
+            deg = degrees(s)
+            return (
+                s.where("keep")
+                .join(deg.select("u", F.col("d").alias("du")), "u")
+                .join(deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v")
+                .select("u", "v", ((F.col("du") >= k) & (F.col("dv") >= k)).alias("keep"))
+            )
+
+        # A full peel ends within |V| rounds; the probe stops it at the first
+        # round that peels nothing.
+        sym = iterate(
+            sym.withColumn("keep", F.lit(True)),
+            peel,
+            sys.maxsize if n_rounds is None else n_rounds - 1,
+            until=None if n_rounds is not None else F.count(F.when(~F.col("keep"), 1)) == 0,
+        )
+        return degrees(sym).where(F.col("d") >= k).select(
+            F.col("u").alias("vertex"), F.col("d").alias("degree")
+        )
 
 
 @query(
@@ -1338,55 +1336,27 @@ def logreg_gd_rounds(
     DataFrame — separated from the fixture loader so tests can replay it
     on synthetic corpora against the plain-Python reference
     (tests/test_ml_loops.py::py_logreg_gd)."""
-    caches = Caches()
-    rows = caches.persist(rows)
     k = dim + 1
     w = [0.0] * k
-    for _ in range(n_rounds - 1):
-        rec = rows.agg(
-            *_logreg_grad_cols(w, dim=dim),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        ).collect()[0]  # 1 row x k+1 longs: parameter-server weight sync
-        n = rec["n"]
-        w = [
-            w[j] - _LR_STEP * (float(rec[f"g{j}"]) / (float(n) * float(_LR_SCALE)))
-            for j in range(k)
-        ]
-    # r14 (guide §5): the final-round gradient is 1 row — checkpoint it
-    # so the returned plan never re-runs the feature pipeline.
-    g_final = caches.result(
-        rows.agg(
-            *_logreg_grad_cols(w, dim=dim),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-    )
-    per_pos = g_final.select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j + 1).cast("long").alias("pos"),
-                        F.col(f"g{j}").alias("grad_micro"),
-                        (
-                            F.lit(float(w[j]))
-                            - F.lit(_LR_STEP)
-                            * (
-                                F.col(f"g{j}").cast("double")
-                                / (F.col("n").cast("double") * float(_LR_SCALE))
-                            )
-                        ).alias("w_final"),
-                        F.col("n").alias("n_rows"),
-                    )
-                    for j in range(k)
-                ]
-            )
-        )
-    )
-    return per_pos.select(
-        "pos",
-        "grad_micro",
-        F.floor(F.col("w_final") * 1000000000.0).cast("long").alias("w_nano"),
-        "n_rows",
+    with Caches() as caches:
+        rows = caches.persist(rows)
+        for _ in range(n_rounds):
+            rec = rows.agg(
+                *_logreg_grad_cols(w, dim=dim),
+                F.count(F.lit(1)).cast("long").alias("n"),
+            ).collect()[0]  # 1 row x k+1 longs: parameter-server weight sync
+            n = rec["n"]
+            w = [
+                w[j] - _LR_STEP * (float(rec[f"g{j}"]) / (float(n) * float(_LR_SCALE)))
+                for j in range(k)
+            ]
+    # A pandas frame crosses to the JVM as Arrow; a list of tuples would
+    # be unpickled by a Python worker in every job that reads the result.
+    return rows.sparkSession.createDataFrame(
+        pd.DataFrame(
+            [(j + 1, rec[f"g{j}"], math.floor(w[j] * 1000000000.0), n) for j in range(k)]
+        ),
+        "pos BIGINT, grad_micro BIGINT, w_nano BIGINT, n_rows BIGINT",
     )
 
 
@@ -1415,10 +1385,9 @@ def logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay exact below 2^53 / 1e6 rows-x-features; beyond that, drop
     _LR_SCALE or shard the sum — documented, not silent.
 
-    The final round runs entirely inside the returned plan (gradient
-    agg + weight arithmetic as columns), so the driver's noop-sink
-    execution exercises the real aggregation; only the first
-    {_LR_ROUNDS - 1} weight syncs collect."""
+    All {_LR_ROUNDS} rounds collect their gradient row and apply the one
+    Python weight update; the returned frame is the final round's
+    {_LR_DIM + 1} rows, built on the driver."""
     return logreg_gd_rounds(_logreg_rows(spark, sf_dir))
 
 
@@ -1631,67 +1600,51 @@ def bradley_terry_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the only work that scales with match volume; every GD
     round after it is constant-size
     (600 rows x a 25-literal strength array via element_at, then a
-    25-group weighted integer agg).  The final round runs inside the
-    returned plan (n_matches = half the over-() window sum of pair
-    counts on 25 rows, no collect)."""
+    25-group weighted integer agg).  Every round collects its <= 25
+    gradient rows and applies the one Python strength update; the
+    returned frame is the final round's rows, built on the driver."""
     m, players = _bt_matches(spark, sf_dir)
-    # r14 (guide §5): eager localCheckpoint, not persist — m is <=
-    # K*(K-1) = 600 sufficient-stat rows, and the old persist was
-    # unpersisted BEFORE the returned (lazy) final round executed, so
-    # the noop/driver pass silently re-ran the whole match build (the
-    # only corpus-scaled stage) a second time.  The checkpoint
-    # materializes once and every consumer — the GD rounds AND the
-    # returned plan — reads the 600 cached rows; nothing leaks to the
-    # caller (the kcore/label_propagation final-round discipline).
-    m = m.localCheckpoint(eager=True)
-    # k derived from the actual player table (metadata-sized count, the
+    # k from the actual player table (metadata-sized collect, the
     # parameter-server probe class) — a hardcoded 25 would index
-    # element_at out of range if a synthesis ever yields more brands
-    # (r12 advice).
-    k = players.count()
+    # element_at out of range if a synthesis ever yields more brands.
+    brands = dict(players.select("idx", "brand").collect())
+    k = len(brands)
     s = [0.0] * k
-    for _ in range(_BT_ROUNDS - 1):
-        rows = (
-            _bt_exploded(m, s)
-            .groupBy("idx")
-            .agg(
-                F.sum("c").cast("long").alias("g"),
-                F.sum("n_pair").cast("long").alias("cnt"),
-            )
-            .collect()
-        )  # <= 25 rows: parameter-server strength sync
-        n = sum(r["cnt"] for r in rows) // 2
-        g = {r["idx"]: r["g"] for r in rows}
-        s = [
-            s[j]
-            - _LR_STEP
-            * (float(g.get(j + 1, 0)) / (float(n) * float(_LR_SCALE)))
-            for j in range(k)
-        ]
-    g_final = (
-        _bt_exploded(m, s)
-        .groupBy("idx")
-        .agg(
-            F.sum("c").cast("long").alias("g"),
-            F.sum("n_pair").cast("long").alias("cnt"),
-        )
-    )
-    s_arr = F.array(*[F.lit(float(v)) for v in s])
-    w_all = W.partitionBy()
-    n_tot = F.call_function("div", F.sum("cnt").over(w_all), F.lit(2))
-    s_final = F.element_at(s_arr, F.col("idx")) - F.lit(_LR_STEP) * (
-        F.col("g").cast("double")
-        / (n_tot.cast("double") * float(_LR_SCALE))
-    )
-    return (
-        g_final.join(F.broadcast(players), "idx")
-        .select(
-            "brand",
-            F.col("g").alias("grad_micro"),
-            F.floor(s_final * 1000000000.0).cast("long").alias("strength_nano"),
-            F.col("cnt").alias("n_match_rows"),
-            n_tot.cast("long").alias("n_matches"),
-        )
+    with Caches() as caches:
+        m = caches.persist(m)
+        for _ in range(_BT_ROUNDS):
+            rows = (
+                _bt_exploded(m, s)
+                .groupBy("idx")
+                .agg(
+                    F.sum("c").cast("long").alias("g"),
+                    F.sum("n_pair").cast("long").alias("cnt"),
+                )
+                .collect()
+            )  # <= 25 rows: parameter-server strength sync
+            n = sum(r["cnt"] for r in rows) // 2
+            g = {r["idx"]: r["g"] for r in rows}
+            s = [
+                s[j]
+                - _LR_STEP
+                * (float(g.get(j + 1, 0)) / (float(n) * float(_LR_SCALE)))
+                for j in range(k)
+            ]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (
+                    brands[r["idx"]],
+                    r["g"],
+                    math.floor(s[r["idx"] - 1] * 1000000000.0),
+                    r["cnt"],
+                    n,
+                )
+                for r in rows
+            ]
+        ),
+        "brand STRING, grad_micro BIGINT, strength_nano BIGINT,"
+        " n_match_rows BIGINT, n_matches BIGINT",
     )
 
 
@@ -2960,14 +2913,14 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash portability end to end: the Gram is exact BIGINTs (per-row
     FLOOR-microquantized products, order-independent sums); every
-    matvec component folds its 16 terms in ascending-j order (Catalyst
-    aggregate() with exact 0.0 init vs DuckDB list_reduce — bitwise
-    equal, the kaplan_meier fold argument); the norm folds squares in
-    ascending-pos order and sqrt is correctly rounded.  The driver
-    replays rounds 1..{_PCA_ROUNDS - 1} in Python floats (same fold
-    orders) from ONE 256-long collect of the Gram — the model-statistic
-    collect class — and the FINAL round (matvec, norm, normalize) runs
-    inside the returned plan.
+    matvec component folds its 16 terms in ascending-j order (a Python
+    loop with exact 0.0 init vs DuckDB list_reduce — bitwise equal, the
+    kaplan_meier fold argument); the norm folds squares in ascending-pos
+    order and sqrt is correctly rounded (math.sqrt, not ``** 0.5``: C
+    pow carries no such promise).  The driver runs all {_PCA_ROUNDS}
+    rounds in Python floats from ONE 256-long collect of the Gram — the
+    model-statistic collect class — and returns the final unit vector
+    as {_PCA_DIM} rows built on the driver.
 
     Scale shape: the corpus work is exactly one pass — the double
     posexplode fans each vector's d^2 = {_PCA_DIM * _PCA_DIM} products
@@ -2976,15 +2929,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d^2 per round, corpus-independent, which is why power iteration is
     THE distributed eigensolver shape."""
     d = _PCA_DIM
-    # r14 (guide §5): eager localCheckpoint, not persist — the Gram is
-    # d^2 = 256 rows, and the old persist was unpersisted before the
-    # returned (lazy) final matvec executed, so the driver pass re-ran
-    # the entire corpus Gram aggregation a second time.
-    gram = _pca_gram(spark, sf_dir).localCheckpoint(eager=True)
-    rows = gram.collect()  # 256 longs: the Gram IS the model statistic
-    G = {(r["i"], r["j"]): r["g"] for r in rows}
+    # 256 longs: the Gram IS the model statistic
+    G = {(r["i"], r["j"]): r["g"] for r in _pca_gram(spark, sf_dir).collect()}
     q = [1.0] + [0.0] * (d - 1)
-    for _ in range(_PCA_ROUNDS - 1):
+    for _ in range(_PCA_ROUNDS):
         u = []
         for i in range(1, d + 1):
             acc = 0.0
@@ -2994,54 +2942,17 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = 0.0
         for x in u:  # ascending-pos fold
             acc = acc + x * x
-        nrm = acc**0.5
+        nrm = math.sqrt(acc)
         q = [x / nrm for x in u]
-    q_arr = F.array(*[F.lit(float(x)) for x in q])
-    terms = gram.select(
-        "i",
-        F.struct(
-            "j",
-            (F.col("g").cast("double") * F.element_at(q_arr, F.col("j"))).alias(
-                "t"
-            ),
-        ).alias("jt"),
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (i + 1, math.floor(x * 1000000000.0), math.floor(nrm))
+                for i, x in enumerate(q)
+            ]
+        ),
+        "pos BIGINT, v_nano BIGINT, lambda_q BIGINT",
     )
-    u_df = terms.groupBy("i").agg(
-        F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list("jt")), lambda s: s["t"]
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("u")
-    )
-    one = u_df.groupBy().agg(
-        F.sort_array(F.collect_list(F.struct("i", "u"))).alias("a")
-    ).select(
-        "a",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("a"), lambda s: s["u"] * s["u"]),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ).alias("nrm"),
-    )
-    out = one.select(
-        F.inline(
-            F.transform(
-                F.col("a"),
-                lambda s: F.struct(
-                    s["i"].cast("long").alias("pos"),
-                    F.floor((s["u"] / F.col("nrm")) * F.lit(1000000000.0))
-                    .cast("long")
-                    .alias("v_nano"),
-                    F.floor(F.col("nrm")).cast("long").alias("lambda_q"),
-                ),
-            )
-        )
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -178,3 +178,44 @@ def test_only_the_cache_owner_releases_caches():
             if name.endswith(".py") and path != os.path.join(PKG, "caches.py"):
                 offenders += _hand_rolled_releases(path)
     assert not offenders, offenders
+
+
+def _named_owners(path: str) -> list[str]:
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, (ast.Assign, ast.AnnAssign, ast.NamedExpr))
+            and isinstance(node.value, ast.Call)
+            and isinstance(node.value.func, ast.Name)
+            and node.value.func.id == "Caches"
+        ):
+            found.append(f"{path}:{node.lineno}: name = Caches()")
+    return found
+
+
+def test_every_named_cache_owner_is_a_with_block():
+    """An owner bound by assignment releases only on the paths that reach
+    its ``result``/``release`` call, so a round that raises leaks every
+    frame it persisted; ``with Caches() as caches:`` releases on every
+    exit.  Inline ``Caches()`` arguments are not names and stay allowed."""
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                offenders += _named_owners(os.path.join(root, name))
+    assert not offenders, offenders
+
+
+def test_trainer_that_raises_leaves_no_cache_behind(spark):
+    """A logreg round over feature arrays shorter than dim + 1 sums null
+    gradients and the weight update raises; the persisted input is
+    still freed."""
+    from odni_apache_beam_consumer_spark.plans import ml
+
+    rows = spark.createDataFrame([(1, [1.0, 0.5]), (0, [1.0, -0.5])], "y BIGINT, x ARRAY<DOUBLE>")
+    base = _persisted_ids(spark)
+    with pytest.raises(TypeError):
+        ml.logreg_gd_rounds(rows, dim=4)
+    assert _persisted_ids(spark) - base == set()

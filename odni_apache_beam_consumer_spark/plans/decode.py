@@ -199,14 +199,17 @@ def _orders_change_set(
     # Trailing garbage JSON, an unknown op, and a delete missing its
     # before image — parse_debezium must quarantine all three
     # (_corrupt), not drop or apply them.
-    malformed = o.sparkSession.createDataFrame(
-        [
-            ("{not json at all",),
-            ('{"op":"x","ts_ms":1,"after":{"o_orderkey":1}}',),
-            ('{"op":"d","ts_ms":2}',),
-        ],
-        "v STRING",
-    ).select(F.col("v").cast("binary").alias("value"))
+    # A literal projection, not a Python list: a list-built frame runs a
+    # Python worker in every job that reads it.
+    malformed = o.sparkSession.range(1).select(
+        F.explode(
+            F.array(
+                F.lit("{not json at all"),
+                F.lit('{"op":"x","ts_ms":1,"after":{"o_orderkey":1}}'),
+                F.lit('{"op":"d","ts_ms":2}'),
+            ).cast("array<binary>")
+        ).alias("value")
+    )
     updates = o.where(F.col("o_orderkey") % 10 == 0).select(
         debezium_envelope(
             "u",
@@ -260,8 +263,9 @@ def cdc_debezium_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: envelope parse is map-side from_json; each apply is one
     keyed window over |snapshot| + |delta| — the MERGE INTO shape on a
     real table format; re-deliveries take the merger's replay fast path
-    (one keyed winner-check join, NO snapshot rewrite — the join IS the
-    LWW comparison, so the no-op is detected, not assumed).  State is
+    (the same merge pass finds no delta row among the winners and
+    commits nothing — the window IS the LWW comparison, so the no-op is
+    detected, not assumed).  State is
     the table itself, not operator memory, so the horizon is unbounded
     (the CDC contract) without any watermark."""
     from odni_apache_beam_consumer_spark.streaming import cdc as C
@@ -819,9 +823,10 @@ def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1-row max-key collect is metadata-sized (the documented
     sampling.py:137 class).  Scale shape: the merges are keyed
     windows as in cdc_debezium_apply; the GC itself is one
-    filter-and-rewrite of the snapshot under the crash-safe
-    write-then-pointer-flip ordering (on a real table format, a
-    partition-pruned DELETE WHERE)."""
+    filter-and-rewrite of the snapshot, committed as the next table
+    version (on a real table format, a partition-pruned DELETE WHERE).
+    The replay takes the stream's NEXT batch id, 3: the GC's version
+    must not shadow it."""
     from odni_apache_beam_consumer_spark.streaming import cdc as C
 
     o = _cdc_orders(spark, sf_dir)
@@ -843,7 +848,7 @@ def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
         C.expire_tombstones(
             spark, store, horizon_ms=now_ms - cutoff, now_ms=now_ms
         )
-        merger(b_u, 4)  # in-horizon replay of the pre-delete update
+        merger(b_u, 3)  # in-horizon replay of the pre-delete update
         out = C.read_current(spark, store)
         return out.select(
             "o_orderkey", "o_orderstatus", "price_cents", "ts_ms"

@@ -1212,7 +1212,11 @@ def reachability_frontier_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     visited = iterate(
-        spark.createDataFrame([(int(seed), 0, True)], "pk long, hop int, new boolean"),
+        spark.range(1).select(
+            F.lit(int(seed)).cast("long").alias("pk"),
+            F.lit(0).alias("hop"),
+            F.lit(True).alias("new"),
+        ),
         expand,
         6,
         until=F.count(F.when(F.col("new"), 1)) == 0,

@@ -17,7 +17,6 @@ IEEE ops), with no ROUND half-tie exposure.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,8 +59,9 @@ def transactional_table_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["c_custkey", "c_name", "c_mktsegment", "c_acctbal"]
     c = load_table(spark, sf_dir, "customer").select(*cols)
-    store = tempfile.mkdtemp(prefix="txtable_dual_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txtable_dual_", ignore_cleanup_errors=True
+    ) as store:
         t = TransactionalTable(spark, store)
         t.create(c.where(F.col("c_custkey") % 2 == 0))
         t.append(c.where(F.col("c_custkey") % 2 == 1))
@@ -80,8 +80,6 @@ def transactional_table_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(len(t.versions())).cast("long").alias("n_versions"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(
@@ -138,8 +136,9 @@ def partitioned_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(3)
         .collect()
     ]
-    path = tempfile.mkdtemp(prefix="gdpr_dual_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gdpr_dual_", ignore_cleanup_errors=True
+    ) as path:
         storage.write_date_partitioned(e, path, "ts")
         storage.delete_keys_partitioned(spark, path, "user_id", victims)
         out = (
@@ -154,8 +153,6 @@ def partitioned_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -195,8 +192,9 @@ def table_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    store = tempfile.mkdtemp(prefix="retention_dual_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="retention_dual_", ignore_cleanup_errors=True
+    ) as store:
         t = TransactionalTable(spark, store)
         t.create(e.where(F.pmod("event_id", F.lit(5)) == 0))
         for i in range(1, 5):
@@ -230,5 +228,3 @@ def table_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_versions_expired", F.lit(3).cast("long"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)

@@ -1,10 +1,15 @@
 """Batch-observable duals of the streaming commit protocols.
 
-The streaming subsystem's exactly-once machinery (incremental
-materialized-view maintenance, streaming/materialized.py; idempotent
-parquet sink, streaming/sinks.py) is pytest-covered through real
-readStream pipelines, but foreachBatch functions are plain
-``(DataFrame, batch_id)`` callables — Structured Streaming guarantees
+The streaming subsystem's exactly-once machinery is pytest-covered
+through real readStream pipelines:
+
+* incremental materialized-view maintenance (streaming/materialized.py),
+  whose batches commit as transactional-table versions (txtable.py)
+  under the op_id ``batch-<batch_id>``;
+* the idempotent parquet sink (streaming/sinks.py), with its per-batch
+  marker files.
+
+But foreachBatch functions are plain ``(DataFrame, batch_id)`` callables — Structured Streaming guarantees
 nothing about them beyond calling them with stable batch ids, possibly
 more than once.  That makes their whole contract batch-replayable: these
 queries drive the IDENTICAL production code over a deterministic split
@@ -77,8 +82,9 @@ def materialized_view_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
     plus one keyed merge agg over |snapshot| + |delta| — the linear-in-
     versions incremental-view cost; the convergence readout itself is a
     single snapshot scan."""
-    store = tempfile.mkdtemp(prefix="mv_dual_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mv_dual_", ignore_cleanup_errors=True
+    ) as store:
         merger = MV.algebraic_merger(
             store,
             keys=["user_id"],
@@ -104,8 +110,6 @@ def materialized_view_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("total_scaled").cast("long").alias("total_scaled"),
             F.col("n_events").cast("long").alias("n_events"),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(
@@ -134,8 +138,9 @@ def idempotent_sink_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each batch is one map-only partitioned write; the
     readout is one scan + global agg of the sink — the audit a real
     pipeline runs to reconcile a sink against its source."""
-    sink_dir = tempfile.mkdtemp(prefix="sink_dual_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sink_dual_", ignore_cleanup_errors=True
+    ) as sink_dir:
         sink = SK.idempotent_parquet_sink(sink_dir)
         batches = [
             b.select("event_id", "event_type", "value")
@@ -164,8 +169,6 @@ def idempotent_sink_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return ledger.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(sink_dir, ignore_errors=True)
 
 
 @query(
@@ -199,8 +202,9 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the diff is one keyed full-outer join of two complete
     snapshots (on a table format: the commit diff read off the log);
     verdict rollup is a tiny hash agg."""
-    store = tempfile.mkdtemp(prefix="mv_diff_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mv_diff_", ignore_cleanup_errors=True
+    ) as store:
         merger = MV.algebraic_merger(
             store,
             keys=["user_id"],
@@ -222,8 +226,6 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(
@@ -400,12 +402,13 @@ def ann_stream_ingest_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odni_apache_beam_consumer_spark.sources import replay as R
 
     planes = _ANN_PLANES
-    root = tempfile.mkdtemp(prefix="ann_ingest_dual_")
-    chunks_dir = os.path.join(root, "chunks")
-    index_dir = os.path.join(root, "index")
-    marker_dir = os.path.join(root, "markers")
-    os.makedirs(marker_dir)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ann_ingest_dual_", ignore_cleanup_errors=True
+    ) as root:
+        chunks_dir = os.path.join(root, "chunks")
+        index_dir = os.path.join(root, "index")
+        marker_dir = os.path.join(root, "markers")
+        os.makedirs(marker_dir)
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
@@ -470,8 +473,6 @@ def ann_stream_ingest_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
         for o in outs[1:]:
             res = res.unionByName(o)
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -112,22 +112,21 @@ def write_replay_chunks(
         # All sentinels in ONE write job (partitioned by sentinel index,
         # one row per partition file) — per-sentinel coalesce(1) jobs
         # were pure job-launch overhead on the bench.
-        sent = spark.createDataFrame(
-            [(k, -(k + 1), -1, "__flush__", 0.0, "{}") for k in range(n_sentinels)],
-            "k INT, event_id BIGINT, user_id BIGINT, event_type STRING, "
-            "value DOUBLE, props STRING",
-        ).select(
-            "k",
-            F.col("event_id"),
+        # Built from spark.range, not a Python list: a list-built frame
+        # runs a Python worker in every job that reads it.
+        sent = spark.range(0, n_sentinels, 1, 1).select(
+            F.col("id").cast("int").alias("k"),
+            (-(F.col("id") + 1)).alias("event_id"),
             F.expr(
                 # Arithmetic, not a formatted literal: an f-string like
                 # '2100-01-0{k+1}' breaks at k >= 9 ('2100-01-010').
-                "timestamp'2100-01-01 00:00:00' + make_interval(0, 0, 0, k)"
+                "timestamp'2100-01-01 00:00:00'"
+                " + make_interval(0, 0, 0, CAST(id AS INT))"
             ).alias("ts"),
-            F.col("user_id"),
-            F.col("event_type"),
-            F.col("value"),
-            F.col("props"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit("__flush__").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit("{}").alias("props"),
         )
         sent_dir = os.path.join(tmp_dir, "sentinels")
         sent.write.mode("overwrite").partitionBy("k").parquet(sent_dir)

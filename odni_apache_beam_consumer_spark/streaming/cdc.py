@@ -17,10 +17,12 @@ This module supplies the two halves its consumers would need:
   conflict resolution is by change timestamp (not arrival order),
   re-delivering ANY prefix of the stream in ANY order converges to the
   same state — idempotence falls out of the merge semantics rather than
-  a commit marker, which is what makes CDC apply safe under replays,
-  out-of-order topic partitions, and crash-restarts alike.  The
-  snapshot/pointer commit protocol is streaming/materialized.py's
-  (commit_snapshot; pointer flip = commit).
+  the batch id, which is what makes CDC apply safe under replays,
+  out-of-order topic partitions, and crash-restarts alike.  Each
+  winning batch commits one version of a transactional table
+  (streaming/materialized.snapshot_merger over txtable.py).
+* :func:`expire_tombstones` — tombstone retention GC, one
+  ``delete_where`` commit on the same table.
 
 :func:`debezium_envelope` is the encoder inverse to the parser, which
 the CDC replay queries and tests use to build their change streams.
@@ -39,12 +41,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.streaming.materialized import (
-    already_committed,
-    commit_snapshot,
-    latest_version,
-    mark_committed,
     read_view,
+    snapshot_merger,
 )
+from odni_apache_beam_consumer_spark.txtable import TransactionalTable
 
 
 def debezium_schema(payload_schema: str) -> str:
@@ -140,9 +140,10 @@ def lww_upsert_merger(
     breaks same-ts same-kind ties deterministically; without it two
     non-delete changes at one ts_ms resolve by incumbent-wins on the
     replay fast path and arbitrarily in a fresh merge.  ``read_current``
-    strips tombstones.  The pointer-flip commit protocol matches
-    streaming/materialized.algebraic_merger; on top of it, LWW makes
-    even a lost marker + re-merge CONVERGENT rather than corrupting.
+    strips tombstones.  The commit protocol is
+    streaming/materialized.snapshot_merger's, as for algebraic_merger: a
+    batch id already in the table's log merges nothing, and on top of
+    it LWW makes a re-merge under a fresh id CONVERGENT.
 
     Schema evolution: a batch may WIDEN the payload (a new nullable
     column appearing mid-stream — the most common real CDC event after
@@ -155,20 +156,17 @@ def lww_upsert_merger(
     (incumbent vs delta) and prefers the INCUMBENT on full-rank ties, so
     "nothing changed" falls out of the merge itself — zero delta rows
     among the winners means the merged state IS the previous snapshot,
-    and the write is skipped (the batch costs one merge pass into local
-    checkpoint blocks, never a table rewrite).  At 100 TB this is the
-    difference between a no-op MERGE INTO and rewriting the table per
-    duplicate delivery — and unlike a separate winner-check join, the
-    decision rides the merge pass that a winning batch needs anyway."""
+    and nothing is committed (the batch costs one merge pass into local
+    checkpoint blocks, never a table rewrite; re-delivering it merges to
+    the same no-op).  At 100 TB this is the difference between a no-op
+    MERGE INTO and rewriting the table per duplicate delivery — and
+    unlike a separate winner-check join, the decision rides the merge
+    pass that a winning batch needs anyway."""
 
     order_cols = [ts_col, "is_delete"] + ([seq_col] if seq_col else [])
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        if already_committed(store, batch_id):
-            return
-        spark = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame | None:
         delta = batch.where(~F.col("_corrupt")).drop("_corrupt", "op")
-        prev = read_view(spark, store)
         both = (
             delta.withColumn("_src", F.lit(1))
             if prev is None
@@ -200,11 +198,10 @@ def lww_upsert_merger(
             and not widens
             and merged.where(F.col("_src") == 1).isEmpty()
         ):
-            mark_committed(store, batch_id)
-            return
-        commit_snapshot(merged.drop("_src"), store, batch_id)
+            return None
+        return merged.drop("_src")
 
-    return fn
+    return snapshot_merger(store, merge)
 
 
 def read_current(spark, store: str) -> DataFrame | None:
@@ -218,8 +215,8 @@ def read_current(spark, store: str) -> DataFrame | None:
 def expire_tombstones(
     spark, store: str, horizon_ms: int, now_ms: int, ts_col: str = "ts_ms"
 ) -> int:
-    """Tombstone retention GC: rewrite the current snapshot without
-    tombstones older than ``now_ms - horizon_ms``, as a new committed
+    """Tombstone retention GC: delete the tombstones older than
+    ``now_ms - horizon_ms`` from the store's table, as one new committed
     version.  Without this, every key ever deleted lives in the LWW
     store forever; with it, state is bounded by the live keys plus one
     horizon's worth of deletes — the Kafka-compacted-topic
@@ -228,26 +225,19 @@ def expire_tombstones(
     can resurrect a deleted row, so the horizon must exceed the
     pipeline's maximum replay/out-of-order lag.
 
-    Crash-safe by the same ordering argument as the merger and
-    txtable.expire_versions: the pruned snapshot is fully written under
-    the NEXT version number first, then the pointer flips atomically
-    (materialized.commit_snapshot) — a crash before the flip leaves the
-    old state current and the orphan directory is vacuum debris, never
-    a half-applied GC.  In-horizon tombstones survive verbatim, so
-    replays newer than the horizon still lose the LWW window exactly
-    as before.  Returns the new committed version.
+    Crash-safe and race-checked by the table protocol
+    (txtable.TransactionalTable.delete_where): the pruned snapshot is a
+    new directory that only the commit meta makes visible, and a merge
+    that commits between the GC's read and its commit surfaces as
+    ``CommitConflict``.  The GC takes the next version without touching
+    the batch ids' op_ids, so the stream's next batch still merges.
+    In-horizon tombstones survive verbatim, so replays newer than the
+    horizon still lose the LWW window exactly as before.  Returns the
+    new committed version.
 
     Scale shape: one filter-and-rewrite pass over the snapshot (on a
     real table format: a metadata-gated DELETE WHERE on the tombstone
     partition); never touches the change stream."""
-    committed = latest_version(store)
-    if committed is None:
-        raise ValueError(f"no committed snapshot under {store}")
-    snap = read_view(spark, store)
-    cutoff = now_ms - horizon_ms
-    kept = snap.where(
-        ~(F.col("is_delete") & (F.col(ts_col) < F.lit(cutoff)))
-    ).localCheckpoint(eager=True)
-    v = committed + 1
-    commit_snapshot(kept, store, v)
-    return v
+    return TransactionalTable(spark, store).delete_where(
+        F.col("is_delete") & (F.col(ts_col) < F.lit(now_ms - horizon_ms))
+    )

@@ -4,89 +4,68 @@ The pattern the reference's print-sink demo gestures at but never builds
 (/root/reference/main.py:109): keep a queryable, always-current aggregate
 of an unbounded stream in plain storage.  Each micro-batch folds its
 DELTA into the previous snapshot (algebraic merge — sums add, counts
-add), writes a NEW versioned snapshot, then atomically flips a pointer
-file.  Readers always see a complete snapshot.  The POINTER is the
-commit record: on re-delivery the merger first compares the pointer
-version against the incoming batch_id and skips any batch whose merge is
-already visible — so a crash in ANY window (before the snapshot write,
-between write and flip, or between flip and the fast-path marker) replays
-without double-counting, and the merge source is always a strictly older
-snapshot than the one being written (never a self-overwrite).
+add) and commits the result as the next version of a
+:class:`~odni_apache_beam_consumer_spark.txtable.TransactionalTable`.
+Readers always see a complete snapshot.
 
-Why not update-mode + a key-value sink: plain parquet + pointer works on
-any shared filesystem, keeps full snapshot history (time travel /
-debugging), and the merge is a batch job Catalyst optimizes like any
-other.  At 100 TB the snapshot is partitioned storage and the merge is an
-incremental MERGE INTO on a table format; this module is the
+Exactly-once: the table's commit log is the commit record, and each
+commit carries the op_id ``batch-<batch_id>``.  A re-delivered batch
+finds its op_id in the log and returns before any Spark work, so a
+crash in any window replays without double-counting — the Structured
+Streaming recipe of output that is idempotent on the batch id.  Batch
+ids and versions are independent: another writer of the same table (a
+GC, say) takes the next version without shadowing a later batch, and a
+writer racing the stream surfaces as ``CommitConflict``.  Every version
+is written to a fresh directory, so a merge never overwrites the
+snapshot it reads.
+
+Why not update-mode + a key-value sink: plain parquet + a commit log
+works on any shared filesystem, keeps full snapshot history (time
+travel / debugging), and the merge is a batch job Catalyst optimizes
+like any other.  At 100 TB the snapshot is partitioned storage and the
+merge is an incremental MERGE INTO on a table format; this module is the
 format-free core of that loop.
 """
 
 from __future__ import annotations
-
-import os
 
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_POINTER = "_LATEST"
-
-
-def latest_version(store: str) -> int | None:
-    """Committed batch_id per the pointer file (None before first commit)."""
-    p = os.path.join(store, _POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        v = fh.read().strip()
-    return int(v) if v else None
-
-
-def latest_snapshot_path(store: str) -> str | None:
-    v = latest_version(store)
-    return os.path.join(store, f"snapshot_{v}") if v is not None else None
+from odni_apache_beam_consumer_spark.txtable import TransactionalTable
 
 
 def read_view(spark, store: str) -> DataFrame | None:
-    """Current contents of the materialized view (None before first batch)."""
-    path = latest_snapshot_path(store)
-    return spark.read.parquet(path) if path else None
+    """Current contents of the materialized view (None before the first
+    commit)."""
+    table = TransactionalTable(spark, store)
+    v = table.latest_version()
+    return None if v is None else table.read(v)
 
 
-def mark_committed(store: str, version: int) -> None:
-    """Write the ``_committed_<version>`` fast-path marker."""
-    with open(os.path.join(store, f"_committed_{version}"), "w"):
-        pass
+def snapshot_merger(
+    store: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame | None],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch callable committing ``merge(batch, prev)`` as the
+    store's next version, where ``prev`` is the latest snapshot (None
+    before the first commit) and a ``None`` result commits nothing.  A
+    batch id whose op_id the log already holds returns before any Spark
+    work."""
 
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        table = TransactionalTable(batch.sparkSession, store)
+        op_id = f"batch-{batch_id}"
+        if op_id in table.op_ids():
+            return
+        base = table.latest_version()
+        nxt = merge(batch, None if base is None else table.read(base))
+        if nxt is not None:
+            table.commit(nxt, base, op_id)
 
-def already_committed(store: str, batch_id: int) -> bool:
-    """True when ``batch_id``'s merge is already visible, so a re-delivery
-    must not merge again.  The marker is the fast path; without it,
-    ``pointer >= batch_id`` proves the batch committed (batch ids are
-    monotone) and the marker is repaired — this closes the crash window
-    between pointer flip and marker, where re-merging would read
-    snapshot_<batch_id> itself as ``prev`` and double-count the delta."""
-    if os.path.exists(os.path.join(store, f"_committed_{batch_id}")):
-        return True
-    committed = latest_version(store)
-    if committed is not None and committed >= batch_id:
-        mark_committed(store, batch_id)
-        return True
-    return False
-
-
-def commit_snapshot(df: DataFrame, store: str, version: int) -> None:
-    """Commit ``df`` as the store's snapshot ``version``.  Order: snapshot
-    durable -> pointer flip (THE commit; atomic rename) -> marker (fast
-    path only), so a crash at any point leaves either the old state
-    current or the new one fully written."""
-    df.write.mode("overwrite").parquet(os.path.join(store, f"snapshot_{version}"))
-    tmp = os.path.join(store, f"._latest_{version}")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(store, _POINTER))
-    mark_committed(store, version)
+    return fn
 
 
 # Algebraic measure kinds: (delta aggregate over raw rows, merge
@@ -118,11 +97,9 @@ def algebraic_merger(
     decomposable into these states is maintainable — e.g. avg as
     sum/count at read time.
 
-    Exactly-once protocol: the POINTER FLIP is the commit
-    (:func:`commit_snapshot`), and a re-delivered batch whose merge is
-    already visible only repairs its marker (:func:`already_committed`)
-    — re-merging would read snapshot_<batch_id> itself as ``prev``,
-    double-count the delta, and overwrite the very path being read.
+    Exactly-once protocol: :func:`snapshot_merger` — each batch commits
+    one table version under the op_id ``batch-<batch_id>``, and a
+    re-delivered batch finds its op_id in the log and merges nothing.
 
     Scale shape: the delta aggregation is one map-side-combined hash agg
     over the micro-batch; the merge is one hash agg over
@@ -136,53 +113,20 @@ def algebraic_merger(
                 f"(supported: {sorted(_MEASURE_KINDS)})"
             )
 
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        if already_committed(store, batch_id):
-            return
-        spark = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         delta = batch.groupBy(*keys).agg(
             *[
                 _MEASURE_KINDS[kind][0](src, out)
                 for out, (kind, src) in measures.items()
             ]
         )
-        # committed < batch_id here, so prev is a STRICTLY OLDER snapshot
-        # than the one we are about to write — never a self-overwrite.
-        prev = read_view(spark, store)
-        merged = (
-            delta
-            if prev is None
-            else prev.unionByName(delta)
-            .groupBy(*keys)
-            .agg(
-                *[
-                    _MEASURE_KINDS[kind][1](out)
-                    for out, (kind, _) in measures.items()
-                ]
-            )
+        if prev is None:
+            return delta
+        return prev.unionByName(delta).groupBy(*keys).agg(
+            *[_MEASURE_KINDS[kind][1](out) for out, (kind, _) in measures.items()]
         )
-        commit_snapshot(merged, store, batch_id)
 
-    return fn
-
-
-def list_versions(store: str) -> list[int]:
-    """All snapshot versions present in the store, ascending — the time-
-    travel index (each ``snapshot_<batch_id>`` is a complete view as of
-    that commit; the pointer marks the latest)."""
-    out = []
-    for name in os.listdir(store):
-        if name.startswith("snapshot_"):
-            try:
-                out.append(int(name[len("snapshot_"):]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def read_version(spark, store: str, version: int) -> DataFrame:
-    """Time travel: the materialized view as of commit ``version``."""
-    return spark.read.parquet(os.path.join(store, f"snapshot_{version}"))
+    return snapshot_merger(store, merge)
 
 
 def diff_versions(
@@ -193,8 +137,9 @@ def diff_versions(
     'changed' / 'unchanged').  The audit primitive for 'what did this
     batch change' — on a table format this is the commit diff; here it
     is one keyed join of two complete snapshots."""
-    old = read_version(spark, store, v_old)
-    new = read_version(spark, store, v_new)
+    table = TransactionalTable(spark, store)
+    old = table.read(v_old)
+    new = table.read(v_new)
     measures = [c for c in new.columns if c not in keys]
     o = old.select(
         *keys, F.struct(*measures).alias("_old")

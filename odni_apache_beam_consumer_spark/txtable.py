@@ -9,10 +9,12 @@ Closes the "no transactional table format" gap natively with the same
 commit design real lakehouse formats use — append / merge (upsert) /
 delete with ACID-style visibility, time travel, operation-id
 idempotency, and optimistic conflict detection.  The method surface
-(`append`, `merge`, `delete_where`, `read(version=...)`, `history`,
-`vacuum`) maps 1:1 onto Delta/Iceberg transaction-log operations, so
-swapping a real table format in changes the storage calls, not the
-pipeline code.
+(`append`, `merge`, `delete_where`, `commit` (overwrite),
+`read(version=...)`, `history`, `vacuum`) maps 1:1 onto Delta/Iceberg
+transaction-log operations, so swapping a real table format in changes
+the storage calls, not the pipeline code.  It is the package's one
+snapshot-commit protocol: the streaming materialized view and the CDC
+store (streaming/materialized.py, streaming/cdc.py) commit through it.
 
 Protocol (all on any shared filesystem — no lock service).  This is the
 Delta-style "log record IS the commit" design:
@@ -118,17 +120,6 @@ class TransactionalTable:
     def _snapshot_dir(self, v: int) -> str:
         return os.path.join(self.path, self._read_meta(v)["snapshot"])
 
-    def _committed_op_ids(self) -> set[str]:
-        ids = set()
-        for v in self.versions():
-            try:
-                op = self._read_meta(v).get("op_id")
-                if op:
-                    ids.add(op)
-            except (OSError, ValueError):
-                continue
-        return ids
-
     def _link_meta(self, v: int, meta: dict) -> None:
         """Atomically publish ``commit_v{v}.json`` — THE commit point.
 
@@ -168,7 +159,7 @@ class TransactionalTable:
         again inside the conflict handler, so a replay racing an
         unrelated commit still resolves to the documented no-op)."""
         prev = expected_prev
-        if op_id is not None and op_id in self._committed_op_ids():
+        if op_id is not None and op_id in self.op_ids():
             return None
         if self.latest_version() != prev:
             raise CommitConflict(
@@ -195,7 +186,7 @@ class TransactionalTable:
             shutil.rmtree(
                 os.path.join(self.path, snap_name), ignore_errors=True
             )
-            if op_id is not None and op_id in self._committed_op_ids():
+            if op_id is not None and op_id in self.op_ids():
                 return None
             raise
         self._heal_pointer(v)
@@ -217,6 +208,19 @@ class TransactionalTable:
 
     def history(self) -> list[dict]:
         return [self._read_meta(v) for v in self.versions()]
+
+    def op_ids(self) -> set[str]:
+        """The op_ids the commit log records — what a replay of an
+        operation checks before doing any work."""
+        ids = set()
+        for v in self.versions():
+            try:
+                op = self._read_meta(v).get("op_id")
+                if op:
+                    ids.add(op)
+            except (OSError, ValueError):
+                continue
+        return ids
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot-isolated read: resolve the commit log once, then scan
@@ -243,6 +247,17 @@ class TransactionalTable:
         if self.latest_version() is not None:
             raise FileExistsError(f"{self.path}: table already exists")
         return self._commit(df, "create", op_id, expected_prev=None)
+
+    def commit(
+        self,
+        df: DataFrame,
+        base_version: int | None,
+        op_id: str | None = None,
+    ) -> int | None:
+        """Commit ``df`` as the whole next snapshot, derived from
+        ``base_version`` (None: the table is empty) — for writers that
+        build the next state themselves, e.g. a streaming merge."""
+        return self._commit(df, "commit", op_id, base_version)
 
     def append(
         self,

@@ -1,6 +1,6 @@
 """Debezium CDC unit tests: envelope quarantine and LWW tombstone
 semantics the driver query (plans/decode.py::cdc_debezium_apply) can't
-isolate — resurrect attempts, same-ts delete ranking, marker replay."""
+isolate — resurrect attempts, same-ts delete ranking, op-id replay."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.sources import replay as R
 from odni_apache_beam_consumer_spark.streaming import cdc as C
-from odni_apache_beam_consumer_spark.streaming import materialized as M
+from odni_apache_beam_consumer_spark.txtable import TransactionalTable
 
 SCHEMA = "k BIGINT, v STRING"
 
@@ -111,39 +111,33 @@ def test_lww_marker_replay_is_noop(spark):
         shutil.rmtree(store, ignore_errors=True)
 
 
-def test_lww_pointer_repair_after_lost_marker(spark):
-    """Crash window between pointer flip and marker write: the committed
-    batch's marker is lost and the batch is re-delivered under the same
-    id.  The pointer is the commit record, so the merger repairs the
-    marker and does NOT re-merge — the committed version and the table
-    are unchanged.  LWW would absorb a re-merge of identical rows, so
-    the second re-delivery carries a newer change under the same id."""
+def test_lww_replay_under_committed_id_is_a_no_op(spark):
+    """A batch re-delivered under an id whose op_id the table's log
+    already holds merges nothing and launches no Spark job.  LWW would
+    absorb a re-merge of identical rows, so the re-delivery carries a
+    NEWER change: only a re-merge could make it visible."""
+    sc = spark.sparkContext
     store = tempfile.mkdtemp(prefix="cdc_test_")
     try:
         m = C.lww_upsert_merger(store, ["k"])
-        b0 = C.parse_debezium(
-            _envs(spark, [('{"op":"c","ts_ms":1,"after":{"k":5,"v":"x"}}',)]),
-            SCHEMA,
-        )
-        m(b0, 0)
-        committed = M.latest_version(store)
-        assert committed == 0
-        marker = os.path.join(store, f"_committed_{committed}")
-        os.remove(marker)
-        m(b0, committed)
-        assert os.path.exists(marker), "marker must be repaired"
-        # Same id, newer change: only a re-merge could make it visible.
-        os.remove(marker)
         m(
             C.parse_debezium(
-                _envs(spark, [('{"op":"u","ts_ms":9,"after":{"k":5,"v":"y"}}',)]),
+                _envs(spark, [('{"op":"c","ts_ms":1,"after":{"k":5,"v":"x"}}',)]),
                 SCHEMA,
             ),
-            committed,
+            0,
         )
-        assert os.path.exists(marker), "marker must be repaired"
-        assert M.latest_version(store) == committed
-        assert M.list_versions(store) == [committed]
+        newer = C.parse_debezium(
+            _envs(spark, [('{"op":"u","ts_ms":9,"after":{"k":5,"v":"y"}}',)]),
+            SCHEMA,
+        )
+        sc.setJobGroup("cdc:replay", "cdc:replay")
+        try:
+            m(newer, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("cdc:replay") == []
+        assert TransactionalTable(spark, store).versions() == [0]
         assert [(r.k, r.v) for r in C.read_current(spark, store).collect()] == [(5, "x")]
     finally:
         shutil.rmtree(store, ignore_errors=True)
@@ -314,14 +308,8 @@ def test_lww_widening_batch_persists_even_when_all_rows_lose(spark):
 
 
 def test_lww_replay_fast_path_skips_snapshot_write(spark):
-    """A no-win batch must NOT write a new snapshot (the replay fast
-    path): the pointer stays on the previous version."""
-    import os
-
-    from odni_apache_beam_consumer_spark.streaming.materialized import (
-        latest_version,
-    )
-
+    """A no-win batch must NOT commit a new version (the replay fast
+    path): the table stays on the previous version."""
     store = tempfile.mkdtemp(prefix="cdc_test_")
     try:
         m = C.lww_upsert_merger(store, ["k"])
@@ -331,9 +319,7 @@ def test_lww_replay_fast_path_skips_snapshot_write(spark):
         )
         m(b0, 0)
         m(b0, 5)  # fresh id, all-tie delta
-        assert latest_version(store) == 0
-        assert not os.path.exists(os.path.join(store, "snapshot_5"))
-        assert os.path.exists(os.path.join(store, "_committed_5"))
+        assert TransactionalTable(spark, store).versions() == [0]
     finally:
         shutil.rmtree(store, ignore_errors=True)
 
@@ -342,16 +328,12 @@ def test_expire_tombstones_horizon_and_replay(spark):
     """Tombstone GC contract at the raw-snapshot level: (a) tombstones
     older than the horizon are physically gone from the new snapshot
     while in-horizon ones survive verbatim; (b) GC commits as a NEW
-    version under the pointer protocol; (c) an in-horizon replay of a
-    pre-delete change still no-ops; (d) a pre-horizon replay resurrects
-    — the documented trade-off, visible so the horizon is sized to
-    replay lag."""
-    import os
-
-    from odni_apache_beam_consumer_spark.streaming.materialized import (
-        latest_version,
-        read_view,
-    )
+    table version; (c) an in-horizon replay of a pre-delete change
+    still no-ops; (d) a pre-horizon replay resurrects — the documented
+    trade-off, visible so the horizon is sized to replay lag.  The
+    replay takes the stream's NEXT batch id: the GC's version must not
+    shadow it."""
+    from odni_apache_beam_consumer_spark.streaming.materialized import read_view
 
     store = tempfile.mkdtemp(prefix="cdc_gc_test_")
     try:
@@ -381,12 +363,12 @@ def test_expire_tombstones_horizon_and_replay(spark):
         # GC at now=100, horizon=50 -> cutoff 50: k=1's tombstone (ts 20)
         # expires, k=2's (ts 90) survives.
         v = C.expire_tombstones(spark, store, horizon_ms=50, now_ms=100)
-        assert v == 2 and latest_version(store) == 2
+        assert v == 2 and TransactionalTable(spark, store).latest_version() == 2
         raw = {(r.k, r.is_delete) for r in read_view(spark, store).collect()}
         assert raw == {(2, True)}, raw  # expired tombstone GONE, k2 held
         # (c) in-horizon replay: k=2's create (ts 10 < tombstone ts 90)
         # must still lose the LWW window.
-        m(creates, 3)
+        m(creates, 2)
         got = {r.k for r in C.read_current(spark, store).collect()}
         # (d) k=1 resurrects (its tombstone expired; the replay is older
         # than the horizon — out of contract, and visibly so).

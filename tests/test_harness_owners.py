@@ -3,7 +3,8 @@
 * the replay-file layout (staggered mtimes) — sources/replay.py;
 * the shuffle/state-partition scope — session.py;
 * the memory-sink drain of the plans — streaming/sinks.to_memory;
-* the snapshot pointer commit under streaming/ — streaming/materialized.py;
+* the versioned-snapshot commit (the commit log and its ``_LATEST`` hint)
+  — txtable.py;
 * the checkpoint of an iterative loop's round — caches.iterate.
 """
 
@@ -58,9 +59,11 @@ def _offenders(pkg: str) -> list[str]:
                     and rel.startswith("plans/")
                 ):
                     found.append(f'{where}: writeStream.format("memory")')
-                elif rel.startswith("streaming/") and rel != "streaming/materialized.py":
-                    if _is_call(node, "os", "replace"):
-                        found.append(f"{where}: pointer os.replace")
+                elif _is_call(node, "os", "replace") and rel.startswith("streaming/"):
+                    found.append(f"{where}: pointer os.replace")
+                elif rel != "txtable.py":
+                    if _is_call(node, "os", "link"):
+                        found.append(f"{where}: commit os.link")
                     elif isinstance(node, ast.Assign) and any(
                         getattr(t, "id", None) == "_POINTER" for t in node.targets
                     ):
@@ -71,8 +74,8 @@ def _offenders(pkg: str) -> list[str]:
 def test_replay_harness_decisions_have_one_owner():
     """No staggered-mtime write outside sources/replay.py, no
     shuffle-partition ``conf.set`` outside session.py, no hand-written
-    memory-sink drain under plans/, and no pointer file or pointer flip
-    under streaming/ outside materialized.py."""
+    memory-sink drain under plans/, no pointer file or commit link
+    outside txtable.py, and no pointer flip under streaming/."""
     offenders = _offenders(PKG)
     assert not offenders, offenders
 

@@ -31,6 +31,7 @@ from odni_apache_beam_consumer_spark.streaming.windows import (
     stream_stream_join,
     tumbling_counts,
 )
+from odni_apache_beam_consumer_spark.txtable import TransactionalTable
 
 pytestmark = pytest.mark.streaming
 
@@ -610,25 +611,16 @@ def test_materialized_view_equals_batch_aggregate(spark, sf_dir, tmp_path):
         }
     assert key(got) == key(want)
 
-    # Idempotence: re-deliver an already-committed batch id.
-    before = M.latest_snapshot_path(store)
-    merger(load_table(spark, sf_dir, "events").limit(7), 0)
-    assert M.latest_snapshot_path(store) == before
-    assert key(M.read_view(spark, store)) == key(want)
-
-    # Crash window between pointer flip and marker write: simulate by
-    # deleting the newest batch's marker (as if the process died right
-    # after os.replace) and re-delivering that batch.  The pointer IS the
-    # commit record, so the merger must NOT re-merge (that would read
-    # snapshot_<id> as prev and double-count) — it only repairs the
-    # marker and the view is unchanged.
-    last_id = M.latest_version(store)
-    marker = os.path.join(store, f"_committed_{last_id}")
-    os.remove(marker)
-    merger(load_table(spark, sf_dir, "events").limit(7), last_id)
-    assert os.path.exists(marker), "marker must be repaired"
-    assert M.latest_version(store) == last_id
-    assert key(M.read_view(spark, store)) == key(want)
+    # Idempotence: re-deliver committed batch ids, the first and the
+    # newest.  Each id's op_id is in the table's log, so the merger
+    # commits nothing and the view is unchanged.
+    table = TransactionalTable(spark, store)
+    versions = table.versions()
+    newest = int(table.history()[-1]["op_id"].removeprefix("batch-"))
+    for batch_id in (0, newest):
+        merger(load_table(spark, sf_dir, "events").limit(7), batch_id)
+        assert table.versions() == versions
+        assert key(M.read_view(spark, store)) == key(want)
 
 
 def test_materialized_view_time_travel_and_diff(spark, sf_dir, tmp_path):
@@ -648,15 +640,14 @@ def test_materialized_view_time_travel_and_diff(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(300)
 
-    versions = M.list_versions(store)
+    table = TransactionalTable(spark, store)
+    versions = table.versions()
     assert len(versions) >= 2
-    assert M.latest_version(store) == versions[-1]
+    assert table.latest_version() == versions[-1]
     first, last = versions[0], versions[-1]
     # Time travel: the first snapshot equals the first chunk's aggregate
     # (strictly fewer or equal rows than the final view).
-    assert M.read_version(spark, store, first).count() <= M.read_view(
-        spark, store
-    ).count()
+    assert table.read(first).count() <= M.read_view(spark, store).count()
     diff = M.diff_versions(spark, store, first, last, keys=["user_id"])
     verdicts = {r["verdict"] for r in diff.select("verdict").distinct().collect()}
     assert "deleted" not in verdicts  # merges only add or update users

@@ -70,6 +70,20 @@ def test_concurrent_commit_conflict(spark, tmp_path):
     assert {r.id for r in a.read().collect()} == {1, 2, 3}
 
 
+def test_commit_whole_snapshot_replay_and_stale_base(spark, table):
+    """``commit`` publishes a caller-built snapshot as the next version:
+    its op_id makes a replay a no-op, and a base that another writer
+    has since moved past surfaces as CommitConflict."""
+    base = table.latest_version()
+    assert table.commit(_df(spark, [(7, "x")]), base, op_id="batch-0") == 1
+    assert table.commit(_df(spark, [(8, "y")]), base, op_id="batch-0") is None
+    assert "batch-0" in table.op_ids()
+    with pytest.raises(CommitConflict):
+        table.commit(_df(spark, [(8, "y")]), base, op_id="batch-1")
+    assert [r.id for r in table.read().collect()] == [7]
+    assert table.versions() == [0, 1]
+
+
 def test_crash_before_flip_is_invisible_then_repaired(spark, tmp_path):
     path = str(tmp_path / "tx3")
     t = TransactionalTable(spark, path)

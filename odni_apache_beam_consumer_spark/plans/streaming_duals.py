@@ -273,8 +273,8 @@ def session_window_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain-collapse recipe): users span all four chunks, so sessions
     still merge across trigger boundaries, and the final emitted SET is
     trigger-layout-independent — only emission timing moves.  The chunk
-    fixture itself is the session-cached replay_fixture shared with the
-    inner-join dual (identical layout params, read-only files).
+    fixture itself is the session-cached replay_fixture (read-only
+    files).
 
     The oracle is the classic gaps-and-islands rewrite: a new session
     starts when the gap to the previous event exceeds 30 minutes
@@ -288,8 +288,8 @@ def session_window_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is bounded by the watermark horizon; the sentinel flush is how
     a bounded drain would close out a real backfill.  State partitions
     right-sized to 8 for replay volume (saved/restored — the same
-    deploy-time sizing note as stream_stream_join_dual: 32 near-empty
-    stores per batch cost more in open/commit than the aggregation)."""
+    deploy-time sizing note as the join duals: 32 near-empty stores per
+    batch cost more in open/commit than the aggregation)."""
     from odni_apache_beam_consumer_spark.sources import replay as R
 
     with shuffle_partitions(spark, 8):
@@ -320,10 +320,8 @@ def session_window_stream_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_scaled",
             )
         )
-        q = SK.to_memory(agg, "session_dual_mem")
-        assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
-            spark.table("session_dual_mem")
+            SK.drain(agg, "session_dual_mem")
             .where(F.col("user_id") >= 0)  # drop the flush sentinel's row
             .localCheckpoint(eager=True)
         )
@@ -551,10 +549,8 @@ def stream_static_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_epoch"
         ),
     )
-    q = SK.to_memory(enriched, "ssdim_dual_mem")
-    assert q.awaitTermination(300), "replay drain timed out (300 s)"
     return (
-        spark.table("ssdim_dual_mem")
+        SK.drain(enriched, "ssdim_dual_mem")
         .groupBy("cohort")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -634,15 +630,86 @@ def streaming_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.floor(F.col("value") * 10000).cast("long").alias("value_scaled"),
         )
-        q = SK.to_memory(deduped, "dedup_dual_mem")
-        assert q.awaitTermination(300), "replay drain timed out (300 s)"
         return (
-            spark.table("dedup_dual_mem")
+            SK.drain(deduped, "dedup_dual_mem")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_events"),
                 F.sum("event_id").cast("long").alias("sum_event_id"),
                 F.sum("value_scaled").cast("long").alias("sum_value_scaled"),
+            )
+            .localCheckpoint(eager=True)
+        )
+
+
+def _interval_join_dual(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Shared replay body of the three stream-stream join duals: run
+    ``streaming.windows.interval_join(how=how)`` (purchases matched with
+    same-user clicks within the following hour) through a REAL
+    micro-batch replay and return the drained result with c_value in
+    integer micro-units.
+
+    Both sides read the SAME cached 3-chunk, two-sentinel time-ordered
+    replay, two files per trigger, filtered to their event type per
+    micro-batch, so matches routinely span triggers — a pair whose
+    purchase arrives in the first data batch and click in the second
+    only appears if the join state actually held the purchase across
+    triggers.
+
+    Sentinel discipline: the flush sentinels PASS THROUGH both
+    event-type filters, because each side's watermark node sits
+    downstream of its filter; a filtered-out sentinel would never
+    advance the watermark, and the final delay-window's unmatched rows
+    of an outer join would stay held in state forever.  n_sentinels=2
+    because outer-join eviction uses the watermark computed at the END
+    of the PREVIOUS batch: at two files per trigger the layout is
+    [c0,c1], [c2,s1], [s2] — s1 advances the watermark at the end of
+    batch 1 and s2's batch runs the eviction pass with it, so every held
+    row still flushes exactly once; the emitted SET is identical to the
+    one-file-per-trigger replay (only emission timing moves).  Sentinel
+    output rows are dropped after the sink by
+    ``coalesce(event_id, 0) >= 0`` on both sides, since a sentinel can
+    surface as a left row, a right row, or a sentinel-sentinel match.
+    Inner-join output does not depend on the trigger layout (a match
+    emits in whichever batch completes the pair), so the inner dual runs
+    the same layout.
+
+    Scale shape: per micro-batch, both sides shuffle on user_id into
+    keyed state; the range predicate keeps state O(rate x (horizon +
+    delay)) per key, never O(stream) — the property that makes
+    stream-stream joins viable at all at 100 TB/day ingest.  The state
+    partition count is sized DOWN to 4 for the replay (saved/restored
+    around the run): a stream-stream join instantiates state stores per
+    shuffle partition per side per micro-batch (an outer join runs two
+    stateful lifecycles per partition), and 32 partitions of near-empty
+    state cost more in store open/commit overhead than the join itself
+    at replay volume — the same number a production deployment tunes to
+    its key cardinality (state partitioning is fixed at first
+    checkpoint, so it is a deploy-time decision there)."""
+    from odni_apache_beam_consumer_spark.sources import replay as R
+    from odni_apache_beam_consumer_spark.streaming.windows import interval_join
+
+    with shuffle_partitions(spark, 4):
+        chunks = R.replay_fixture(
+            spark, sf_dir, n_chunks=3, flush_sentinel=True, n_sentinels=2
+        )
+        stream = R.read_stream(spark, chunks, max_files_per_trigger=2).where(
+            F.col("user_id").isNotNull()
+        )
+        purchases = stream.where(F.col("event_type").isin("purchase", "__flush__"))
+        clicks = stream.where(F.col("event_type").isin("click", "__flush__"))
+        joined = interval_join(purchases, clicks, how=how, horizon="1 hour").select(
+            "p_event_id",
+            "p_user_id",
+            "c_event_id",
+            "c_user_id",
+            F.floor(F.col("c_value") * 10000).cast("long").alias("c_value_scaled"),
+        )
+        return (
+            SK.drain(joined, f"ssjoin_{how.lower()}_dual_mem")
+            .where(
+                (F.coalesce(F.col("p_event_id"), F.lit(0)) >= 0)
+                & (F.coalesce(F.col("c_event_id"), F.lit(0)) >= 0)
             )
             .localCheckpoint(eager=True)
         )
@@ -668,64 +735,17 @@ FROM p JOIN c
 """,
 )
 def stream_stream_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream-stream interval join (purchases matched with same-user
-    clicks within the following hour — streaming/windows.py::
-    stream_stream_join) driven through a REAL micro-batch replay and
-    hash-checked against the batch interval-join oracle.  Both sides
-    read the SAME 4-chunk time-ordered replay (the session-cached
-    replay_fixture shared with the session dual), two files per trigger,
-    filtered to their event type per micro-batch, so matches routinely
-    span triggers — a pair whose purchase arrives in the first data
-    batch and click in the second only appears if the join state
-    actually held the purchase across triggers; any premature state
-    eviction, duplicate emission, or lost buffered row fails the
-    driver's hash.  (Inner-join output is trigger-layout-independent:
-    a match emits in whichever batch completes the pair.)
-
-    The inner join needs no flush sentinel (matches emit as soon as both
-    rows have arrived; the sentinel rows exist in the replay but carry
-    event_type '__flush__', so both filters drop them), and the time-
-    range condition is what BOUNDS the state store: each side retains
-    only rows within watermark + horizon, the property that makes
-    stream-stream joins viable at all at 100 TB/day ingest.
-
-    Scale shape: per micro-batch, both sides shuffle on user_id into
-    keyed state; the range predicate keeps state O(horizon x rate) per
-    key, not O(stream); output is append-mode with no aggregation, so
-    no watermark-delayed emission applies to matched pairs.  The state
-    partition count is sized DOWN to 8 for the replay (saved/restored
-    around the run): a stream-stream join instantiates one state store
-    per shuffle partition per side per micro-batch, and 32 partitions
-    of near-empty state cost more in store open/commit overhead than
-    the join itself at replay volume — the same number a production
-    deployment tunes to its key cardinality (state partitioning is
-    fixed at first checkpoint, so it is a deploy-time decision there)."""
-    from odni_apache_beam_consumer_spark.sources import replay as R
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_join,
+    """The stream-stream INNER interval join through a real micro-batch
+    replay (:func:`_interval_join_dual`), hash-checked against the batch
+    interval-join oracle: any premature state eviction, duplicate
+    emission, or lost buffered row fails the driver's hash.  Matches
+    emit as soon as both rows have arrived, so this dual witnesses the
+    match path and the join state held across triggers; output is
+    append-mode with no aggregation, so no watermark-delayed emission
+    applies to matched pairs."""
+    return _interval_join_dual(spark, sf_dir, "inner").select(
+        "p_event_id", "c_event_id", "p_user_id", "c_value_scaled"
     )
-
-    with shuffle_partitions(spark, 8):
-        chunks = R.replay_fixture(
-            spark, sf_dir, n_chunks=4, flush_sentinel=True
-        )
-        stream = R.read_stream(spark, chunks, max_files_per_trigger=2).where(
-            F.col("user_id").isNotNull()
-        )
-        purchases = stream.where(F.col("event_type") == "purchase")
-        clicks = stream.where(F.col("event_type") == "click")
-        joined = stream_stream_join(purchases, clicks, horizon="1 hour")
-        out = joined.select(
-            "p_event_id",
-            "c_event_id",
-            "p_user_id",
-            F.floor(F.col("c_value") * 10000)
-            .cast("long")
-            .alias("c_value_scaled"),
-        )
-        q = SK.to_memory(out, "ssjoin_dual_mem")
-        assert q.awaitTermination(300), "replay drain timed out (300 s)"
-        return spark.table("ssjoin_dual_mem").localCheckpoint(eager=True)
 
 
 @query(
@@ -748,83 +768,24 @@ FROM p LEFT JOIN c
 """,
 )
 def stream_stream_outer_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream-stream LEFT OUTER interval join driven through a REAL
-    micro-batch replay and hash-checked against the batch left join —
-    the hardest streaming-join contract to get right, because the
-    NULL rows are a *watermark proof*: an unmatched purchase may only
-    emit once the event-time watermark shows no qualifying click can
-    still arrive, and it must emit EXACTLY once.  The replay's
-    far-future flush sentinel is what pushes the watermark past the
-    final horizon so the last unmatched purchases drain (without it
-    they'd sit in state forever — the documented availableNow gotcha);
-    the no-data final micro-batch then performs the eviction pass.
-    Every failure mode is hash-visible: a premature null emission
-    duplicates a purchase (null row + later match), a lost one drops a
-    row, and both shift the driver's value hash.
+    """The stream-stream LEFT OUTER interval join through a real
+    micro-batch replay (:func:`_interval_join_dual`), hash-checked
+    against the batch left join — the hardest streaming-join contract to
+    get right, because the NULL rows are a *watermark proof*: an
+    unmatched purchase may only emit once the event-time watermark shows
+    no qualifying click can still arrive, and it must emit EXACTLY once.
+    The replay's flush sentinels push the watermark past the final
+    horizon so the last unmatched purchases drain (without them they'd
+    sit in state forever — the documented availableNow gotcha).  Every
+    failure mode is hash-visible: a premature null emission duplicates a
+    purchase (null row + later match), a lost one drops a row, and both
+    shift the driver's value hash.
 
     At test volume most purchases go unmatched (~29 matches against
     ~2k purchases at sf0.01), so the null-emission path — not the
     match path — carries the bulk of the output; the inner-join dual
-    (stream_stream_join_dual) covers the match path symmetrically.
-
-    Scale shape: identical to the inner dual (keyed state on user_id,
-    range-condition-bounded retention) plus the left side's
-    held-until-watermark buffer, which is what bounds memory: state is
-    O(rate x (horizon + delay)) per key, never O(stream).  State
-    partitions right-sized to 4 (saved/restored) — the outer join runs
-    TWO stateful operators' store lifecycles per partition per batch,
-    so idle-store overhead bites twice as hard as the inner dual's."""
-    from odni_apache_beam_consumer_spark.sources import replay as R
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_left_outer_join,
-    )
-
-    with shuffle_partitions(spark, 4):
-        # Cached fixture, shared with the full-outer dual (identical
-        # layout).  n_sentinels=2: outer-join eviction needs a DATA batch
-        # AFTER the watermark advance (see write_replay_chunks).  At two
-        # files per trigger the layout is [c0,c1], [c2,s1], [s2] — s1
-        # advances the watermark at the end of batch 1 and s2's batch
-        # runs the eviction pass with it, so every held row still
-        # flushes exactly once; the emitted SET is identical to the
-        # one-file-per-trigger replay (only emission timing moves).
-        chunks = R.replay_fixture(
-            spark, sf_dir, n_chunks=3, flush_sentinel=True, n_sentinels=2
-        )
-        stream = R.read_stream(spark, chunks, max_files_per_trigger=2).where(
-            F.col("user_id").isNotNull()
-        )
-        # The flush sentinels must PASS THROUGH both event-type filters:
-        # each side's watermark node sits downstream of its filter, so a
-        # filtered-out sentinel would never advance the watermark and the
-        # final delay-window's unmatched purchases would stay held in
-        # state forever (the exact bug this dual exists to witness).
-        # Sentinel output rows are dropped AFTER the sink by event_id < 0,
-        # the same end-filter discipline as session_window_stream_dual.
-        purchases = stream.where(
-            F.col("event_type").isin("purchase", "__flush__")
-        )
-        clicks = stream.where(
-            F.col("event_type").isin("click", "__flush__")
-        )
-        joined = stream_stream_left_outer_join(
-            purchases, clicks, horizon="1 hour"
-        )
-        out = joined.select(
-            "p_event_id",
-            "p_user_id",
-            "c_event_id",
-            F.floor(F.col("c_value") * 10000)
-            .cast("long")
-            .alias("c_value_scaled"),
-        )
-        q = SK.to_memory(out, "ssouter_dual_mem")
-        assert q.awaitTermination(300), "replay drain timed out (300 s)"
-        return (
-            spark.table("ssouter_dual_mem")
-            .where(F.col("p_event_id") >= 0)  # drop sentinel null-rows
-            .localCheckpoint(eager=True)
-        )
+    (stream_stream_join_dual) covers the match path symmetrically."""
+    return _interval_join_dual(spark, sf_dir, "leftOuter").drop("c_user_id")
 
 
 @query(
@@ -848,78 +809,19 @@ FROM p FULL OUTER JOIN c
 """,
 )
 def stream_stream_full_outer_join_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream-stream FULL OUTER interval join driven through a REAL
-    micro-batch replay — the last member of the join family to get a
-    replay-backed driver hash (inner: stream_stream_join_dual; left:
-    stream_stream_outer_join_dual; full-outer previously had only the
-    batch dual purchase_click_full_outer plus an equivalence test, so
-    the RIGHT side's watermark-held null-emission path was never
-    hash-checked under replay — round-8 verdict item 2).
-
-    Both sides now hold state until the watermark proves their match
-    window closed: an unmatched purchase emits (p_*, NULL) once
-    watermark > p_ts + horizon, and an unmatched click emits (NULL, c_*)
-    once watermark > c_ts (no purchase can precede it within the horizon
-    anymore).  At test volume all three output classes are non-vacuous
-    (~29 matches, ~2k unmatched purchases, ~6k unmatched clicks at
-    sf0.01), so a premature/lost null emission on EITHER side shifts the
-    driver's value hash.
-
-    Replay discipline identical to the left-outer dual (documented
-    sentinel rules): the flush sentinels pass through BOTH event-type
-    filters so each side's watermark node sees them; n_sentinels=2
-    because outer-join eviction uses the watermark computed at the END
-    of the PREVIOUS batch; sentinel output rows are dropped after the
-    sink — on BOTH sides here, via coalesce(event_id, 0) >= 0, since a
-    sentinel can surface as a left row, a right row, or a
-    sentinel-sentinel match.
-
-    Scale shape: keyed state on user_id bounded by the range condition
-    on both stores — O(rate x (horizon + delay)) per key, never
-    O(stream); state partitions right-sized to 4 (saved/restored) for
-    replay-scale stores, exactly the left-outer dual's tuning."""
-    from odni_apache_beam_consumer_spark.sources import replay as R
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_full_outer_join,
-    )
-
-    with shuffle_partitions(spark, 4):
-        # Cached fixture shared with the left-outer dual; two files per
-        # trigger — same eviction argument as that dual's fixture note.
-        chunks = R.replay_fixture(
-            spark, sf_dir, n_chunks=3, flush_sentinel=True, n_sentinels=2
-        )
-        stream = R.read_stream(spark, chunks, max_files_per_trigger=2).where(
-            F.col("user_id").isNotNull()
-        )
-        purchases = stream.where(
-            F.col("event_type").isin("purchase", "__flush__")
-        )
-        clicks = stream.where(
-            F.col("event_type").isin("click", "__flush__")
-        )
-        joined = stream_stream_full_outer_join(
-            purchases, clicks, horizon="1 hour"
-        )
-        out = joined.select(
-            "p_event_id",
-            "p_user_id",
-            "c_event_id",
-            "c_user_id",
-            F.floor(F.col("c_value") * 10000)
-            .cast("long")
-            .alias("c_value_scaled"),
-        )
-        q = SK.to_memory(out, "ssfouter_dual_mem")
-        assert q.awaitTermination(300), "replay drain timed out (300 s)"
-        return (
-            spark.table("ssfouter_dual_mem")
-            .where(
-                (F.coalesce(F.col("p_event_id"), F.lit(0)) >= 0)
-                & (F.coalesce(F.col("c_event_id"), F.lit(0)) >= 0)
-            )
-            .localCheckpoint(eager=True)
-        )
+    """The stream-stream FULL OUTER interval join through a real
+    micro-batch replay (:func:`_interval_join_dual`), hash-checked
+    against the batch full outer join.  Both sides hold state until the
+    watermark proves their match window closed: an unmatched purchase
+    emits (p_*, NULL) once watermark > p_ts + horizon, and an unmatched
+    click emits (NULL, c_*) once watermark > c_ts (no purchase can
+    precede it within the horizon anymore).  This is the only replay
+    that hash-checks the RIGHT side's watermark-held null emission.  At
+    test volume all three output classes are non-vacuous (~29 matches,
+    ~2k unmatched purchases, ~6k unmatched clicks at sf0.01), so a
+    premature or lost null emission on EITHER side shifts the driver's
+    value hash."""
+    return _interval_join_dual(spark, sf_dir, "fullOuter")
 
 
 @query(

@@ -2,10 +2,12 @@
 window functions, streaming windows in their batch-expressible form).
 
 The reference has none of these (SURVEY.md §2.2: ABSENT).  The tumbling /
-sliding / session queries here are the *batch* duals of the streaming
-operators in ``odni_apache_beam_consumer_spark/streaming/`` — same
-``F.window`` / ``F.session_window`` expressions, which is exactly how we
-test streaming correctness (batch-stream equivalence, SURVEY.md §5.2).
+sliding / session queries and the two outer purchase-click joins here are
+the *batch* duals of the streaming operators in
+``odni_apache_beam_consumer_spark/streaming/windows.py`` — the batch duals
+call these functions (watermarks are no-ops on batch frames), so the
+DuckDB oracle checks the streaming code itself, and batch-stream
+equivalence (SURVEY.md §5.2) tests its streaming execution.
 """
 
 from __future__ import annotations
@@ -16,8 +18,14 @@ from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.catalog import load_table
 from odni_apache_beam_consumer_spark.plans.registry import query
+from odni_apache_beam_consumer_spark.streaming.windows import (
+    TS_FMT_SPARK,
+    interval_join,
+    session_counts,
+    sliding_counts,
+    tumbling_counts,
+)
 
-TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
@@ -166,26 +174,13 @@ GROUP BY 1, 2
 """,
 )
 def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 6h event-time window aggregate (batch dual of the
-    streaming operator; identical F.window expression there).
+    """Tumbling 6h event-time window aggregate: the streaming operator
+    ``streaming.windows.tumbling_counts`` run on the batch events table.
 
     Spark's window start is epoch-aligned, which for whole-hour widths
     matches DuckDB's midnight-aligned time_bucket.
     """
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return tumbling_counts(load_table(spark, sf_dir, "events"), width="6 hours")
 
 
 @query(
@@ -208,20 +203,11 @@ FROM w GROUP BY 1, 2
 )
 def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window: 1-day width, 12h slide — every event lands in
-    exactly two windows (Spark expands rows, then hash-aggregates)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 day", "12 hours").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+    exactly two windows (Spark expands rows, then hash-aggregates).  The
+    streaming operator ``streaming.windows.sliding_counts`` on the batch
+    events table."""
+    return sliding_counts(
+        load_table(spark, sf_dir, "events"), width="1 day", slide="12 hours"
     )
 
 
@@ -249,25 +235,13 @@ FROM s GROUP BY user_id, sid
 """,
 )
 def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-minute inactivity gap) per user — Spark's
-    native ``session_window`` (merging-state windows; end = last ts + gap).
-    The oracle reconstructs identical sessions with LAG + cumulative SUM.
+    """Session windows (30-minute inactivity gap) per user — the
+    streaming operator ``streaming.windows.session_counts`` (Spark's
+    native ``session_window``: merging-state windows, end = last ts +
+    gap) on the batch events table.  The oracle reconstructs identical
+    sessions with LAG + cumulative SUM.
     """
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", TS_FMT_SPARK).alias("session_start"),
-            F.date_format("w.end", TS_FMT_SPARK).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return session_counts(load_table(spark, sf_dir, "events"), gap="30 minutes")
 
 
 @query(
@@ -285,10 +259,10 @@ LEFT OUTER JOIN (SELECT * FROM events WHERE event_type = 'click') c
 """,
 )
 def purchase_click_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch dual of streaming.windows.stream_stream_left_outer_join —
-    the SAME function body runs here on batch frames (watermarks no-op),
+    """Batch dual of ``streaming.windows.interval_join(how="leftOuter")``
+    — the SAME function body runs here on batch frames (watermarks no-op),
     so the driver's DuckDB hash check covers the join semantics while
-    tests/test_streaming.py::test_stream_stream_left_outer_join_equivalence
+    tests/test_streaming.py::test_interval_join_equivalence[leftOuter]
     proves the streaming execution (watermark-held state, null emission
     after horizon closure) converges to exactly this result.
 
@@ -297,16 +271,13 @@ def purchase_click_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     join (no explode, no second exchange), and the outer side's NULL
     rows cost nothing extra.  In streaming the same condition bounds
     both state stores."""
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_left_outer_join,
-    )
-
     e = load_table(spark, sf_dir, "events")
-    return stream_stream_left_outer_join(
+    return interval_join(
         e.where(F.col("event_type") == "purchase"),
         e.where(F.col("event_type") == "click"),
+        how="leftOuter",
         horizon="1 hour",
-    )
+    ).drop("c_user_id")
 
 
 @query(
@@ -414,19 +385,16 @@ FULL OUTER JOIN (SELECT * FROM events WHERE event_type = 'click') c
 """,
 )
 def purchase_click_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch dual of streaming.windows.stream_stream_full_outer_join (the
-    SAME function body; watermarks no-op on batch frames) — completes the
-    stream-stream join family's oracle coverage: unmatched rows from BOTH
-    sides survive with nulls.  Same scale shape as the left-outer dual:
+    """Batch dual of ``streaming.windows.interval_join(how="fullOuter")``
+    (the SAME function body; watermarks no-op on batch frames) — completes
+    the stream-stream join family's oracle coverage: unmatched rows from
+    BOTH sides survive with nulls.  Same scale shape as the left-outer dual:
     one user_id shuffle per side, time predicate as join residual."""
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_full_outer_join,
-    )
-
     e = load_table(spark, sf_dir, "events")
-    return stream_stream_full_outer_join(
+    return interval_join(
         e.where(F.col("event_type") == "purchase"),
         e.where(F.col("event_type") == "click"),
+        how="fullOuter",
         horizon="1 hour",
     )
 

@@ -1,14 +1,12 @@
 """Rate sources: synthetic load generators for streaming tests/benchmarks.
 
-SURVEY §2.2 sources row.  Two built-in generators:
+SURVEY §2.2 sources row.  One built-in generator, ``rate-micro-batch``:
+deterministic, exactly ``rows_per_batch`` rows per micro-batch with
+monotonically increasing values and fixed per-batch timestamps;
+replayable, so assertions are stable.  (Spark's wall-clock ``rate``
+source is not wrapped: nothing here can assert on its output.)
 
-  * ``rate`` — rows-per-second with (timestamp, value), unbounded; the
-    standard throughput/latency smoke source.
-  * ``rate-micro-batch`` — deterministic: exactly ``rows_per_batch`` rows
-    per micro-batch with monotonically increasing values and fixed
-    per-batch timestamps; replayable, so assertions are stable.
-
-``as_events(...)`` shapes either into the engine's events schema so every
+``as_events(...)`` shapes it into the engine's events schema so every
 streaming operator (windows, dedup, stateful) can run against generated
 load with no files or broker.
 """
@@ -17,18 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def rate_stream(
-    spark: SparkSession, rows_per_second: int = 1000, num_partitions: int | None = None
-) -> DataFrame:
-    reader = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-    )
-    if num_partitions is not None:
-        reader = reader.option("numPartitions", str(num_partitions))
-    return reader.load()
 
 
 def rate_micro_batch_stream(

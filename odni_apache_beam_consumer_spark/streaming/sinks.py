@@ -10,9 +10,10 @@ dump.  Its Spark-native analogs are first-class sinks:
   * foreachBatch — arbitrary per-micro-batch batch logic (idempotent
     writes to any batch sink; the production escape hatch).
 
-Each helper starts and returns the StreamingQuery.  ``available_now=True``
-drains everything currently available then stops — the engine's analog of
-the reference's bounded ``max_num_records=3`` read (main.py:106).
+Each helper starts and returns the StreamingQuery (``drain`` waits for
+it and returns the memory table).  ``availableNow`` drains everything
+currently available then stops — the engine's analog of the reference's
+bounded ``max_num_records=3`` read (main.py:106).
 """
 
 from __future__ import annotations
@@ -48,17 +49,22 @@ def to_console(
     return _trigger(w, available_now).start()
 
 
-def to_memory(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Memory sink: results land in the in-memory table ``name`` (query it
-    with ``spark.table(name)``). Test/assertion sink — the whole result
-    set lives on the driver, so never a production path."""
+def to_memory(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
+    """Memory sink, drained with ``availableNow``: results land in the
+    in-memory table ``name`` (query it with ``spark.table(name)``).
+    Test/assertion sink — the whole result set lives on the driver, so
+    never a production path."""
     w = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    return _trigger(w, available_now).start()
+    return w.trigger(availableNow=True).start()
+
+
+def drain(df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:
+    """Run ``df`` to completion into the memory table ``name`` and return
+    that table.  A drain that has not terminated within 300 s raises
+    instead of returning a partial table."""
+    q = to_memory(df, name, output_mode)
+    assert q.awaitTermination(300), f"memory drain {name!r} timed out (300 s)"
+    return df.sparkSession.table(name)
 
 
 def foreach_batch(

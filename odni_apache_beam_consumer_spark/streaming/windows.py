@@ -1,12 +1,13 @@
 """Streaming windowed aggregations: tumbling / sliding / session windows
 with event-time watermarks.
 
-These are the streaming duals of the batch queries in
-``plans/windows.py`` — the window expressions are shared by construction
-(same F.window / F.session_window calls), which is what makes
-batch-stream equivalence a valid oracle (SURVEY.md §5.2): run the stream
-to completion with ``availableNow`` and the result must equal the batch
-query on the same rows (watermark drops nothing once the stream drains).
+These are the streaming operators whose batch duals are the queries in
+``plans/windows.py`` — the batch duals call these functions (watermarks
+are no-ops on batch frames), so the DuckDB oracle checks this code, and
+batch-stream equivalence is a valid streaming oracle (SURVEY.md §5.2):
+run the stream to completion with ``availableNow`` and the result must
+equal the batch query on the same rows (watermark drops nothing once the
+stream drains).
 
 State/scale notes: windowed aggregation state is keyed by
 (window, grouping keys); the watermark bounds state size — without it an
@@ -17,18 +18,16 @@ state spills off-heap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 
 
-def tumbling_counts(
-    events: DataFrame, width: str = "6 hours", watermark: str = "1 day"
-) -> DataFrame:
+def _window_counts(events: DataFrame, window: Column, watermark: str) -> DataFrame:
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        .groupBy(window.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -40,6 +39,12 @@ def tumbling_counts(
             "sum_value",
         )
     )
+
+
+def tumbling_counts(
+    events: DataFrame, width: str = "6 hours", watermark: str = "1 day"
+) -> DataFrame:
+    return _window_counts(events, F.window("ts", width), watermark)
 
 
 def sliding_counts(
@@ -48,20 +53,7 @@ def sliding_counts(
     slide: str = "12 hours",
     watermark: str = "1 day",
 ) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _window_counts(events, F.window("ts", width, slide), watermark)
 
 
 def session_counts(
@@ -95,53 +87,30 @@ def dedup_within_watermark(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def stream_stream_join(
-    purchases: DataFrame, clicks: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream inner join: clicks within ``horizon`` after a purchase
-    by the same user. Both sides watermarked; the time-range condition
-    bounds the join state on both sides."""
-    p = purchases.withWatermark("ts", "1 day").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = clicks.withWatermark("ts", "1 day").select(
-        F.col("event_id").alias("c_event_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("c_value"),
-    )
-    return p.join(
-        c,
-        (p.p_user_id == c.c_user_id)
-        & (c.c_ts > p.p_ts)
-        & (c.c_ts <= p.p_ts + F.expr(f"INTERVAL {horizon}")),
-        "inner",
-    ).select("p_event_id", "c_event_id", "p_user_id", "c_value")
-
-
-def stream_stream_left_outer_join(
+def interval_join(
     purchases: DataFrame,
     clicks: DataFrame,
+    how: str = "inner",
     horizon: str = "1 hour",
     state_delay: str = "1 day",
 ) -> DataFrame:
-    """Stream-stream LEFT OUTER join: every purchase, matched with clicks
-    within ``horizon`` after it — or emitted with NULL click columns once
-    the event-time watermark proves no match can still arrive.
+    """Stream-stream interval join: purchases matched with same-user
+    clicks within ``horizon`` after them, as an ``inner``, ``leftOuter``
+    or ``fullOuter`` join.  Returns (p_event_id, p_user_id, c_event_id,
+    c_user_id, c_value).
 
-    The outer side is what makes this stateful in a way the inner join is
-    not: an unmatched purchase must be HELD until
-    ``watermark > p_ts + horizon`` and only then emitted as a null row
-    (Spark evicts left-side state at watermark passage; the same
-    condition bounds the state store on both sides, so state is
-    O(events within delay + horizon), not O(stream)).  Works identically
-    on batch DataFrames (the watermark is a no-op there), which is what
-    the equivalence test exploits.  A drained availableNow run needs the
-    replay's far-future flush sentinel to push the watermark past the
-    last real event, else the final horizon's worth of unmatched rows
-    stays in state (documented replay gotcha)."""
+    Both sides are watermarked by ``state_delay``, and the time-range
+    condition bounds the join state on both sides: state is
+    O(events within delay + horizon), not O(stream).  An outer side is
+    held until the watermark proves no match can still arrive — an
+    unmatched purchase once ``watermark > p_ts + horizon``, an unmatched
+    click (full outer) once ``watermark > c_ts`` — and only then emitted
+    with NULL columns for the other side.  A drained availableNow run
+    needs the replay's far-future flush sentinel to push the watermark
+    past the last real event, else the final horizon's worth of
+    unmatched rows stays in state (documented replay gotcha).  Works
+    identically on batch DataFrames (the watermark is a no-op there),
+    which is what the batch duals and the equivalence test exploit."""
     p = purchases.withWatermark("ts", state_delay).select(
         F.col("event_id").alias("p_event_id"),
         F.col("user_id").alias("p_user_id"),
@@ -158,8 +127,8 @@ def stream_stream_left_outer_join(
         (p.p_user_id == c.c_user_id)
         & (c.c_ts > p.p_ts)
         & (c.c_ts <= p.p_ts + F.expr(f"INTERVAL {horizon}")),
-        "leftOuter",
-    ).select("p_event_id", "p_user_id", "c_event_id", "c_value")
+        how,
+    ).select("p_event_id", "p_user_id", "c_event_id", "c_user_id", "c_value")
 
 
 def enrich_with_dim(events: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:
@@ -199,39 +168,3 @@ def ingest_dedup_against_corpus(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keys)
     )
-
-
-def stream_stream_full_outer_join(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    horizon: str = "1 hour",
-    state_delay: str = "1 day",
-) -> DataFrame:
-    """Stream-stream FULL OUTER join: matched purchase/click pairs, plus
-    purchases with no click in the horizon (null click columns) AND
-    clicks following no purchase (null purchase columns).
-
-    Completes the stream-stream join family (inner / left outer / full
-    outer): now BOTH sides hold state until the watermark proves their
-    match window closed, so both emit watermark-delayed null rows.  The
-    time-range condition bounds both state stores exactly as in the left
-    outer case; batch execution of the same body (watermarks no-op) is
-    the oracle-checked dual."""
-    p = purchases.withWatermark("ts", state_delay).select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = clicks.withWatermark("ts", state_delay).select(
-        F.col("event_id").alias("c_event_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
-        F.col("value").alias("c_value"),
-    )
-    return p.join(
-        c,
-        (p.p_user_id == c.c_user_id)
-        & (c.c_ts > p.p_ts)
-        & (c.c_ts <= p.p_ts + F.expr(f"INTERVAL {horizon}")),
-        "fullOuter",
-    ).select("p_event_id", "p_user_id", "c_event_id", "c_user_id", "c_value")

@@ -2,7 +2,7 @@
 
 * the replay-file layout (staggered mtimes) — sources/replay.py;
 * the shuffle/state-partition scope — session.py;
-* the memory-sink drain of the plans — streaming/sinks.to_memory;
+* the memory-sink drain of the plans — streaming/sinks.drain;
 * the versioned-snapshot commit (the commit log and its ``_LATEST`` hint)
   — txtable.py;
 * the checkpoint of an iterative loop's round — caches.iterate.
@@ -59,6 +59,8 @@ def _offenders(pkg: str) -> list[str]:
                     and rel.startswith("plans/")
                 ):
                     found.append(f'{where}: writeStream.format("memory")')
+                elif _is_call(node, "SK", "to_memory") and rel.startswith("plans/"):
+                    found.append(f"{where}: SK.to_memory(")
                 elif _is_call(node, "os", "replace") and rel.startswith("streaming/"):
                     found.append(f"{where}: pointer os.replace")
                 elif rel != "txtable.py":
@@ -74,8 +76,10 @@ def _offenders(pkg: str) -> list[str]:
 def test_replay_harness_decisions_have_one_owner():
     """No staggered-mtime write outside sources/replay.py, no
     shuffle-partition ``conf.set`` outside session.py, no hand-written
-    memory-sink drain under plans/, no pointer file or commit link
-    outside txtable.py, and no pointer flip under streaming/."""
+    memory-sink drain under plans/ (a ``writeStream.format("memory")``
+    or an ``SK.to_memory(`` whose timeout goes unchecked), no pointer
+    file or commit link outside txtable.py, and no pointer flip under
+    streaming/."""
     offenders = _offenders(PKG)
     assert not offenders, offenders
 

@@ -60,9 +60,9 @@ def test_kafka_shaped_stream_pipeline(spark, sf_dir, tmp_path):
     )
     stream = R.read_stream(spark, replay_dir)
     decoded = decode_json_value(R.as_kafka_records(stream), EVENTS_JSON_SCHEMA)
-    q = sinks.to_memory(tumbling_counts(decoded), "t_kafka_shape", available_now=True)
-    q.awaitTermination(300)
-    got = spark.table("t_kafka_shape").where(~F.col("event_type").isin("__flush__"))
+    got = sinks.drain(tumbling_counts(decoded), "t_kafka_shape").where(
+        ~F.col("event_type").isin("__flush__")
+    )
     want = tumbling_counts(load_table(spark, sf_dir, "events"))
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
@@ -133,8 +133,8 @@ def test_session_window_on_rocksdb_state_store(sf_dir, tmp_path):
         spark, sf_dir, str(tmp_path / "chunks"), n_chunks=4, flush_sentinel=True
     )
     stream = R.read_stream(spark, replay_dir)
-    q = sinks.to_memory(tumbling_counts(stream), "t_rocks", available_now=True)
-    q.awaitTermination(300)
-    got = spark.table("t_rocks").where(~F.col("event_type").isin("__flush__"))
+    got = sinks.drain(tumbling_counts(stream), "t_rocks").where(
+        ~F.col("event_type").isin("__flush__")
+    )
     want = tumbling_counts(load_table(spark, sf_dir, "events"))
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}

@@ -56,8 +56,8 @@ def test_streaming_observed_metrics(spark, sf_dir, tmp_path):
         F.count(F.lit(1)).alias("n_rows"),
         F.approx_count_distinct("user_id").alias("n_users_approx"),
     )
-    q = sinks.to_memory(stream, "t_observe", available_now=True)
-    q.awaitTermination(300)
+    q = sinks.to_memory(stream, "t_observe")
+    assert q.awaitTermination(300)
     got = last_observed(q, "batch_counts")
     assert got is not None
     assert got["n_rows"] > 0

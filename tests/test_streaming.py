@@ -26,9 +26,9 @@ from odni_apache_beam_consumer_spark.sources import replay as R
 from odni_apache_beam_consumer_spark.streaming import sinks
 from odni_apache_beam_consumer_spark.streaming.windows import (
     dedup_within_watermark,
+    interval_join,
     session_counts,
     sliding_counts,
-    stream_stream_join,
     tumbling_counts,
 )
 from odni_apache_beam_consumer_spark.txtable import TransactionalTable
@@ -42,12 +42,6 @@ def replay_dir(spark, sf_dir, tmp_path_factory) -> str:
     return R.write_replay_chunks(spark, sf_dir, out, n_chunks=6, flush_sentinel=True)
 
 
-def _drain(spark, df, name: str, output_mode: str = "append"):
-    q = sinks.to_memory(df, name, output_mode=output_mode, available_now=True)
-    q.awaitTermination(300)
-    return spark.table(name)
-
-
 def _rows(df, drop_sentinel_col: str | None = None) -> set[tuple]:
     if drop_sentinel_col is not None:
         df = df.where(~F.col(drop_sentinel_col).isin("__flush__"))
@@ -56,21 +50,21 @@ def _rows(df, drop_sentinel_col: str | None = None) -> set[tuple]:
 
 def test_tumbling_equivalence(spark, sf_dir, replay_dir):
     stream = R.read_stream(spark, replay_dir)
-    got = _drain(spark, tumbling_counts(stream), "t_tumbling")
+    got = sinks.drain(tumbling_counts(stream), "t_tumbling")
     want = tumbling_counts(load_table(spark, sf_dir, "events"))
     assert _rows(got, "event_type") == _rows(want)
 
 
 def test_sliding_equivalence(spark, sf_dir, replay_dir):
     stream = R.read_stream(spark, replay_dir)
-    got = _drain(spark, sliding_counts(stream), "t_sliding")
+    got = sinks.drain(sliding_counts(stream), "t_sliding")
     want = sliding_counts(load_table(spark, sf_dir, "events"))
     assert _rows(got, "event_type") == _rows(want)
 
 
 def test_session_equivalence(spark, sf_dir, replay_dir):
     stream = R.read_stream(spark, replay_dir)
-    got = _drain(spark, session_counts(stream), "t_session")
+    got = sinks.drain(session_counts(stream), "t_session")
     want = session_counts(load_table(spark, sf_dir, "events"))
     got_rows = {t for t in _rows(got) if t[0] >= 0}  # drop sentinel user -1
     assert got_rows == _rows(want)
@@ -82,7 +76,7 @@ def test_dedup_within_watermark_equivalence(spark, sf_dir, replay_dir):
     s1 = R.read_stream(spark, replay_dir)
     s2 = R.read_stream(spark, replay_dir)
     deduped = dedup_within_watermark(s1.unionByName(s2), keys=["event_id"])
-    got = _drain(spark, deduped.select("event_id"), "t_dedup")
+    got = sinks.drain(deduped.select("event_id"), "t_dedup")
     n_got = got.where(F.col("event_id") >= 0).distinct().count()
     n_raw = got.where(F.col("event_id") >= 0).count()
     n_want = load_table(spark, sf_dir, "events").count()
@@ -124,32 +118,16 @@ def test_redelivery_chunks_are_a_real_adversary(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_stream_join_equivalence(spark, sf_dir, replay_dir):
-    purchases = R.read_stream(spark, replay_dir).where(F.col("event_type") == "purchase")
-    clicks = R.read_stream(spark, replay_dir).where(F.col("event_type") == "click")
-    got = _drain(
-        spark, stream_stream_join(purchases, clicks, horizon="1 hour"), "t_ssj"
-    )
-    e = load_table(spark, sf_dir, "events")
-    want = stream_stream_join(
-        e.where(F.col("event_type") == "purchase"),
-        e.where(F.col("event_type") == "click"),
-        horizon="1 hour",
-    )
-    assert _rows(got) == _rows(want)
-    assert want.count() > 0  # the equivalence is not vacuous
-
-
-@pytest.mark.slow
-def test_stream_stream_left_outer_join_equivalence(spark, sf_dir, replay_dir):
-    """Outer emission is the hard part: unmatched purchases must surface
-    with NULL click columns once the watermark proves no match can
-    arrive.  The flush sentinel (event_id < 0) is kept INSIDE both input
-    streams so it reaches the watermark operator and closes the final
-    horizon; sentinel rows are dropped from the comparison."""
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_left_outer_join,
-    )
+@pytest.mark.parametrize("how", ["inner", "leftOuter", "fullOuter"])
+def test_interval_join_equivalence(spark, sf_dir, replay_dir, how):
+    """The drained stream-stream interval join equals the same function
+    on the batch table.  Outer emission is the hard part: unmatched rows
+    must surface with NULL columns for the other side once the watermark
+    proves no match can arrive.  The flush sentinel (event_id < 0) is
+    kept INSIDE both input streams so it reaches the watermark operator
+    and closes the final horizon; sentinel rows are dropped from the
+    comparison.  Every row class the join type can emit — matches,
+    purchase-only, click-only — must be non-vacuous."""
 
     def sides(df):
         keep_p = (F.col("event_type") == "purchase") | (F.col("event_id") < 0)
@@ -157,22 +135,25 @@ def test_stream_stream_left_outer_join_equivalence(spark, sf_dir, replay_dir):
         return df.where(keep_p), df.where(keep_c)
 
     sp, sc = sides(R.read_stream(spark, replay_dir))
-    got = _drain(spark, stream_stream_left_outer_join(sp, sc), "t_ssloj")
-    e = load_table(spark, sf_dir, "events")
-    bp, bc = sides(e)
-    want = stream_stream_left_outer_join(bp, bc)
+    got = sinks.drain(interval_join(sp, sc, how=how), f"t_interval_{how.lower()}")
+    bp, bc = sides(load_table(spark, sf_dir, "events"))
+    want = interval_join(bp, bc, how=how)
 
     def key(df):
+        real = (F.coalesce(F.col("p_event_id"), F.lit(0)) >= 0) & (
+            F.coalesce(F.col("c_event_id"), F.lit(0)) >= 0
+        )
         return {
-            (r.p_event_id, r.c_event_id, None if r.c_value is None else round(r.c_value, 6))
-            for r in df.where(F.col("p_event_id") >= 0).collect()
+            (r.p_event_id, r.c_event_id,
+             None if r.c_value is None else round(r.c_value, 6))
+            for r in df.where(real).collect()
         }
 
     got_rows, want_rows = key(got), key(want)
     assert got_rows == want_rows
-    # Non-vacuous on BOTH branches: real matches and real null-emissions.
-    assert any(c is not None for _, c, _ in want_rows)
-    assert any(c is None for _, c, _ in want_rows)
+    assert any(p is not None and c is not None for p, c, _ in want_rows)
+    assert any(c is None for _, c, _ in want_rows) == (how != "inner")
+    assert any(p is None for p, _, _ in want_rows) == (how == "fullOuter")
 
 
 def test_funnel_attribution_stream_equivalence(spark, sf_dir, replay_dir):
@@ -185,8 +166,8 @@ def test_funnel_attribution_stream_equivalence(spark, sf_dir, replay_dir):
         funnel_attribution_stream,
     )
 
-    got = _drain(
-        spark, funnel_attribution_stream(R.read_stream(spark, replay_dir)), "t_funnel"
+    got = sinks.drain(
+        funnel_attribution_stream(R.read_stream(spark, replay_dir)), "t_funnel"
     )
     want = all_queries()["funnel_attribution"](spark, sf_dir)
 
@@ -253,10 +234,8 @@ def test_late_data_dropped(spark, tmp_path):
     late_dir = R.publish_chunks(parts, str(tmp_path / "late_chunks"))
 
     stream = R.read_stream(spark, late_dir)
-    q = sinks.to_memory(
-        tumbling_counts(stream, watermark="1 day"), "t_late", available_now=True
-    )
-    q.awaitTermination(300)
+    q = sinks.to_memory(tumbling_counts(stream, watermark="1 day"), "t_late")
+    assert q.awaitTermination(300)
     dropped = sum(
         s.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
@@ -277,7 +256,7 @@ def test_stateful_running_totals_equivalence(spark, sf_dir, replay_dir):
     from odni_apache_beam_consumer_spark.streaming.stateful import running_user_totals
 
     stream = R.read_stream(spark, replay_dir)
-    got = _drain(spark, running_user_totals(stream), "t_stateful")
+    got = sinks.drain(running_user_totals(stream), "t_stateful")
     last = (
         got.where(F.col("user_id") >= 0)
         .withColumn(
@@ -310,8 +289,8 @@ def test_rate_micro_batch_source(spark):
     )
 
     stream = as_events(rate_micro_batch_stream(spark, rows_per_batch=500))
-    q = sinks.to_memory(stream, "t_rate", available_now=True)
-    q.awaitTermination(120)
+    q = sinks.to_memory(stream, "t_rate")
+    assert q.awaitTermination(120)
     got = spark.table("t_rate")
     assert got.count() == 500  # availableNow drains exactly one batch
     assert got.select("user_id").distinct().count() == 100
@@ -401,7 +380,7 @@ def test_stream_static_enrichment(spark, sf_dir, replay_dir):
     enriched = enrich_with_dim(stream, dim).where(
         F.col("event_type") != "__flush__"
     ).select("event_id", "user_id", "cohort")
-    got = _drain(spark, enriched, "enriched_events")
+    got = sinks.drain(enriched, "enriched_events")
     expected = enrich_with_dim(events, dim).select("event_id", "user_id", "cohort")
     assert _rows(got) == _rows(expected)
 
@@ -427,7 +406,7 @@ def test_transform_with_state_high_water(spark, sf_dir, replay_dir):
     )
     try:
         stream = R.read_stream(spark, replay_dir)
-        got = _drain(spark, user_high_water_marks(stream), "t_tws")
+        got = sinks.drain(user_high_water_marks(stream), "t_tws")
     finally:
         if prev:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
@@ -556,8 +535,8 @@ def test_update_mode_converges_to_batch_counts(spark, sf_dir, tmp_path):
     counts = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("total")
     )
-    q = sinks.to_memory(counts, "t_update", output_mode="update", available_now=True)
-    q.awaitTermination(300)
+    q = sinks.to_memory(counts, "t_update", output_mode="update")
+    assert q.awaitTermination(300)
     # Memory sink in update mode appends each emission; keep the LAST row
     # per key (emission order = micro-batch order).
     hist = spark.table("t_update").toPandas()
@@ -743,9 +722,7 @@ def test_ingest_dedup_against_corpus_equivalence(spark, sf_dir, replay_dir):
     events = load_table(spark, sf_dir, "events")
     seen = events.where(F.col("event_id") % 2 == 0).select("event_id")
     stream = R.read_stream(spark, replay_dir)
-    got = _drain(
-        spark, ingest_dedup_against_corpus(stream, seen), "t_ingest_dedup"
-    )
+    got = sinks.drain(ingest_dedup_against_corpus(stream, seen), "t_ingest_dedup")
     got_ids = {r.event_id for r in got.select("event_id").collect() if r.event_id >= 0}
     want_ids = {
         r.event_id
@@ -754,44 +731,6 @@ def test_ingest_dedup_against_corpus_equivalence(spark, sf_dir, replay_dir):
     assert got_ids == want_ids
     # exactly-once: no key emitted twice
     assert got.where(F.col("event_id") >= 0).count() == len(got_ids)
-
-
-@pytest.mark.slow
-def test_stream_stream_full_outer_join_equivalence(spark, sf_dir, replay_dir):
-    """Full outer adds the second held side: clicks with no preceding
-    purchase must also surface (null purchase columns) after the
-    watermark closes their window.  All three row classes — matches,
-    purchase-only, click-only — must be non-vacuous."""
-    from odni_apache_beam_consumer_spark.streaming.windows import (
-        stream_stream_full_outer_join,
-    )
-
-    def sides(df):
-        keep_p = (F.col("event_type") == "purchase") | (F.col("event_id") < 0)
-        keep_c = (F.col("event_type") == "click") | (F.col("event_id") < 0)
-        return df.where(keep_p), df.where(keep_c)
-
-    sp, sc = sides(R.read_stream(spark, replay_dir))
-    got = _drain(spark, stream_stream_full_outer_join(sp, sc), "t_ssfoj")
-    e = load_table(spark, sf_dir, "events")
-    bp, bc = sides(e)
-    want = stream_stream_full_outer_join(bp, bc)
-
-    def key(df):
-        real = (F.coalesce(F.col("p_event_id"), F.lit(0)) >= 0) & (
-            F.coalesce(F.col("c_event_id"), F.lit(0)) >= 0
-        )
-        return {
-            (r.p_event_id, r.c_event_id,
-             None if r.c_value is None else round(r.c_value, 6))
-            for r in df.where(real).collect()
-        }
-
-    got_rows, want_rows = key(got), key(want)
-    assert got_rows == want_rows
-    assert any(p is not None and c is not None for p, c, _ in want_rows)
-    assert any(c is None for _, c, _ in want_rows)  # purchase-only
-    assert any(p is None for p, _, _ in want_rows)  # click-only
 
 
 def test_streaming_index_maintenance_pipeline(spark, sf_dir, tmp_path):

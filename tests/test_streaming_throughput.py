@@ -45,8 +45,8 @@ def test_state_bounded_over_many_batches(spark, sf_dir, long_replay_dir):
     listener = StateMetricsListener().attach(spark)
     try:
         stream = tumbling_counts(R.read_stream(spark, long_replay_dir))
-        q = sinks.to_memory(stream, "tp_tumbling", available_now=True)
-        q.awaitTermination(600)
+        q = sinks.to_memory(stream, "tp_tumbling")
+        assert q.awaitTermination(600)
         assert listener.settled(), "listener bus did not drain"
     finally:
         listener.detach(spark)
@@ -119,8 +119,8 @@ def test_listener_metrics_match_query_progress(spark, sf_dir, long_replay_dir):
     listener = StateMetricsListener().attach(spark)
     try:
         stream = tumbling_counts(R.read_stream(spark, long_replay_dir))
-        q = sinks.to_memory(stream, "tp_tumbling2", available_now=True)
-        q.awaitTermination(600)
+        q = sinks.to_memory(stream, "tp_tumbling2")
+        assert q.awaitTermination(600)
         assert listener.settled()
         progress_rows = sum(p["numInputRows"] for p in q.recentProgress)
     finally:

@@ -15,10 +15,11 @@ Representation: m bits packed into m/64 longs, stored SPARSE as a
 (word_idx, mask) table — empty words are absent, so the bitmap costs
 O(set bits), broadcasts cheaply, and the probe is a broadcast equi-join
 per hash function plus a bitwise AND.  k = 2 hash functions derived from
-md5 hex digits (the package's standard cross-engine digit-arithmetic
-trick), so the filter is fully deterministic: membership is a pure
-function of the key, with NO false negatives by construction and a
-false-positive rate of roughly (n_set_bits / m)^2.
+md5 hex digits (rendered by ``operators/sampling.py::hex_digits``, the
+package's one cross-engine digit renderer), so the filter is fully
+deterministic: membership is a pure function of the key, with NO false
+negatives by construction and a false-positive rate of roughly
+(n_set_bits / m)^2.
 
 Everything is JVM-side codegen (md5 / instr / shift / bit_or) — zero
 Python in the hot path.
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_HEX = "0123456789abcdef"
+from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
 
 # Default geometry: 2^16 bits in 1024 longs.  At ~1% occupancy per hash
 # that is a <1e-2 false-positive rate; scale m_bits with expected corpus
@@ -37,21 +38,12 @@ _HEX = "0123456789abcdef"
 M_BITS = 65536
 
 
-def _hex_digit(m: str, pos: int) -> str:
-    return f"(instr('{_HEX}', substr({m}, {pos}, 1)) - 1)"
-
-
 def _bit_exprs(key_expr: str, which: int, salt: str) -> tuple[Column, Column]:
     """(word_idx, mask) for hash function ``which`` (0 or 1) of the key.
 
     16 bits from md5 hex digits [1..4] or [5..8]: digits*16^j folded, top
     10 bits select the long, low 6 the bit."""
-    m = f"md5(concat('{salt}:', CAST({key_expr} AS STRING)))"
-    o = 1 + 4 * which
-    bit = (
-        f"({_hex_digit(m, o)} * 4096 + {_hex_digit(m, o + 1)} * 256 + "
-        f"{_hex_digit(m, o + 2)} * 16 + {_hex_digit(m, o + 3)})"
-    )
+    bit = f"({hex_digits(md5_key(f'{salt}:', key_expr), 1 + 4 * which, 4)})"
     word = F.expr(f"CAST({bit} DIV 64 AS INT)")
     mask = F.expr(f"shiftleft(1L, CAST({bit} % 64 AS INT))")
     return word, mask
@@ -114,15 +106,6 @@ def with_bloom_hit(
         .withColumn(out, F.coalesce(hit, F.lit(False)))
         .drop("_pw0", "_pm0", "_pw1", "_pm1", "_w0", "_m0", "_w1", "_m1")
     )
-
-
-def bloom_prefilter(
-    batch: DataFrame, bloom: DataFrame, key_expr: str, salt: str = "bloom"
-) -> DataFrame:
-    """Rows of ``batch`` whose key is MAYBE in the bloom.  Use as the
-    (much smaller) left side of the exact semi/anti join."""
-    marked = with_bloom_hit(batch, bloom, key_expr, salt)
-    return marked.where(F.col("_bloom_hit")).drop("_bloom_hit")
 
 
 def bloom_anti_join(

@@ -5,10 +5,11 @@ Design notes
 * **Portable hashing.** Signatures are built from ``md5`` of shingle
   strings, not ``xxhash64``/``F.hash``: md5 is bit-identical across Spark
   and DuckDB, which makes every dedup operator here *oracle-checkable* —
-  the DuckDB oracle reproduces the exact same signatures. md5 is computed
-  JVM-side per distinct shingle, so it is not a bottleneck; at true 100 TB
-  scale swap ``portable_hash`` for ``F.xxhash64`` (one-line change) and
-  drop to rows-only verification.
+  the DuckDB oracle reproduces the exact same signatures, and SimHash
+  reads its md5 hex digits through ``operators/sampling.py``'s
+  renderer.  md5 is computed JVM-side per distinct shingle, so it is not
+  a bottleneck; a deployment that drops the oracle could hash with
+  ``F.xxhash64`` instead and verify by row counts only.
 * **Shuffle shape (the 100 TB story).** All hash slots per shingle/token
   are computed as ONE array column before the shuffle, and the per-doc
   signature is a single ``groupBy(doc)`` with element-wise MIN/SUM
@@ -39,14 +40,8 @@ from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.caches import Caches, iterate
 from odni_apache_beam_consumer_spark.catalog import spread
+from odni_apache_beam_consumer_spark.operators.sampling import hex_rank
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens, word_shingles
-
-_HEX = "0123456789abcdef"
-
-
-def portable_hash(col, salt_col) -> F.Column:
-    """Deterministic cross-engine hash: md5(shingle || '#' || salt)."""
-    return F.md5(F.concat(col, F.lit("#"), salt_col.cast("string")))
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -222,7 +217,7 @@ def simhash_signatures(
         F.col(id_col),
         *[
             F.expr(
-                f"element_at(array({lut}), instr('{_HEX}', substr(th, {i + 1}, 1)))"
+                f"element_at(array({lut}), {hex_rank('th', i + 1)})"
             ).alias(f"p{i}")
             for i in range(16)
         ],

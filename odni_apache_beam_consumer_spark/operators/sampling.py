@@ -15,19 +15,53 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-_HEX = "0123456789abcdef"
+_FIND = {"spark": "instr", "duckdb": "strpos"}
+_TEXT = {"spark": "STRING", "duckdb": "VARCHAR"}
+
+
+def md5_key(salt: str, *cols: str, dialect: str = "spark") -> str:
+    """SQL text of ``md5(salt || col1 || ':' || col2 ...)``, each column
+    cast to text, in the ``spark`` or ``duckdb`` dialect."""
+    text = ", ':', ".join(f"CAST({c} AS {_TEXT[dialect]})" for c in cols)
+    if salt:
+        text = f"'{salt}', {text}"
+    return f"md5(concat({text}))" if salt or len(cols) > 1 else f"md5({text})"
+
+
+def hex_rank(m: str, pos: int | str, dialect: str = "spark") -> str:
+    """1-based rank in the hex alphabet of the md5 text ``m``'s digit at
+    1-based ``pos``: the digit's value plus one, so it can index a
+    16-element array directly."""
+    return f"{_FIND[dialect]}('0123456789abcdef', substr({m}, {pos}, 1))"
+
+
+def hex_digits(
+    m: str, start: int | str = 1, width: int = 2, dialect: str = "spark"
+) -> str:
+    """SQL text of the integer value of ``width`` hex digits of the md5
+    text ``m``, from 1-based ``start`` (an int or an SQL expression).
+
+    The one owner of the package's portable hash arithmetic: md5 is
+    bit-identical across engines, and reading its digits through
+    ``instr`` (Spark) / ``strpos`` (DuckDB) avoids every engine-specific
+    base conversion, so each oracle reproduces the exact value.  Width 1
+    renders one parenthesized digit; a wider value is a bare sum of
+    digit * 16^k terms, to be parenthesized before ``*``, ``%`` or
+    ``DIV``."""
+    terms = []
+    for i in range(width):
+        if isinstance(start, int):
+            pos = start + i
+        else:
+            pos = f"{start} + {i}" if i else start
+        d = f"({hex_rank(m, pos, dialect)} - 1)"
+        terms.append(f"{d} * {16 ** (width - 1 - i)}" if i < width - 1 else d)
+    return " + ".join(terms)
 
 
 def hash_bucket(id_col: str, salt: str = "split") -> Column:
-    """Deterministic bucket in [0, 256) from two md5 hex digits.
-
-    Digit arithmetic via instr() — the same cross-engine trick as the
-    SimHash bit extraction, so DuckDB mirrors it with strpos()."""
-    m = f"md5(concat('{salt}:', CAST({id_col} AS STRING)))"
-    return F.expr(
-        f"CAST((instr('{_HEX}', substr({m}, 1, 1)) - 1) * 16 + "
-        f"(instr('{_HEX}', substr({m}, 2, 1)) - 1) AS INT)"
-    )
+    """Deterministic bucket in [0, 256) from two md5 hex digits."""
+    return F.expr(f"CAST({hex_digits(md5_key(f'{salt}:', id_col))} AS INT)")
 
 
 def with_split(
@@ -50,11 +84,7 @@ def with_split(
 
 def duck_bucket_sql(id_col: str = "doc_id", salt: str = "split") -> str:
     """The DuckDB expression computing the identical bucket (for oracles)."""
-    m = f"md5(concat('{salt}:', CAST({id_col} AS VARCHAR)))"
-    return (
-        f"((strpos('{_HEX}', substr({m}, 1, 1)) - 1) * 16 + "
-        f"(strpos('{_HEX}', substr({m}, 2, 1)) - 1))"
-    )
+    return f"({hex_digits(md5_key(f'{salt}:', id_col, dialect='duckdb'), dialect='duckdb')})"
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from odni_apache_beam_consumer_spark.catalog import load_table
+from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
 from odni_apache_beam_consumer_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -490,20 +491,11 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMS_IDX_SPARK = (
-    "CAST(((instr('0123456789abcdef', substr({m}, 1, 1)) - 1) * 16 + "
-    "(instr('0123456789abcdef', substr({m}, 2, 1)) - 1)) % 64 AS INT)"
-)
-_CMS_IDX_DUCK = (
-    "(((strpos('0123456789abcdef', substr({m}, 1, 1)) - 1) * 16 + "
-    "(strpos('0123456789abcdef', substr({m}, 2, 1)) - 1)) % 64)"
-)
-_CMS_M_SPARK = (
-    "md5(concat('cms', CAST(j AS STRING), ':', CAST(user_id AS STRING)))"
-)
-_CMS_M_DUCK = (
-    "md5(concat('cms', CAST(j AS VARCHAR), ':', CAST(user_id AS VARCHAR)))"
-)
+def _sketch_cell(prefix: str, dialect: str = "spark") -> str:
+    """Count-sketch cell in [0, 64) of hash row ``j`` for ``user_id``:
+    two md5 hex digits of ``<prefix><j>:<user_id>``, mod 64."""
+    m = md5_key(prefix, "j", "user_id", dialect=dialect)
+    return f"(({hex_digits(m, dialect=dialect)}) % 64)"
 
 
 @query(
@@ -511,7 +503,7 @@ _CMS_M_DUCK = (
     oracle=f"""
 WITH e AS (SELECT user_id FROM events WHERE user_id IS NOT NULL),
 cells AS (
-  SELECT j, {_CMS_IDX_DUCK.format(m=_CMS_M_DUCK)} AS idx,
+  SELECT j, {_sketch_cell("cms", "duckdb")} AS idx,
          CAST(COUNT(*) AS BIGINT) AS cnt
   FROM e, UNNEST(range(0, 3)) AS ju(j)
   GROUP BY 1, 2
@@ -526,7 +518,7 @@ top AS (
 ),
 probes AS (
   SELECT t.user_id, t.exact_cnt, j,
-         {_CMS_IDX_DUCK.format(m=_CMS_M_DUCK)} AS idx
+         {_sketch_cell("cms", "duckdb")} AS idx
   FROM top t, UNNEST(range(0, 3)) AS ju(j)
 )
 SELECT p.user_id, p.exact_cnt,
@@ -540,9 +532,9 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) as a pure
     DataFrame aggregate, audited against exact counts: d=3 md5-derived
     hash rows x w=64 counters — 192 cells total — estimate a key's
-    frequency as the MIN over its d counters.  Deterministic (md5 index
-    arithmetic identical in both engines, same two-hex-digit idiom as
-    operators/sampling.py) and MERGEABLE: cells are plain sums, so
+    frequency as the MIN over its d counters.  Deterministic (two md5
+    hex digits rendered for both engines by operators/sampling.py's
+    ``hex_digits``) and MERGEABLE: cells are plain sums, so
     per-partition/per-day sketches union by adding counters — the
     constant-memory frequency store for keys too numerous to count
     exactly, sibling of the HLL distinct store above and the quantile
@@ -568,7 +560,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("j")
     )
     cells = tripled.groupBy(
-        "j", F.expr(_CMS_IDX_SPARK.format(m=_CMS_M_SPARK)).alias("idx")
+        "j", F.expr(_sketch_cell("cms")).alias("idx")
     ).agg(F.count(F.lit(1)).alias("cnt"))
     exact = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_cnt"))
     top = exact.orderBy(F.col("exact_cnt").desc(), "user_id").limit(10)
@@ -576,7 +568,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "exact_cnt",
         F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("j"),
-    ).withColumn("idx", F.expr(_CMS_IDX_SPARK.format(m=_CMS_M_SPARK)))
+    ).withColumn("idx", F.expr(_sketch_cell("cms")))
     return (
         F.broadcast(probes)
         .join(cells, ["j", "idx"])
@@ -805,24 +797,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Independent hash seed for the join-cardinality sketch (prefix 'jce'
-# vs the frequency sketch's 'cms'), same two-hex-digit md5 idiom.
-_JCE_IDX_SPARK = (
-    "CAST(((instr('0123456789abcdef', substr({m}, 1, 1)) - 1) * 16 + "
-    "(instr('0123456789abcdef', substr({m}, 2, 1)) - 1)) % 64 AS INT)"
-)
-_JCE_IDX_DUCK = (
-    "(((strpos('0123456789abcdef', substr({m}, 1, 1)) - 1) * 16 + "
-    "(strpos('0123456789abcdef', substr({m}, 2, 1)) - 1)) % 64)"
-)
-_JCE_M_SPARK = (
-    "md5(concat('jce', CAST(j AS STRING), ':', CAST(user_id AS STRING)))"
-)
-_JCE_M_DUCK = (
-    "md5(concat('jce', CAST(j AS VARCHAR), ':', CAST(user_id AS VARCHAR)))"
-)
-
-
 @query(
     "join_cardinality_estimate",
     oracle=f"""
@@ -841,12 +815,12 @@ exact AS (
     USING (user_id)
 ),
 cells_a AS (
-  SELECT j, {_JCE_IDX_DUCK.format(m=_JCE_M_DUCK)} AS idx,
+  SELECT j, {_sketch_cell("jce", "duckdb")} AS idx,
          CAST(COUNT(*) AS BIGINT) AS ca
   FROM a, UNNEST(range(0, 3)) AS ju(j) GROUP BY 1, 2
 ),
 cells_b AS (
-  SELECT j, {_JCE_IDX_DUCK.format(m=_JCE_M_DUCK)} AS idx,
+  SELECT j, {_sketch_cell("jce", "duckdb")} AS idx,
          CAST(COUNT(*) AS BIGINT) AS cb
   FROM b, UNNEST(range(0, 3)) AS ju(j) GROUP BY 1, 2
 ),
@@ -869,7 +843,8 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     size of views JOIN purchases ON user_id is SUM_u a(u)*b(u) — the
     quantity an optimizer (or a capacity planner deciding whether a join
     is even runnable) needs BEFORE shuffling anything.  Each side builds
-    a 3x64 count sketch in one scan; the estimate is the MIN over rows
+    a 3x64 count sketch in one scan (hash seed 'jce', independent of
+    countmin_heavy_hitters' 'cms'); the estimate is the MIN over rows
     of the per-row sketch dot product, one-sided (>= truth) because
     collisions only add mass.  Audited against the exact product-sum,
     with the overestimate in ppm.
@@ -896,7 +871,7 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (
             tripled.select(
-                "j", F.expr(_JCE_IDX_SPARK.format(m=_JCE_M_SPARK)).alias("idx")
+                "j", F.expr(_sketch_cell("jce")).alias("idx")
             )
             .groupBy("j", "idx")
             .agg(F.count(F.lit(1)).cast("long").alias(out))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.catalog import load_table
+from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
 from odni_apache_beam_consumer_spark.plans.registry import query
 
 # RRF's rank-damping constant (Cormack et al.'s k=60) and the per-ranker
@@ -498,23 +499,18 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fold assignment: two md5 hex digits -> 0..255, mod 5 — the same
-# deterministic-bucket idiom as operators/sampling.py's kfold.
-_FOLD_SPARK = (
-    "CAST(((instr('0123456789abcdef', substr(md5(CAST(vec_id AS STRING)), 1, 1)) - 1) * 16 + "
-    "(instr('0123456789abcdef', substr(md5(CAST(vec_id AS STRING)), 2, 1)) - 1)) % 5 AS BIGINT)"
-)
-_FOLD_DUCK = (
-    "(((strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)) - 1) * 16 + "
-    "(strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 2, 1)) - 1)) % 5)"
-)
+def _fold(dialect: str = "spark") -> str:
+    """Fold assignment: two md5 hex digits of vec_id -> 0..255, mod 5 —
+    the same deterministic-bucket idiom as operators/sampling.py's kfold."""
+    m = md5_key("", "vec_id", dialect=dialect)
+    return f"CAST(({hex_digits(m, dialect=dialect)}) % 5 AS BIGINT)"
 
 
 @query(
     "auc_by_fold",
     oracle=f"""
 WITH scored AS (
-  SELECT CAST({_FOLD_DUCK} AS BIGINT) AS fold,
+  SELECT {_fold("duckdb")} AS fold,
          CAST(label % 2 AS BIGINT) AS y,
          CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 1000.0) AS BIGINT)
            AS s_milli
@@ -565,7 +561,7 @@ def auc_by_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined, bounded by k x bins; the ordered window runs per fold over
     bin counts only; the final rollup is k rows."""
     scored = load_table(spark, sf_dir, "embeddings").select(
-        F.expr(_FOLD_SPARK).alias("fold"),
+        F.expr(_fold()).alias("fold"),
         (F.col("label") % 2).cast("long").alias("y"),
         F.floor(
             F.expr("cast(element_at(embedding, 1) as double)") * 1000.0
@@ -1301,13 +1297,12 @@ _PERM_STATS_SQL = """
 WITH u AS ({_AB_USER_SQL}),
 h AS (
   SELECT user_id, user_id % 2 AS arm, qy,
-         md5(concat('perm:', CAST(user_id AS VARCHAR))) AS hx
+         {md5_key("perm:", "user_id", dialect="duckdb")} AS hx
   FROM u
 ),
 perm AS (
   SELECT qy, CAST(g.b AS BIGINT) AS b,
-         (strpos('0123456789abcdef', substr(hx, CAST(g.b AS INT), 1)) - 1)
-           % 2 AS pa
+         {hex_digits("hx", "CAST(g.b AS INT)", 1, "duckdb")} % 2 AS pa
   FROM h, UNNEST(range(1, {_PERM_B + 1})) g(b)
 ),
 ps AS (
@@ -1346,8 +1341,8 @@ def permutation_test_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     The permutation source is ONE md5 per user — digit i of
     md5('perm:' || user_id) supplies permutation i's assignment — so
     the {_PERM_B}x fan-out carries no per-row hashing beyond the
-    single digest (the hash_bucket portability idiom: instr/strpos
-    digit arithmetic, exact integers everywhere; the only doubles are
+    single digest (digits rendered by operators/sampling.py's
+    ``hex_digits``, exact integers everywhere; the only doubles are
     the shared mean-difference strings, milli-floored before any
     comparison).
 
@@ -1369,9 +1364,7 @@ def permutation_test_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.expr("user_id % 2").alias("arm"),
             "qy",
-            F.expr("md5(concat('perm:', CAST(user_id AS STRING)))").alias(
-                "hx"
-            ),
+            F.expr(md5_key("perm:", "user_id")).alias("hx"),
         )
     )
     perm = u.select(
@@ -1381,10 +1374,7 @@ def permutation_test_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qy",
         F.col("b").cast("long").alias("b"),
-        F.expr(
-            "(instr('0123456789abcdef', substr(hx, CAST(b AS INT), 1)) - 1)"
-            " % 2"
-        ).alias("pa"),
+        F.expr(f"{hex_digits('hx', 'CAST(b AS INT)', 1)} % 2").alias("pa"),
     )
     def _stats(df, flag):
         return df.agg(

@@ -149,8 +149,7 @@ WITH {_CORPUS_CTE},
 toks AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM corpus),
 votes AS (
   SELECT doc_id, b,
-         SUM(CASE WHEN CAST(floor((strpos('0123456789abcdef',
-                    substr(md5(tok), 1 + b // 4, 1)) - 1) /
+         SUM(CASE WHEN CAST(floor({SMP.hex_digits("md5(tok)", "1 + b // 4", 1, "duckdb")} /
                     (CASE b % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END))
                   AS INT) % 2 = 1 THEN 1 ELSE -1 END) AS v
   FROM toks, UNNEST(range(0, 64)) AS bu(b)

@@ -33,6 +33,7 @@ from odni_apache_beam_consumer_spark.catalog import load_table, spread
 from odni_apache_beam_consumer_spark.operators.kmeans_kernel import (
     assign_stats_kernel,
 )
+from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
 from odni_apache_beam_consumer_spark.operators.similarity import dot, with_vec
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens
 from odni_apache_beam_consumer_spark.plans.registry import query
@@ -3064,10 +3065,7 @@ _BAG_B = 8
 # row (~50% subsample per replica, the "subagging" form of bagging);
 # the permutation_test_mean_diff single-digest trick, so the B-replica
 # fan-out costs one hash per row.
-_BAG_HX = (
-    "md5(concat('bag:', CAST(l_orderkey AS STRING), ':',"
-    " CAST(l_linenumber AS STRING)))"
-)
+_BAG_HX = md5_key("bag:", "l_orderkey", "l_linenumber")
 
 
 @query(
@@ -3075,15 +3073,13 @@ _BAG_HX = (
     oracle=f"""
 WITH r0 AS (
   SELECT {_TREE_B1} AS b1, {_TREE_B2} AS b2, {_TREE_Y} AS yq,
-         md5(concat('bag:', CAST(l_orderkey AS VARCHAR), ':',
-             CAST(l_linenumber AS VARCHAR))) AS hx
+         {md5_key("bag:", "l_orderkey", "l_linenumber", dialect="duckdb")} AS hx
   FROM lineitem
 ),
 rep AS (
   SELECT b1, b2, yq, CAST(g.b AS BIGINT) AS rb
   FROM r0, UNNEST(range(1, {_BAG_B + 1})) g(b)
-  WHERE (strpos('0123456789abcdef', substr(hx, CAST(g.b AS INT), 1)) - 1)
-        % 2 = 1
+  WHERE {hex_digits("hx", "CAST(g.b AS INT)", 1, "duckdb")} % 2 = 1
 ),
 l AS (
   SELECT rb, CAST(1 AS BIGINT) AS f, b1 AS b, yq FROM rep
@@ -3134,7 +3130,7 @@ def bagged_stump_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     forest trainer scans once per replica; this scans once, period.
 
     Portability: membership is exact integer digit arithmetic
-    (instr/strpos); histograms are exact BIGINT sums; the split argmax
+    (operators/sampling.py's ``hex_digits``); histograms are exact BIGINT sums; the split argmax
     is the shared _TREE_GAIN tree with (gain, f, b) tie-break per
     replica."""
     r0 = load_table(spark, sf_dir, "lineitem").selectExpr(
@@ -3151,12 +3147,7 @@ def bagged_stump_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hx",
             F.explode(F.expr(f"sequence(1, {_BAG_B})")).alias("b"),
         )
-        .where(
-            F.expr(
-                "(instr('0123456789abcdef', substr(hx, CAST(b AS INT), 1))"
-                " - 1) % 2 = 1"
-            )
-        )
+        .where(F.expr(f"{hex_digits('hx', 'CAST(b AS INT)', 1)} % 2 = 1"))
         .select(F.col("b").cast("long").alias("rb"), "b1", "b2", "yq")
     )
     long_df = rep.selectExpr(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odni_apache_beam_consumer_spark.catalog import load_table
+from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
 from odni_apache_beam_consumer_spark.operators.text_ops import with_tokens
 from odni_apache_beam_consumer_spark.plans.registry import query
 
@@ -973,13 +974,12 @@ _BOOT_MEAN = "(CAST(swy AS DOUBLE) / 10000.0 / CAST(sw AS DOUBLE))"
 WITH u AS (
   SELECT user_id,
          CAST(SUM(CAST(FLOOR(value * 10000.0) AS BIGINT)) AS BIGINT) AS qy,
-         md5(concat('boot:', CAST(user_id AS VARCHAR))) AS hx
+         {md5_key("boot:", "user_id", dialect="duckdb")} AS hx
   FROM events GROUP BY user_id
 ),
 rep AS (
   SELECT qy, CAST(g.b AS BIGINT) AS b,
-         strpos('0123456789abcdef', substr(hx, CAST(g.b AS INT), 1)) - 1
-           AS hd
+         {hex_digits("hx", "CAST(g.b AS INT)", 1, "duckdb")} AS hd
   FROM u, UNNEST(range(1, {_BOOT_B + 1})) g(b)
 ),
 w AS (SELECT b, qy, CAST({_BOOT_W} AS BIGINT) AS wt FROM rep),
@@ -1037,16 +1037,14 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qy")
     ).select(
         "qy",
-        F.expr("md5(concat('boot:', CAST(user_id AS STRING)))").alias("hx"),
+        F.expr(md5_key("boot:", "user_id")).alias("hx"),
     )
     rep = u.select(
         "qy", F.explode(F.expr(f"sequence(1, {_BOOT_B})")).alias("b"), "hx"
     ).select(
         "qy",
         F.col("b").cast("long").alias("b"),
-        F.expr(
-            "instr('0123456789abcdef', substr(hx, CAST(b AS INT), 1)) - 1"
-        ).alias("hd"),
+        F.expr(hex_digits("hx", "CAST(b AS INT)", 1)).alias("hd"),
     )
     w = rep.select("b", "qy", F.expr(f"CAST({_BOOT_W} AS BIGINT)").alias("wt"))
     rs = w.groupBy("b").agg(

@@ -738,17 +738,13 @@ def packing_efficiency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH t AS (
   SELECT doc_id, lang, len(string_split(trim(text), ' ')) AS n_tokens,
-         md5(concat('wsamp:', CAST(doc_id AS VARCHAR))) AS h
+         {SMP.md5_key("wsamp:", "doc_id", dialect="duckdb")} AS h
   FROM documents
 ),
 keyed AS (
   SELECT doc_id, lang, n_tokens,
-         CAST(n_tokens AS BIGINT) * (
-           (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-           (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-           (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-           (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)
-         ) AS priority
+         CAST(n_tokens AS BIGINT) * ({SMP.hex_digits("h", 1, 4, "duckdb")})
+           AS priority
   FROM t
 ),
 ranked AS (
@@ -774,20 +770,13 @@ def weighted_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcendental ``ln(u)/w`` key whose libm rounding differs across
     engines.
 
-    Scale shape: map-side priority derivation (same instr-digit md5
-    trick as operators/sampling.py), one per-lang window with
+    Scale shape: map-side priority derivation (md5 digits rendered by
+    operators/sampling.py's ``hex_digits``), one per-lang window with
     WindowGroupLimit pushing the top-5 cut below the sort — no global
     sort, no full-partition materialization."""
-    hexd = "0123456789abcdef"
     d = with_tokens(load_table(spark, sf_dir, "documents"))
-    m = "md5(concat('wsamp:', CAST(doc_id AS STRING)))"
-    pri = F.expr(
-        f"CAST(size(tk) AS BIGINT) * ("
-        f"(instr('{hexd}', substr({m}, 1, 1)) - 1) * 4096 + "
-        f"(instr('{hexd}', substr({m}, 2, 1)) - 1) * 256 + "
-        f"(instr('{hexd}', substr({m}, 3, 1)) - 1) * 16 + "
-        f"(instr('{hexd}', substr({m}, 4, 1)) - 1))"
-    )
+    m = SMP.md5_key("wsamp:", "doc_id")
+    pri = F.expr(f"CAST(size(tk) AS BIGINT) * ({SMP.hex_digits(m, 1, 4)})")
     keyed = d.select(
         "lang",
         "doc_id",
@@ -1019,7 +1008,6 @@ def mixture_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FH_DIM = 256  # exactly two md5 hex digits — no modulo bias
-_FH_HEX = "0123456789abcdef"
 
 
 @query(
@@ -1033,9 +1021,8 @@ WITH toks AS (
   )
 )
 SELECT doc_id,
-       CAST((strpos('{_FH_HEX}', substr(m, 1, 1)) - 1) * 16
-            + (strpos('{_FH_HEX}', substr(m, 2, 1)) - 1) AS INT) AS bucket,
-       CAST(SUM(CASE WHEN strpos('02468ace', substr(m, 3, 1)) > 0
+       CAST({SMP.hex_digits("m", dialect="duckdb")} AS INT) AS bucket,
+       CAST(SUM(CASE WHEN {SMP.hex_digits("m", 3, 1, "duckdb")} % 2 = 0
                      THEN 1 ELSE -1 END) AS BIGINT) AS feat,
        CAST(COUNT(*) AS BIGINT) AS n_terms
 FROM toks
@@ -1046,10 +1033,10 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick featurization (Weinberger et al. ICML'09) — the
     fixed-dimension, vocabulary-free text features every large-scale
     linear/logistic trainer consumes: each token hashes to one of
-    256 buckets (two md5 hex digits — the countmin idiom, and with
-    16x16 = 256 there is NO modulo bias) and contributes a +/-1
-    sign from an independent hash digit (the unbiased-inner-product
-    variant), summed per (doc, bucket).  Long-format output over a
+    256 buckets (two md5 hex digits rendered by operators/sampling.py's
+    ``hex_digits``, and with 16x16 = 256 there is NO modulo bias) and
+    contributes a +/-1 sign from the parity of an independent third
+    digit (the unbiased-inner-product variant), summed per (doc, bucket).  Long-format output over a
     deterministic doc sample; the collision behavior IS the semantics,
     so the oracle replays the identical hash construction.
 
@@ -1067,13 +1054,8 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode("tk").alias("term"))
         .withColumn("m", F.md5(F.concat(F.lit("fh:"), F.col("term"))))
     )
-    bucket = (
-        (F.instr(F.lit(_FH_HEX), F.substring("m", 1, 1)) - 1) * 16
-        + (F.instr(F.lit(_FH_HEX), F.substring("m", 2, 1)) - 1)
-    ).cast("int")
-    sign = F.when(
-        F.instr(F.lit("02468ace"), F.substring("m", 3, 1)) > 0, 1
-    ).otherwise(-1)
+    bucket = F.expr(f"CAST({SMP.hex_digits('m')} AS INT)")
+    sign = F.when(F.expr(f"{SMP.hex_digits('m', 3, 1)} % 2 = 0"), 1).otherwise(-1)
     return (
         toks.select("doc_id", bucket.alias("bucket"), sign.alias("sign"))
         .groupBy("doc_id", "bucket")

@@ -190,7 +190,7 @@ def test_cdc_readstream_end_to_end(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
     got = {(r.k, r.v) for r in C.read_current(spark, store).collect()}
     assert got == {(0, "v0"), (1, "v1"), (2, "v2b"), (3, "v3"), (5, "v5")}
 

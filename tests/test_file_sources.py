@@ -60,7 +60,7 @@ def test_json_stream_source(spark, sf_dir, tmp_path):
     stream = FS.read_json_lines(spark, path, NATION_SCHEMA, streaming=True)
     counts = stream.groupBy("n_regionkey").agg(F.count(F.lit(1)).alias("n"))
     q = sinks.to_memory(counts, "json_stream_counts", output_mode="complete")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), q.exception()
     got = {(r[0], r[1]) for r in spark.table("json_stream_counts").collect()}
     exp = {
         (r[0], r[1])

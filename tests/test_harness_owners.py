@@ -5,7 +5,9 @@
 * the memory-sink drain of the plans — streaming/sinks.drain;
 * the versioned-snapshot commit (the commit log and its ``_LATEST`` hint)
   — txtable.py;
-* the checkpoint of an iterative loop's round — caches.iterate.
+* the checkpoint of an iterative loop's round — caches.iterate;
+* the md5 hex-digit arithmetic of every portable hash (the hex alphabet
+  literal) — operators/sampling.py.
 """
 
 from __future__ import annotations
@@ -17,6 +19,9 @@ PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "odni_apache_beam_consumer_spark",
 )
+
+
+_HEX_ALPHABET = "0123456789abcdef"
 
 
 def _is_call(node: ast.AST, obj: str, attr: str) -> bool:
@@ -63,6 +68,13 @@ def _offenders(pkg: str) -> list[str]:
                     found.append(f"{where}: SK.to_memory(")
                 elif _is_call(node, "os", "replace") and rel.startswith("streaming/"):
                     found.append(f"{where}: pointer os.replace")
+                elif (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and _HEX_ALPHABET in node.value
+                    and rel != "operators/sampling.py"
+                ):
+                    found.append(f"{where}: hex alphabet literal")
                 elif rel != "txtable.py":
                     if _is_call(node, "os", "link"):
                         found.append(f"{where}: commit os.link")
@@ -78,8 +90,9 @@ def test_replay_harness_decisions_have_one_owner():
     shuffle-partition ``conf.set`` outside session.py, no hand-written
     memory-sink drain under plans/ (a ``writeStream.format("memory")``
     or an ``SK.to_memory(`` whose timeout goes unchecked), no pointer
-    file or commit link outside txtable.py, and no pointer flip under
-    streaming/."""
+    file or commit link outside txtable.py, no pointer flip under
+    streaming/, and no hex alphabet outside operators/sampling.py (md5
+    digits are read through its ``hex_digits`` / ``hex_rank``)."""
     offenders = _offenders(PKG)
     assert not offenders, offenders
 

@@ -98,7 +98,7 @@ def test_streaming_bounded_drain(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), q.exception()
     got = {
         r.n
         for r in spark.table(qname).where(f"marker = '{marker}'").collect()

@@ -101,14 +101,14 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
 
     # First run: drains only the staged prefix, then "fails" (exits).
     q1 = start()
-    q1.awaitTermination(300)
+    assert q1.awaitTermination(300), q1.exception()
     n_partial = spark.read.parquet(out).count()
     # Second run: the rest of the chunks have arrived; resume from the
     # checkpoint and drain them.
     for f in chunk_files[2:]:
         shutil.copy2(os.path.join(staged, f), os.path.join(replay_dir, f))
     q2 = start()
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300), q2.exception()
     got = spark.read.parquet(out)
     want = load_table(spark, sf_dir, "events")
     assert n_partial < want.count()  # the kill was genuinely mid-stream

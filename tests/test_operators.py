@@ -273,6 +273,43 @@ def test_split_stability_under_growth(spark):
     assert 700 < c["train"] < 880 and 50 < c["val"] < 160 and 50 < c["test"] < 160
 
 
+def test_hex_digits_match_md5_in_spark_and_duckdb(spark):
+    """The one hex-digit renderer reads the same integers from an md5 in
+    both dialects as Python does, for several widths and for a start
+    position taken from a column."""
+    import hashlib
+
+    import duckdb
+    import pandas as pd
+
+    from odni_apache_beam_consumer_spark.operators.sampling import hex_digits, md5_key
+
+    keys = pd.DataFrame(
+        {"k": [f"key-{i}" for i in range(64)], "p": [1 + i % 29 for i in range(64)]}
+    )
+    cases = [("k", "", 3, w) for w in (1, 2, 4)] + [("k", "", "p", w) for w in (1, 2, 4)]
+    cases.append((("k", "p"), "t:", "p", 4))
+
+    def exprs(dialect):
+        out = ["k"]
+        for cols, salt, start, width in cases:
+            cols = cols if isinstance(cols, tuple) else (cols,)
+            out.append(hex_digits(md5_key(salt, *cols, dialect=dialect), start, width, dialect))
+        return out
+
+    got_spark = spark.createDataFrame(keys).selectExpr(*exprs("spark")).collect()
+    got_duck = duckdb.sql(f"SELECT {', '.join(exprs('duckdb'))} FROM keys").fetchall()
+    by_key = {r[0]: tuple(r[1:]) for r in got_spark}
+    assert {r[0]: tuple(r[1:]) for r in got_duck} == by_key
+    for k, p in zip(keys.k, keys.p):
+        want = []
+        for cols, salt, start, width in cases:
+            text = salt + (f"{k}:{p}" if isinstance(cols, tuple) else k)
+            i = (p if start == "p" else start) - 1
+            want.append(int(hashlib.md5(text.encode()).hexdigest()[i : i + width], 16))
+        assert by_key[k] == tuple(want), k
+
+
 def test_multimodal_decode_features_plumbing(spark):
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, "spark")], "doc_id BIGINT, text STRING"

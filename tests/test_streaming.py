@@ -306,12 +306,12 @@ def test_console_and_foreach_batch_sinks(spark, replay_dir):
 
     stream = R.read_stream(spark, replay_dir).where(F.col("event_id") >= 0)
     q = sinks.foreach_batch(stream, collect, available_now=True)
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
     assert sum(n for _, n in seen) == 1000  # sf0.001 events table
     assert len(seen) >= 6  # one batch per chunk (maxFilesPerTrigger=1)
 
     q2 = sinks.to_console(stream.limit(1), available_now=True)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120), q2.exception()
     assert q2.exception() is None
 
 
@@ -352,7 +352,7 @@ def test_foreach_batch_incremental_upsert(spark, sf_dir, replay_dir, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
 
     expected = keep_latest(
         load_table(spark, sf_dir, "events").select(
@@ -485,7 +485,7 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
         checkpoint_location=ckpt,
         available_now=True,
     )
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300), q2.exception()
 
     got = spark.read.parquet(out)
     n_want = load_table(spark, sf_dir, "events").count()
@@ -513,7 +513,7 @@ def test_fan_out_sink_two_destinations_consistent(spark, sf_dir, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
     n_want = load_table(spark, sf_dir, "events").count()
     for out in (out_a, out_b):
         got = spark.read.parquet(out)
@@ -572,7 +572,7 @@ def test_materialized_view_equals_batch_aggregate(spark, sf_dir, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
 
     got = M.read_view(spark, store)
     want = (
@@ -617,7 +617,7 @@ def test_materialized_view_time_travel_and_diff(spark, sf_dir, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
 
     table = TransactionalTable(spark, store)
     versions = table.versions()
@@ -663,7 +663,7 @@ def test_algebraic_merger_min_max_measures(spark, sf_dir, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
         available_now=True,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
 
     got = {
         r["event_type"]: (
@@ -765,7 +765,7 @@ def test_streaming_index_maintenance_pipeline(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300), q.exception()
 
     idx = spark.read.parquet(path)
     assert idx.count() == emb.count()

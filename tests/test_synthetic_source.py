@@ -83,7 +83,7 @@ def test_stream_reader_bounded_drain_exact_rows(registered, tmp_path):
             break
         time.sleep(0.5)
     q.stop()
-    q.awaitTermination(60)
+    assert q.awaitTermination(60), q.exception()
     got = sorted(tuple(r) for r in registered.table("synth_stream").collect())
     assert got == sorted(S._row(i) for i in range(200))
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
